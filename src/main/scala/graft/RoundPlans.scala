@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Representative PER-ROUND plans for the driver-coordinated iterative
   * queries. Their gate frames are driver-collected traces or checkpointed
-  * results (LocalTableScan / LogicalRDD), so [[PlanAudit]] over the final
+  * results (LocalTableScan / LogicalRDD), so a plan audit of the final
   * frame alone reports `shuffles=0` and hides the real per-round work.
   * Each entry here is ONE unexecuted round built from the same round-body
-  * functions the query loops actually run, so the audited plan is the
-  * executed one.
+  * functions the query loops actually run, so the plan [[Inspect]]
+  * audits is the executed one.
   *
   * Keys match `SparkEntry.queries` names; each maps to one or more
   * labeled round frames (BPE has two distinct per-round shapes: the

@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Listeners
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -41,16 +41,9 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-skew-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder("graft-skew-bench")
       .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -65,27 +58,15 @@ object SkewBench {
     // expectTasks: the reduce-stage task count this scenario should show
     // (the configured shuffle-partition count for static plans; pass -1
     // to skip the check where AQE legitimately coalesces partitions)
-    def run(label: String, expectTasks: Int = cpus.toInt)(body: => Unit): String = {
+    def run(label: String, expectTasks: Int = GraftSession.cpus)(body: => Unit): String = {
       taskMs.synchronized(taskMs.clear())
       val t0 = System.nanoTime()
       body
       val wall = (System.nanoTime() - t0) / 1e9
       // TaskEnd events arrive on the async listener bus AFTER the action
       // returns — and the last event to land is the straggler this bench
-      // exists to measure. Wait for the snapshot to stabilize (two
-      // consecutive equal task counts) before reading it.
-      def taskCount(): Int = taskMs.synchronized(taskMs.valuesIterator.map(_.length).sum)
-      var prev = -1
-      var cur = taskCount()
-      var waited = 0
-      while ((cur != prev || cur == 0) && waited < 5000) {
-        Thread.sleep(100); waited += 100
-        prev = cur; cur = taskCount()
-      }
-      // still-moving (or empty) snapshot at the cap → the ratios below
-      // may be computed from an incomplete event stream; say so in the
-      // JSON instead of silently reporting a distorted number
-      val drainCapped = cur != prev || cur == 0
+      // exists to measure.
+      Listeners.waitUntilEmpty(spark.sparkContext)
       val stages = taskMs.synchronized(taskMs.map { case (k, v) => k -> v.toSeq }.toMap)
       def ratioOf(ds: Seq[Long]): Double = {
         val s = ds.sorted
@@ -107,11 +88,9 @@ object SkewBench {
       // reduce_tasks should equal the configured shuffle partition count
       // (the reduce stage is post-exchange); a mismatch means the maxBy
       // picked some other stage — flag it rather than trusting the ratio
-      val anomalies = Seq(
-        if (drainCapped) Some(""""listener_drain_capped":true""") else None,
+      val anomalyJson =
         if (expectTasks >= 0 && reduce.length != expectTasks)
-          Some(s""""reduce_tasks_expected":$expectTasks""") else None).flatten
-      val anomalyJson = if (anomalies.isEmpty) "" else anomalies.mkString(",", ",", "")
+          s""","reduce_tasks_expected":$expectTasks""" else ""
       s""""$label":{"wall_s":${num(wall, 3)},"reduce_straggler_ratio":${num(ratioOf(reduce), 1)},""" +
         s""""worst_stage_ratio":${num(worst, 1)},"reduce_tasks":${reduce.length}$anomalyJson,"stages":$detail}"""
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,25 +16,15 @@ object Verify {
     // flips the token to exact and drops the siblings. Scripted callers
     // should use '*'. The oracle dump is filtered too, so
     // scripts/check.py agrees.
-    val tokens = (if (args.length > 2) args(2) else "").split(',').toSeq
-    val allNames = SparkEntry.queries.keySet
-    def matchIdx(name: String): Int = matchIndex(tokens, allNames, name)
-    def selected(name: String): Boolean = matchIdx(name) >= 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val names = select(if (args.length > 2) args(2) else "")
     // spill-aware override for at-scale waves: global sorts of corpus-
     // width outputs (600M-row row-grain results) need partitions sized
     // to executor memory, not to the core count — at 32 partitions a
     // sf100 sort partition is ~1.5 GB and the UnsafeExternalSorter
     // spill alone exceeds local scratch; at 256 it sorts in memory
-    val shufflePartitions =
-      sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-verify")
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", GraftSession.cpus.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.validate(spark, sfDir) // fail loud + early on a data-contract drift
@@ -69,19 +58,17 @@ object Verify {
     // one un-timed control first so entry 1's stamp isn't JIT-skewed
     if (controlQ.isDefined)
       try runControl() catch { case _: Throwable => () }
-    // Run in the caller's args(2) order (stable: ties keep map order).
-    // The at-scale board runner passes exact names cheapest-first so a
-    // wall-clock-bounded pass completes the most queries; with no args
-    // every name matches prefix "" at index 0 and map order is preserved.
-    val ordered = SparkEntry.queries.filter(q => selected(q._1)).toSeq
-      .sortBy { case (name, _) => matchIdx(name) }
-    ordered.foreach { case (name, fn) =>
+    // Run in the caller's args(2) order: the at-scale board runner
+    // passes exact names cheapest-first so a wall-clock-bounded pass
+    // completes the most queries.
+    val queries = SparkEntry.queries
+    names.foreach { name =>
       if (controlQ.isDefined)
         try System.err.println(f"[verify] control $name ${runControl()}%.2fs")
         catch { case _: Throwable => () }
       val t0 = System.nanoTime()
       try {
-        val res = fn(spark, sfDir)
+        val res = queries(name)(spark, sfDir)
         (if (singleFile) res.coalesce(1) else res).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
@@ -101,10 +88,22 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(q => selected(q._1))
+    val chosen = names.toSet
+    val json = SparkEntry.oracleSql.filter(q => chosen(q._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Registered query names chosen by a comma-separated filter (doc at
+    * the call site in [[main]]), in filter-token order; ties keep
+    * registry order, so an empty filter selects everything in map order.
+    */
+  private[graft] def select(filter: String): Seq[String] = {
+    val tokens = filter.split(',').toSeq
+    val all = SparkEntry.queries.keySet
+    all.toSeq.map(n => n -> matchIndex(tokens, all, n))
+      .filter(_._2 >= 0).sortBy(_._2).map(_._1)
   }
 
   /** Filter-token resolution for args(2) (doc at the call site in

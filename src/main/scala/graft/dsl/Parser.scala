@@ -53,6 +53,10 @@ object Parser {
     }
 
     val result = exprBindingPower(0)
+    // a stray `)` stops the top-level loop; anything from it on would
+    // otherwise be silently dropped from the search
+    if (idx != tokens.length)
+      throw new QuerySyntaxException(s"Invalid search expression $expression")
     result
   }
 }

@@ -109,10 +109,6 @@ object Ingest {
     solutions.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** U5 (api.py:96-109): first-seen dedup on a natural key. */
-  def dedupFirstSeen(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.dropDuplicates(keyCols)
-
   /** One logic-tree branch solution parsed from its archive members
     * (≙ NSHMSolution, api.py:432-452).
     */
@@ -132,8 +128,17 @@ object Ingest {
   val RupturePropertiesPath = "ruptures/properties.csv"
   val MfdsPath = "ruptures/sub_seismo_on_fault_mfds.csv"
 
+  /** Members every branch archive must carry; the MFD member is optional. */
+  private val RequiredMembers: Seq[String] =
+    Seq(FaultInformationPath, RuptureFaultJoinPath, RuptureRatesPath, RupturePropertiesPath)
+
   private def readZipMembers(path: String, wanted: Set[String]): Map[String, String] = {
-    val zf = new java.util.zip.ZipFile(path)
+    val zf =
+      try new java.util.zip.ZipFile(path)
+      catch {
+        case e: java.util.zip.ZipException =>
+          throw new IllegalArgumentException(s"Branch archive $path is not a zip file", e)
+      }
     try {
       import scala.jdk.CollectionConverters._
       zf.entries().asScala
@@ -159,10 +164,11 @@ object Ingest {
     */
   def loadSolutionZip(spark: SparkSession, path: String): Solution = {
     import spark.implicits._
-    val members = readZipMembers(
-      path,
-      Set(FaultInformationPath, RuptureFaultJoinPath, RuptureRatesPath,
-        RupturePropertiesPath, MfdsPath))
+    val members = readZipMembers(path, RequiredMembers.toSet + MfdsPath)
+    val missing = RequiredMembers.filterNot(members.contains)
+    if (missing.nonEmpty)
+      throw new IllegalArgumentException(
+        s"Branch archive $path is missing ${missing.mkString(", ")}")
     val geo = members(FaultInformationPath)
     val faults = parseFaultSectionsJson(spark, geo)
     val faultSystem =

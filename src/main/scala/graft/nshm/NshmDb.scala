@@ -93,7 +93,7 @@ final class NshmDb(val store: NshmStore) {
       .groupBy(r("rupture_id"))
       .agg(aggCols.head, aggCols.tail: _*)
       .filter(having)
-      .select("rupture_id", "nshm_id", "fault_system", "magnitude", "area", "len", "rate")
+      .select(("rupture_id" +: "nshm_id" +: "fault_system" +: ruptureMeasures).map(col): _*)
       .orderBy(col("rate").desc_nulls_last)
       .limit(limit)
   }
@@ -111,17 +111,44 @@ final class NshmDb(val store: NshmStore) {
     val rows = queryRuptures(queryStr, magnitudeBounds, rateBounds, limit, faultCountLimit).collect()
     val faultsById = getRupturesFaults(rows.map(_.getLong(0)).toSeq)
     rows.map { row =>
-      val internalId = row.getLong(0)
-      row.getLong(1) -> Rupture(
-        faultSystem = row.getInt(2),
-        ruptureNshmId = row.getLong(1),
-        magnitude = if (row.isNullAt(3)) None else Some(row.getDouble(3)),
-        area = if (row.isNullAt(4)) None else Some(row.getDouble(4)),
-        length = if (row.isNullAt(5)) None else Some(row.getDouble(5)),
-        rate = if (row.isNullAt(6)) None else Some(row.getDouble(6)),
-        faults = faultsById.getOrElse(internalId, Map.empty))
+      row.getLong(1) -> ruptureAt(
+        row, 3, row.getInt(2), row.getLong(1), faultsById.getOrElse(row.getLong(0), Map.empty))
     }.toMap
   }
+
+  // ------------------------------------------------------ row decoders
+
+  /** The rupture's nullable measures, in [[Rupture]] field order. */
+  private val ruptureMeasures = Seq("magnitude", "area", "len", "rate")
+
+  private def ruptureAt(
+      row: Row, i: Int, faultSystem: Int, nshmId: Long, faults: Map[String, Fault]): Rupture = {
+    def opt(j: Int) = if (row.isNullAt(i + j)) None else Some(row.getDouble(i + j))
+    Rupture(faultSystem, nshmId, opt(0), opt(1), opt(2), opt(3), faults)
+  }
+
+  /** The ten flattened corner columns of `fault_plane`, in [[Plane.fromFlat]] order. */
+  private def planeCols(fp: DataFrame) = Seq(
+    "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
+    "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
+    "top_depth", "bottom_depth").map(fp(_))
+
+  private def planeAt(row: Row, i: Int): Plane = {
+    def d(j: Int) = row.getDouble(i + j)
+    Plane.fromFlat(d(0), d(1), d(2), d(3), d(4), d(5), d(6), d(7), d(8), d(9))
+  }
+
+  /** [[FaultInfo]] columns of a `fault` frame joined to `parent_fault` as `p`. */
+  private def faultInfoCols(f: DataFrame) =
+    Seq(f("fault_system"), f("nshm_id"), col("p.name"), f("rake"), f("tect_type"))
+
+  private def faultInfoAt(r: Row): FaultInfo =
+    FaultInfo(
+      faultSystem = r.getInt(0),
+      faultNshmId = r.getLong(1),
+      name = r.getString(2),
+      rake = r.getDouble(3),
+      tectType = if (r.isNullAt(4)) None else Some(r.getInt(4)))
 
   // ----------------------------------------------------------- accessors
 
@@ -129,19 +156,12 @@ final class NshmDb(val store: NshmStore) {
   def getRupture(faultSystem: Int, ruptureNshmId: Long): Rupture = {
     val row = rupture
       .filter(col("nshm_id") === ruptureNshmId && col("fault_system") === faultSystem)
-      .select("rupture_id", "magnitude", "area", "len", "rate")
+      .select(("rupture_id" +: ruptureMeasures).map(col): _*)
       .collect()
       .headOption
       .getOrElse(throw new NoSuchElementException(
         s"No rupture with nshm_id = $ruptureNshmId in fault system = $faultSystem"))
-    Rupture(
-      faultSystem = faultSystem,
-      ruptureNshmId = ruptureNshmId,
-      magnitude = if (row.isNullAt(1)) None else Some(row.getDouble(1)),
-      area = if (row.isNullAt(2)) None else Some(row.getDouble(2)),
-      length = if (row.isNullAt(3)) None else Some(row.getDouble(3)),
-      rate = if (row.isNullAt(4)) None else Some(row.getDouble(4)),
-      faults = getRuptureFaults(row.getLong(0)))
+    ruptureAt(row, 1, faultSystem, ruptureNshmId, getRuptureFaults(row.getLong(0)))
   }
 
   /** ≙ get_rupture_faults (nshmdb.py:502-565) — takes the INTERNAL
@@ -164,12 +184,9 @@ final class NshmDb(val store: NshmStore) {
       .join(broadcast(fault).as("f"), fp("fault_id") === col("f.fault_id"))
       .join(broadcast(parentFault).as("pf"), col("f.parent_id") === col("pf.parent_id"))
       .filter(col("rf.rupture_id").isin(ruptureIds: _*))
-      .select(
+      .select(Seq(
         col("rf.rupture_id"), col("f.parent_id"), col("pf.name"),
-        col("f.fault_id"), col("f.fault_system"), fp("plane_id"),
-        fp("top_left_lat"), fp("top_left_lon"), fp("top_right_lat"), fp("top_right_lon"),
-        fp("bottom_right_lat"), fp("bottom_right_lon"), fp("bottom_left_lat"), fp("bottom_left_lon"),
-        fp("top_depth"), fp("bottom_depth"))
+        col("f.fault_id"), col("f.fault_system"), fp("plane_id")) ++ planeCols(fp): _*)
       .orderBy(col("rf.rupture_id"), col("f.parent_id"), fp("plane_id"))
       .collect()
 
@@ -185,12 +202,8 @@ final class NshmDb(val store: NshmStore) {
       val faultName =
         if (faultSystem == FaultSystem.Crustal) parentName
         else s"$parentName: Section $faultId"
-      val plane = Plane.fromFlat(
-        row.getDouble(6), row.getDouble(7), row.getDouble(8), row.getDouble(9),
-        row.getDouble(10), row.getDouble(11), row.getDouble(12), row.getDouble(13),
-        row.getDouble(14), row.getDouble(15))
       val byName = out.getOrElseUpdate(ruptureId, scala.collection.mutable.LinkedHashMap.empty)
-      byName(faultName) = byName.getOrElse(faultName, Vector.empty) :+ plane
+      byName(faultName) = byName.getOrElse(faultName, Vector.empty) :+ planeAt(row, 6)
     }
     out.map { case (id, byName) =>
       id -> byName.map { case (n, planes) => n -> Fault(planes) }.toMap
@@ -205,19 +218,10 @@ final class NshmDb(val store: NshmStore) {
     val rows = fp
       .join(broadcast(fault).as("f"), fp("fault_id") === col("f.fault_id"))
       .filter(col("f.nshm_id") === faultNshmId && col("f.fault_system") === faultSystem)
-      .select(
-        fp("plane_id"),
-        fp("top_left_lat"), fp("top_left_lon"), fp("top_right_lat"), fp("top_right_lon"),
-        fp("bottom_right_lat"), fp("bottom_right_lon"), fp("bottom_left_lat"), fp("bottom_left_lon"),
-        fp("top_depth"), fp("bottom_depth"))
+      .select(fp("plane_id") +: planeCols(fp): _*)
       .orderBy(fp("plane_id"))
       .collect()
-    Fault(rows.map { r =>
-      Plane.fromFlat(
-        r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4),
-        r.getDouble(5), r.getDouble(6), r.getDouble(7), r.getDouble(8),
-        r.getDouble(9), r.getDouble(10))
-    }.toVector)
+    Fault(rows.map(planeAt(_, 1)).toVector)
   }
 
   /** ≙ get_fault_info (nshmdb.py:417-450); throws on a miss like the
@@ -227,17 +231,10 @@ final class NshmDb(val store: NshmStore) {
     val f = fault
     f.join(broadcast(parentFault).as("p"), f("parent_id") === col("p.parent_id"))
       .filter(f("fault_system") === faultSystem && f("nshm_id") === faultNshmId)
-      .select(f("fault_system"), f("nshm_id"), col("p.name"), f("rake"), f("tect_type"))
+      .select(faultInfoCols(f): _*)
       .collect()
       .headOption
-      .map { r =>
-        FaultInfo(
-          faultSystem = r.getInt(0),
-          faultNshmId = r.getLong(1),
-          name = r.getString(2),
-          rake = r.getDouble(3),
-          tectType = if (r.isNullAt(4)) None else Some(r.getInt(4)))
-      }
+      .map(faultInfoAt)
       .getOrElse(throw new IllegalArgumentException(
         s"Could not find fault with id = $faultNshmId in fault system = $faultSystem"))
   }
@@ -253,16 +250,9 @@ final class NshmDb(val store: NshmStore) {
       .join(rupture.as("r"), col("r.rupture_id") === col("rf.rupture_id"))
       .join(broadcast(parentFault).as("p"), f("parent_id") === col("p.parent_id"))
       .filter(col("r.nshm_id") === ruptureNshmId)
-      .select(col("p.name"), f("fault_system"), f("nshm_id"), f("rake"), f("tect_type"))
+      .select(faultInfoCols(f): _*)
       .collect()
-      .map { r =>
-        r.getString(0) -> FaultInfo(
-          faultSystem = r.getInt(1),
-          faultNshmId = r.getLong(2),
-          name = r.getString(0),
-          rake = r.getDouble(3),
-          tectType = if (r.isNullAt(4)) None else Some(r.getInt(4)))
-      }
+      .map { r => val info = faultInfoAt(r); info.name -> info }
       .toMap
   }
 

@@ -28,7 +28,7 @@ object NshmDbGenerator {
       skipFaults: Boolean = false,
       skipRuptures: Boolean = false,
       skipMfds: Boolean = false,
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      master: Option[String] = None)
 
   def parseArgs(args: Seq[String]): Config = {
     require(args.length >= 2, usage)
@@ -39,7 +39,7 @@ object NshmDbGenerator {
       case "--skip-faults-creation" :: tl => cfg = cfg.copy(skipFaults = true); rest = tl
       case "--skip-rupture-creation" :: tl => cfg = cfg.copy(skipRuptures = true); rest = tl
       case "--skip-mfds-creation" :: tl => cfg = cfg.copy(skipMfds = true); rest = tl
-      case "--master" :: v :: tl => cfg = cfg.copy(master = v); rest = tl
+      case "--master" :: v :: tl => cfg = cfg.copy(master = Some(v)); rest = tl
       case other :: _ => throw new IllegalArgumentException(s"Unknown argument: $other\n$usage")
       case Nil => ()
     }
@@ -64,14 +64,8 @@ object NshmDbGenerator {
 
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(cfg.master)
-      .appName("nshm-db-generator")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val builder = graft.GraftSession.builder("nshm-db-generator")
+    val spark = cfg.master.fold(builder)(builder.master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val db = run(spark, cfg)

@@ -36,7 +36,7 @@ object KCore {
       .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
 
   /** One full peel round as a single frame (degree agg + both
-    * semi-joins) — what [[graft.PlanAudit]] audits for the per-round
+    * semi-joins) — what [[graft.Inspect]] audits for the per-round
     * invariants, since [[peelRounds]]'s final frame is only the
     * driver-collected trace (a LocalTableScan that hides the real work).
     * The input is materialized first, exactly as the loop holds it: the

@@ -45,7 +45,7 @@ object LogisticRegression {
 
   /** One gradient sweep as an UNEXECUTED 1-row frame: a single scan of
     * the featurized data with map-side partial aggregation. Shared by
-    * [[train]]'s loop and [[graft.PlanAudit]]'s per-round audit.
+    * [[train]]'s loop and [[graft.Inspect]]'s per-round audit.
     */
   private[graft] def gradientFrame(d: DataFrame, beta: Array[Double]): DataFrame = {
     val z = beta.indices

@@ -95,7 +95,7 @@ object PageRank {
   }
 
   /** One representative sweep over `edges` (broadcast-join + per-dst
-    * aggregation + dangling re-attach) for [[graft.PlanAudit]] —
+    * aggregation + dangling re-attach) for [[graft.Inspect]] —
     * [[run]]'s returned frame is a checkpointed LogicalRDD that hides
     * the per-sweep shuffle structure. trans/nodes/ranks are materialized
     * first, exactly as [[run]] holds them between sweeps.

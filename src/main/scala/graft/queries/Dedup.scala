@@ -525,7 +525,7 @@ object Dedup extends QueryPack {
     */
   /** One min-label-propagation round with pointer jumping — the body of
     * [[propagateLabels]]' loop, also audited standalone by
-    * [[graft.PlanAudit]] (the gate query's final frame is checkpointed,
+    * [[graft.Inspect]] (the gate query's final frame is checkpointed,
     * hiding the per-round aggregations/joins). One m ⋈ labels join
     * feeds BOTH the bucket-min and the doc-min aggregation (the naive
     * form joins m against labels twice per round); every candidate doc
@@ -550,7 +550,7 @@ object Dedup extends QueryPack {
   /** One representative propagation round over the real membership
     * (materialized per key exactly as [[propagateLabels]] holds it, so
     * the audit sees the round's true incremental shuffle/join structure)
-    * for [[graft.PlanAudit]]. */
+    * for [[graft.Inspect]]. */
   def lshClusterRoundPlan(s: SparkSession, dir: String): DataFrame = {
     val mByBkey = graft.operators.Checkpoints.materialize(
       lshMembership(Tables.loadDistributed(s, dir, "documents", "doc_id")))

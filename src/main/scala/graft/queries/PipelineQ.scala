@@ -1740,7 +1740,7 @@ object PipelineQ extends QueryPack {
         .orderBy(col("node")))
 
   /** The nation→nation trade graph q_pagerank propagates over — also the
-    * input to its [[graft.PlanAudit]] per-round plan. */
+    * input to its [[graft.Inspect]] per-round plan. */
   private[graft] def tradeEdges(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
@@ -2799,7 +2799,7 @@ object PipelineQ extends QueryPack {
     (s, dir) => graft.operators.KCore.peelRounds(kcoreEdges(s, dir), k = 8, rounds = 6))
 
   /** q_logreg_quality's feature/label columns, shared with its
-    * [[graft.PlanAudit]] per-round gradient plan. */
+    * [[graft.Inspect]] per-round gradient plan. */
   private[graft] def logregFeatures: Seq[org.apache.spark.sql.Column] = Seq(
     lit(1.0),
     size(tokens(col("text"))).cast("double") / lit(100.0).cast("double"),
@@ -2808,7 +2808,7 @@ object PipelineQ extends QueryPack {
     when(col("lang") === "en", 1.0).otherwise(0.0)
 
   /** The thinned co-purchase edge set q_kcore peels — also the input to
-    * its [[graft.PlanAudit]] per-round plan. */
+    * its [[graft.Inspect]] per-round plan. */
   private[graft] def kcoreEdges(s: SparkSession, dir: String): DataFrame =
     graft.operators.Triangles.sampleEdges(
       graft.operators.Triangles.rawBasketPairs(

@@ -627,7 +627,7 @@ object TrainOps extends QueryPack {
       trace.toSeq.toDF("round", "left_sym", "right_sym", "pair_weight", "symbols_after")
     })
 
-  // ── BPE round bodies — shared by qBpeMerges' loop and graft.PlanAudit's
+  // ── BPE round bodies — shared by qBpeMerges' loop and graft.Inspect's
   //    per-round audit (the gate query's final frame is a driver-collected
   //    trace, so only these expose the real per-round plan shapes) ──────
 
@@ -671,7 +671,7 @@ object TrainOps extends QueryPack {
 
   /** One representative round (pair count + merge application over the
     * materialized round-1 state, as the loop holds it) for
-    * [[graft.PlanAudit]]. */
+    * [[graft.Inspect]]. */
   def bpeRoundPlans(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
     val pairs = bpePairs(graft.operators.Checkpoints.materialize(bpeInitState(docs(s, dir))))
     Seq(

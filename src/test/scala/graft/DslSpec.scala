@@ -43,6 +43,8 @@ class DslSpec extends AnyFunSuite {
 
   test("unbalanced parenthesis errors (≙ test_query.py:66-70)") {
     intercept[QuerySyntaxException](Parser.parse("fault1 & (fault2 | !fault3"))
+    intercept[QuerySyntaxException](Parser.parse("a) & b"))
+    intercept[QuerySyntaxException](Parser.parse("a)"))
   }
 
   test("leading binary operator errors (≙ test_query.py:119-122)") {

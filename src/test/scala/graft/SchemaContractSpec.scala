@@ -47,6 +47,21 @@ class SchemaContractSpec extends SparkSpec {
     assert(e.getMessage.contains("events: missing file"))
   }
 
+  test("validate aggregates a mis-typed column, a missing column and a missing table into one error") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("contract_drifted").toString
+    Seq((1L, "not-a-time", 2L, "click", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    Seq((1L, "x", "en", "web")) // n_chars absent
+      .toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalStateException](
+      Tables.validate(spark, dir, Seq("events", "documents", "lineitem")))
+    for (problem <- Seq("events.ts", "documents.n_chars", "lineitem: missing file"))
+      assert(e.getMessage.contains(problem), s"error does not name $problem:\n${e.getMessage}")
+  }
+
   test("loadEvents normalizes both encodings to the same instants") {
     import spark.implicits._
     // micros-native fixture: what the refreshed testdata declares

@@ -20,14 +20,17 @@ object ZipFixtures {
       |"geometry":{"type":"LineString","coordinates":[[171.0,-44.0],[171.5,-44.2]]}}
       |]}""".stripMargin
 
-  def writeBranchZip(rate0: Double, rate1: Double, mfdRate: Double): String = {
+  /** Writes a branch archive; members named in `omit` are left out. */
+  def writeBranchZip(
+      rate0: Double, rate1: Double, mfdRate: Double, omit: Set[String] = Set.empty): String = {
     val path = s"/tmp/branch_${System.nanoTime()}.zip"
     val zos = new ZipOutputStream(new FileOutputStream(path))
-    def member(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8"))
-      zos.closeEntry()
-    }
+    def member(name: String, content: String): Unit =
+      if (!omit.contains(name)) {
+        zos.putNextEntry(new ZipEntry(name))
+        zos.write(content.getBytes("UTF-8"))
+        zos.closeEntry()
+      }
     member(Ingest.FaultInformationPath, geojson)
     member(Ingest.RupturePropertiesPath,
       s"""Rupture Index,Magnitude,Area (m^2),Length (m)

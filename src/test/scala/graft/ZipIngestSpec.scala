@@ -40,6 +40,19 @@ class ZipIngestSpec extends SparkSpec {
     assert(only.keySet === Set(1L))
   }
 
+  test("malformed branch archive fails with one error naming the path and missing member") {
+    val z = writeBranchZip(0.01, 0.002, 0.4, omit = Set(Ingest.RuptureFaultJoinPath))
+    val e = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, z))
+    assert(e.getMessage.contains(z))
+    assert(e.getMessage.contains(Ingest.RuptureFaultJoinPath))
+    assert(!e.getMessage.contains(Ingest.RuptureRatesPath))
+
+    val notZip = java.nio.file.Files.createTempFile("branch", ".zip")
+    java.nio.file.Files.writeString(notZip, "not a zip")
+    val e2 = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, notZip.toString))
+    assert(e2.getMessage.contains(notZip.toString))
+  }
+
   test("CLI generator: manifest → merged branches → parquet store round-trip " +
     "(≙ nshm_db_generator.py:49-94)") {
     import graft.nshm.NshmDbGenerator
