@@ -24,7 +24,8 @@ import org.apache.spark.sql.graftshim.Listeners
   *
   * Usage: java -cp ... graft.Inspect <sfDir> <outDir> <suffix> <q1,q_tri*,...>
   *
-  * Names resolve as Verify's filter does ([[Verify.matchIndex]]).
+  * Names resolve, and queries run in the order, of Verify's filter
+  * ([[Verify.select]]).
   */
 object Inspect {
   def main(args: Array[String]): Unit = {

@@ -96,9 +96,9 @@ object SkewBench {
     }
 
     // ---- aggregation scenario ------------------------------------------
-    val ev = queries.SkewQ.skewedEvents(spark, sfDir)
-      .select(col("user_id"), col("value"), col("event_id"))
-    ev.cache().count() // all agg variants read the same in-memory input
+    // all agg variants read the same pinned input
+    val ev = operators.Checkpoints.pin(queries.SkewQ.skewedEvents(spark, sfDir)
+      .select(col("user_id"), col("value"), col("event_id")))
 
     val aggUnsalted = run("agg_unsalted") {
       ev.groupBy(col("user_id"))
@@ -119,7 +119,6 @@ object SkewBench {
         .write.format("noop").mode("overwrite").save()
     }
     val evRows = ev.count()
-    ev.unpersist()
 
     // ---- shuffle-join scenario -----------------------------------------
     // Bench-only 50%-hot remap (the oracle gates keep their 20% fixture):
@@ -132,7 +131,7 @@ object SkewBench {
     // proxy for that regime.
     // ×4 row replication + a string payload so per-row join cost is
     // realistic (wide shuffled rows), not a bare-long codegen best case.
-    val li = Tables.load(spark, sfDir, "lineitem")
+    val li = operators.Checkpoints.pin(Tables.load(spark, sfDir, "lineitem")
       .withColumn("rep", explode(sequence(lit(0), lit(3))))
       .withColumn(
         "l_partkey",
@@ -140,10 +139,9 @@ object SkewBench {
       .select(
         col("l_partkey").as("p_partkey"), col("l_extendedprice"),
         concat_ws("|", col("l_returnflag"), col("l_linestatus"),
-          col("l_shipdate").cast("string"), col("rep").cast("string")).as("payload"))
-    val part = Tables.load(spark, sfDir, "part")
-      .select(col("p_partkey"), col("p_brand"))
-    li.cache().count(); part.cache().count()
+          col("l_shipdate").cast("string"), col("rep").cast("string")).as("payload")))
+    val part = operators.Checkpoints.pin(Tables.load(spark, sfDir, "part")
+      .select(col("p_partkey"), col("p_brand")))
 
     val joinUnsalted = run("join_unsalted") {
       li.join(part, Seq("p_partkey"))

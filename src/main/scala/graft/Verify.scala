@@ -95,15 +95,16 @@ object Verify {
     spark.stop()
   }
 
-  /** Registered query names chosen by a comma-separated filter (doc at
-    * the call site in [[main]]), in filter-token order; ties keep
-    * registry order, so an empty filter selects everything in map order.
+  /** Query names of `all` chosen by a comma-separated filter (doc at
+    * the call site in [[main]]), in filter-token order; ties are broken
+    * by name (the order [[Bench]] runs in), so an empty filter selects
+    * everything sorted.
     */
-  private[graft] def select(filter: String): Seq[String] = {
+  private[graft] def select(
+      filter: String, all: Set[String] = SparkEntry.queries.keySet): Seq[String] = {
     val tokens = filter.split(',').toSeq
-    val all = SparkEntry.queries.keySet
-    all.toSeq.map(n => n -> matchIndex(tokens, all, n))
-      .filter(_._2 >= 0).sortBy(_._2).map(_._1)
+    all.toSeq.map(n => (matchIndex(tokens, all, n), n))
+      .filter(_._1 >= 0).sorted.map(_._2)
   }
 
   /** Filter-token resolution for args(2) (doc at the call site in

@@ -46,8 +46,8 @@ final class NshmDb(val store: NshmStore) {
     * top-k by rate DESC NULLS LAST (O1). Returns the reference's 7
     * columns: rupture_id, nshm_id, fault_system, magnitude, area, len,
     * rate.
-    */
-  /** @param ignoreZeroBounds opt-in bug-compat with the reference, which
+    *
+    * @param ignoreZeroBounds opt-in bug-compat with the reference, which
     *   drops a bound of exactly 0.0 via Python truthiness
     *   (query.py:298-311). Default false: a zero bound is a real bound.
     */

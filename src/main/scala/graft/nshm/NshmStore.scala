@@ -23,18 +23,16 @@ trait NshmStore {
     * inserted — so re-running the same batch is idempotent. Incoming
     * batches are expected key-unique, as Delta MERGE requires (duplicate
     * keys collapse to one arbitrary row rather than erroring). The merged
-    * frame is materialized (serialized pin, [[graft.operators.Checkpoints.pinSer]]
-    * — the merged table is TABLE-width, the one frame class whose
-    * deserialized read-back re-inflates) before the swap so the
-    * replace never overwrites storage it is still lazily reading; on a
-    * real cluster this operation is where a transactional table format
-    * (Delta/Iceberg) takes over — the plan shape (anti-join + union) is
-    * identical there.
+    * frame is pinned ([[graft.operators.Checkpoints.pin]]) before the
+    * swap so the replace never overwrites storage it is still lazily
+    * reading; on a real cluster this operation is where a transactional
+    * table format (Delta/Iceberg) takes over — the plan shape
+    * (anti-join + union) is identical there.
     */
   def merge(name: String, rows: DataFrame, keyCols: Seq[String]): Unit = {
     val incoming = conform(name, rows).dropDuplicates(keyCols)
     val kept = table(name).join(incoming.select(keyCols.map(col): _*), keyCols, "left_anti")
-    replace(name, graft.operators.Checkpoints.pinSer(kept.unionByName(incoming)))
+    replace(name, graft.operators.Checkpoints.pin(kept.unionByName(incoming)))
   }
 
   /** Swap a table's full contents (only reachable via [[merge]], which

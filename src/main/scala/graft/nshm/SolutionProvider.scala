@@ -26,9 +26,8 @@ trait SolutionProvider {
 }
 
 /** Manifest-file provider: one line per branch, `group,weight,zip-path`
-  * (blank lines and `#` comments ignored; an optional header line is
-  * detected by a non-numeric weight field). The manifest is the local
-  * stand-in for the logic-tree API response.
+  * (format and errors as [[SolutionProvider.parseManifest]]). The
+  * manifest is the local stand-in for the logic-tree API response.
   */
 final class ManifestSolutionProvider(manifestPath: String) extends SolutionProvider {
   override def groupedSources(version: SemVer): Map[String, Seq[(Double, String)]] = {
@@ -36,7 +35,7 @@ final class ManifestSolutionProvider(manifestPath: String) extends SolutionProvi
     val lines =
       try src.getLines().toVector
       finally src.close()
-    SolutionProvider.parseManifest(lines)
+    SolutionProvider.parseManifest(lines, manifestPath)
   }
 }
 
@@ -70,7 +69,8 @@ final class HttpSolutionProvider(
     val base = baseUrl.stripSuffix("/")
     val manifest = new String(
       get(s"$base/manifest/$version"), java.nio.charset.StandardCharsets.UTF_8)
-    val grouped = SolutionProvider.parseManifest(manifest.linesIterator.toVector)
+    val grouped = SolutionProvider.parseManifest(
+      manifest.linesIterator.toVector, s"$base/manifest/$version")
     // download each DISTINCT archive once (groups may share branches)
     val localOf = grouped.valuesIterator.flatMap(_.map(_._2)).distinct.map { remote =>
       val target = cacheDir.resolve(java.nio.file.Paths.get(remote).getFileName)
@@ -85,18 +85,26 @@ final class HttpSolutionProvider(
 object SolutionProvider {
 
   /** Shared manifest parse: one line per branch `group,weight,zip-path`
-    * (blank lines and `#` comments ignored; a header line is detected
-    * by a non-numeric weight field). First-seen weight wins per
-    * (group, path) — the reference's `seen_ids` dedup
-    * (api.py:100-110).
+    * (blank lines and `#` comments ignored). Only the first remaining
+    * line may be a header, recognized by a non-numeric weight field; any
+    * other line that is not a non-empty group, a numeric weight and a
+    * non-empty path throws one IllegalArgumentException naming `source`,
+    * the line number and the line, instead of silently dropping a
+    * branch. First-seen weight wins per (group, path) — the reference's
+    * `seen_ids` dedup (api.py:100-110).
     */
-  def parseManifest(rawLines: Seq[String]): Map[String, Seq[(Double, String)]] = {
-    val lines = rawLines.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-    val parsed = lines.flatMap { line =>
-      line.split(",", 3) match {
-        case Array(group, weight, path) if weight.trim.toDoubleOption.isDefined =>
-          Some((group.trim, weight.trim.toDouble, path.trim))
-        case _ => None // header or malformed line
+  def parseManifest(
+      rawLines: Seq[String], source: String): Map[String, Seq[(Double, String)]] = {
+    val lines = rawLines.map(_.trim).zipWithIndex
+      .filter { case (l, _) => l.nonEmpty && !l.startsWith("#") }
+    val parsed = lines.zipWithIndex.flatMap { case ((line, i), k) =>
+      line.split(",", 3).map(_.trim) match {
+        case Array(group, weight, path)
+            if group.nonEmpty && path.nonEmpty && weight.toDoubleOption.isDefined =>
+          Some((group, weight.toDouble, path))
+        case Array(_, weight, _) if k == 0 && weight.toDoubleOption.isEmpty => None
+        case _ => throw new IllegalArgumentException(
+          s"$source line ${i + 1}: expected group,weight,path with a numeric weight, got '$line'")
       }
     }
     parsed

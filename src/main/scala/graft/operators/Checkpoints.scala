@@ -3,78 +3,52 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Shared materialization point for driver-coordinated iterative
-  * operators ([[KCore]], [[PageRank]], label propagation, logistic
-  * regression): truncate the per-round lineage by checkpointing the
-  * round's frame.
-  *
-  * `localCheckpoint` stores executor-LOCAL blocks — gone on executor
-  * loss, which on a real cluster aborts a long iteration halfway
-  * through. When a reliable checkpoint directory is available (set via
-  * `SparkContext.setCheckpointDir` or the `spark.checkpoint.dir` conf)
-  * this helper uses a RELIABLE checkpoint instead: the frame lands in
-  * fault-tolerant storage and the iteration survives executor churn.
-  * Local mode / tests / the bench harness set no dir and keep the
-  * (faster, single-JVM-safe) local path.
+/** The one materialization point of the engine: every multiply-consumed
+  * frame and every driver-coordinated loop round ([[KCore]],
+  * [[PageRank]], label propagation, logistic regression, BPE) is pinned
+  * through [[pin]], which also truncates the frame's lineage. Nothing
+  * else in `src/main` calls `localCheckpoint`, `checkpoint`, `cache` or
+  * `persist` on a DataFrame (CheckpointsSpec scans for it).
   */
 object Checkpoints {
 
-  /** Eagerly materialize `df` with lineage truncation — reliable when a
-    * checkpoint dir is configured, executor-local otherwise.
-    */
-  def materialize(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.getConf.getOption("spark.checkpoint.dir").foreach(sc.setCheckpointDir)
-    if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    // Local fallback is SERIALIZED for the same reason as [[pinSer]]:
-    // the frames that flow through here (per-round node/edge frames of
-    // the k-core / PageRank / label-propagation loops, the span-dedup
-    // bucket membership) are corpus-width, and an iterative loop holds
-    // several rounds' pins alive at once — exactly the read-back
-    // re-inflation shape that OOM'd the ×1000-SF triangle frame.
-    else df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-  }
-
-  /** Materialize `df` AND return its row count in ONE job — the fused
-    * form of `materialize(df)` followed by a separate count action, for
-    * driver-coordinated loops whose round trace needs the count anyway
-    * ([[KCore.peelRounds]]). The r18/r19 per-round attribution probe
-    * showed the sf0.1 wall time of those loops is dominated by their
-    * sequential job barriers, each of which amplifies ambient host
-    * contention — so one fewer job per round is a direct win, and at
-    * scale the fused count() is the materializing scan itself (no extra
-    * pass: the cache builder stores every column of a partition the
-    * first time any consumer scans it, pruning applies only on read).
+  /** Pin `df` with lineage truncation.
     *
-    * Local path: LAZY `localCheckpoint(eager = false, SER)` + `count()`
-    * — the returned frame's plan is already a truncated LogicalRDD
-    * (constant-size lineage round over round; a `persist`-based fusion
-    * keeps the logical plan, which for peel loops references the
-    * previous round ~3× and grows EXPONENTIALLY — it OOM'd the driver
-    * during analysis at sf0.01), and the count() is the first action on
-    * the marked RDD, so the one job computes the rows, pins them as
-    * serialized checkpoint blocks, and counts them simultaneously.
+    * Storage. When a reliable checkpoint directory is available (set via
+    * `SparkContext.setCheckpointDir` or the `spark.checkpoint.dir` conf)
+    * the pin is a RELIABLE eager checkpoint: the frame lands in
+    * fault-tolerant storage and an iteration survives executor loss,
+    * which with executor-local blocks would abort it halfway through.
+    * Local mode / tests / the bench harness set no dir and take the
+    * (faster, single-JVM-safe) executor-local path, always with
+    * MEMORY_AND_DISK_SER. The default `localCheckpoint(true)` stores
+    * MEMORY_AND_DISK **deserialized**: a block read back from disk is
+    * re-materialized by `BlockManager.maybeCacheDiskValuesInMemory` as
+    * boxed object rows — a ~10× on-heap inflation that OOM'd the
+    * ×1000-SF 600M-row edge frame even at a 90 g heap (SCALING.md §8).
+    * Serialized blocks stay compact bytes in both tiers and consumers
+    * stream-deserialize per read; on tiny frames (sketch summaries,
+    * split boundaries) the extra decode is noise. Local-checkpoint
+    * blocks never enter the session's `CacheManager` (the
+    * `ContextCleaner` frees them with the frame), so a pin cannot
+    * silently change the plans of later, unrelated queries the way a
+    * forgotten `cache()` does.
     *
-    * Reliable-checkpoint path (a checkpoint dir is configured, i.e. a
-    * real cluster run): keep the fault-tolerant two-job form — the
-    * checkpoint write must complete before anything else reads the
-    * frame, and iteration-surviving durability is worth one barrier.
-    */
-  def materializeCount(df: DataFrame): (DataFrame, Long) = {
-    val d = materializeLazy(df)
-    (d, d.count())
-  }
-
-  /** Lineage-truncated frame whose MATERIALIZATION is deferred to the
-    * caller's own first action — the generalization of
-    * [[materializeCount]] for loops whose round trace needs an
-    * aggregate other than a count (BPE's symbol mass, label
-    * propagation's changed-count): the round's one driver action both
-    * computes/pins the blocks and returns the trace value, instead of
-    * an eager-checkpoint job followed by a separate read job.
+    * `eager = false` (local path only; the reliable path stays eager,
+    * since durability of the round frame is the point there) returns a
+    * frame whose plan is already a truncated LogicalRDD but whose blocks
+    * are computed and pinned by the caller's own first action, so a
+    * loop round's one driver action both materializes the frame and
+    * returns its trace value — e.g. `val d = pin(x, eager = false);
+    * val n = d.count()` is one job where an eager pin plus a count is
+    * two. The r18/r19 attribution probe showed the sf0.1 wall time of
+    * these loops is dominated by their sequential job barriers. A
+    * `persist`-based fusion would keep the logical plan, which in peel
+    * loops references the previous round ~3× and grows exponentially
+    * (it OOM'd the driver during analysis at sf0.01).
     *
-    * CONTRACT: the caller's FIRST action on the returned frame must
+    * CONTRACT for `eager = false`: the caller's FIRST action on the
+    * returned frame must
     * (a) scan EVERY partition (count / full aggregate / a join or
     * broadcast build consuming the whole side — a `head`/`take` first
     * action makes RDD.doCheckpoint launch an EXTRA backfill job for
@@ -86,9 +60,10 @@ object Checkpoints {
     * d25ef64 lesson: three of the five initial r19 conversions violated
     * this and recomputed corpus-wide subtrees inside their first job).
     *
-    * Call-site audit (keep current when adding callers):
-    *  - KCore.peelRounds / PageRank / LogisticRegression via
-    *    [[materializeCount]] — first action is the fused count().
+    * Call-site audit of `eager = false` (keep current when adding
+    * callers):
+    *  - KCore.peelRounds / PageRank / LogisticRegression — first action
+    *    is the fused count().
     *  - TrainOps BPE loop — first actions are the top-pair collect
     *    (full pair-window scan) / the symbol-mass aggregate.
     *  - Dedup.propagateLabels round — first action is the
@@ -103,41 +78,12 @@ object Checkpoints {
     *    one reference).
     *  - PipelineQ q_jaro_fuzzy scored-pair frame — same pre-sort
     *    sampling shape as q_random_projection.
-    *
-    * Local path: lazy serialized localCheckpoint (plan is a LogicalRDD
-    * immediately; blocks pin as the first job computes them).
-    * Reliable-checkpoint path (cluster): eager, as [[materialize]] —
-    * durability of the round frame is the point there.
     */
-  def materializeLazy(df: DataFrame): DataFrame = {
+  def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (sc.getCheckpointDir.isEmpty)
       sc.getConf.getOption("spark.checkpoint.dir").foreach(sc.setCheckpointDir)
     if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+    else df.localCheckpoint(eager, StorageLevel.MEMORY_AND_DISK_SER)
   }
-
-  /** Eager executor-local pin with SERIALIZED storage — the required
-    * pin for any multiply-consumed CORPUS-WIDTH frame (per-document /
-    * per-token / per-shingle / per-edge grain, i.e. anything that
-    * scales linearly-or-worse with the input).
-    *
-    * The default `localCheckpoint(true)` stores MEMORY_AND_DISK
-    * **deserialized**: when a later consumer reads a block back from
-    * disk, `BlockManager.maybeCacheDiskValuesInMemory` re-materializes
-    * it as boxed object rows — a ~10× on-heap inflation that OOM'd the
-    * ×1000-SF 600M-row edge frame in `putIteratorAsValues` even at a
-    * 90 g heap (SCALING.md §8). MEMORY_AND_DISK_SER keeps blocks as
-    * compact bytes in BOTH tiers; consumers stream-deserialize per
-    * read instead of pinning object rows, so the memory margin is
-    * designed rather than heap-dependent. The extra deserialize CPU is
-    * noise next to the shuffle these pins feed.
-    *
-    * Tiny frames (≤ a few thousand rows: sketch summaries, split
-    * boundaries, scalar pick tables) keep the bare deserialized
-    * `localCheckpoint(true)` — re-inflation is irrelevant at that size
-    * and object rows skip the per-read decode.
-    */
-  def pinSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
 }

@@ -37,10 +37,9 @@ object EquiDepth {
     val li = df.select(value.cast("double").as("v")).filter(col("v").isNotNull)
     // materialized once: the 1-row aggregate feeds two subtrees (the
     // bucketing crossJoin and the ntile target derivation) — without the
-    // checkpoint the full count/min/max scan executes twice
-    val stats = li.agg(
-      count(lit(1)).as("n"), min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-      .localCheckpoint(true)
+    // pin the full count/min/max scan executes twice
+    val stats = Checkpoints.pin(li.agg(
+      count(lit(1)).as("n"), min(col("v")).as("vmin"), max(col("v")).as("vmax")))
 
     val bucketed = li
       .crossJoin(broadcast(stats)) // 1-row stats: broadcast scalar join

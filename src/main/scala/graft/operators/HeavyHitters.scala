@@ -62,7 +62,7 @@ object HeavyHitters {
     val vals = values.select(value.cast("string").as("value"))
     // one MG pass emits candidates (tag 0) AND per-partition row /
     // eviction totals (tags 1, 2) — no second input scan for N;
-    // localCheckpoint materializes the tiny summary once for its two
+    // the pin materializes the tiny summary once for its two
     // consumers below
     val summary = vals
       .mapPartitions { rows =>
@@ -90,7 +90,7 @@ object HeavyHitters {
           Iterator((1, nRows.toString), (2, nEvictions.toString))
       }
       .toDF("tag", "value")
-      .localCheckpoint(true)
+      .transform(Checkpoints.pin(_))
 
     val stats = summary.filter(col("tag") =!= 0)
       .groupBy(col("tag")).agg(sum(col("value").cast("long")).as("total"))

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * LEFT-SEMI equi-joins against the (node-cardinality) keep set —
   * never an all-pairs structure. Driver-coordinated iteration like
   * [[PageRank]]: the driver carries only per-round counts, and every
-  * round `localCheckpoint`s so the plan does not grow with rounds
-  * (executor-local blocks here; a reliable checkpoint dir on a
-  * cluster). Rounds are PINNED by the caller — the per-round count
+  * round is pinned ([[Checkpoints.pin]]) so the plan does not grow
+  * with rounds (executor-local blocks here; a reliable checkpoint dir
+  * on a cluster). Rounds are PINNED by the caller — the per-round count
   * trace makes convergence (or the lack of it) visible in the output
   * rather than silently assumed.
   */
@@ -44,7 +44,7 @@ object KCore {
     * reference a checkpointed copy, not three re-derivations.
     */
   def roundPlan(edges: DataFrame, k: Int): DataFrame = {
-    val cur = Checkpoints.materialize(edges)
+    val cur = Checkpoints.pin(edges)
     dropEdges(cur, degreeKeep(cur, k))
   }
 
@@ -63,17 +63,17 @@ object KCore {
     import spark.implicits._
     // ENTRY pin stays EAGER: round 1's keep job references cur TWICE
     // (degreeKeep unions the a- and b-side scans), so a lazy pin would
-    // compute the whole edge build twice in that job — the
-    // materializeLazy single-first-consumer contract does not hold
-    // here. Per-round pins below are single-referenced and stay fused.
-    var cur = Checkpoints.materialize(edges)
+    // compute the whole edge build twice in that job — the lazy pin's
+    // single-first-consumer contract does not hold here. Per-round
+    // pins below are single-referenced and stay fused.
+    var cur = Checkpoints.pin(edges)
     var prevEdges = -1L
     val trace = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var r = 1
     var fixed = false
     while (r <= rounds && !fixed) {
-      // TWO jobs per round, count fused into each materialization
-      // ([[Checkpoints.materializeCount]]): the r18 attribution probe
+      // TWO jobs per round, count fused into each lazy pin
+      // ([[Checkpoints.pin]]): the r18 attribution probe
       // showed the sf0.1 wall time is dominated by the loop's
       // sequential job barriers (~25 of them originally), each of which
       // amplifies ambient host contention — q_kcore drifted 1.51x floor
@@ -84,8 +84,10 @@ object KCore {
       // count() IS the lazy checkpoint's materializing scan, the plan
       // stays a constant-size LogicalRDD per round, and the trace
       // numbers are byte-identical.
-      val (keep, nNodes) = Checkpoints.materializeCount(degreeKeep(cur, k))
-      val (next, nEdges) = Checkpoints.materializeCount(dropEdges(cur, keep))
+      val keep = Checkpoints.pin(degreeKeep(cur, k), eager = false)
+      val nNodes = keep.count()
+      val next = Checkpoints.pin(dropEdges(cur, keep), eager = false)
+      val nEdges = next.count()
       cur = next
       trace += ((r.toLong, nNodes, nEdges))
       if (nEdges == prevEdges) {

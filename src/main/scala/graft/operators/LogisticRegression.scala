@@ -30,10 +30,10 @@ object LogisticRegression {
     // lazy pin + fused count: the n-count is the materializing action
     // (one job where an eager checkpoint + count was two); sweeps then
     // rescan the pinned feature blocks
-    val (d, nRows) = Checkpoints.materializeCount(data.select(
+    val d = Checkpoints.pin(data.select(
       (features.zipWithIndex.map { case (f, j) => f.cast("double").as(s"x$j") } :+
-        label.cast("double").as("y")): _*))
-    val n = nRows.toDouble
+        label.cast("double").as("y")): _*), eager = false)
+    val n = d.count().toDouble
     val beta = Array.fill(features.size)(0.0)
     for (_ <- 1 to iterations) {
       val grads = gradientFrame(d, beta).collect().head
@@ -61,7 +61,7 @@ object LogisticRegression {
     * the sweeps rescan the checkpointed feature frame, they do not
     * recompute it) + one zero-β gradient sweep. */
   def roundPlan(data: DataFrame, features: Seq[Column], label: Column): DataFrame = {
-    val d = Checkpoints.materialize(data.select(
+    val d = Checkpoints.pin(data.select(
       (features.zipWithIndex.map { case (f, j) => f.cast("double").as(s"x$j") } :+
         label.cast("double").as("y")): _*))
     gradientFrame(d, Array.fill(features.size)(0.0))

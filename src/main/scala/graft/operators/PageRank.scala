@@ -37,10 +37,10 @@ object PageRank {
     // normalize: p(src→dst) = w / out_weight(src); edge layout fixed
     // once. EAGER pin: the first consumer (the nodes count job below)
     // references trans TWICE (src ∪ dst), so a lazy pin would run the
-    // corpus-wide edge build twice in that job — outside the
-    // materializeLazy single-first-consumer contract.
+    // corpus-wide edge build twice in that job — outside the lazy
+    // pin's single-first-consumer contract.
     val outW = edges.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val trans = Checkpoints.materialize(
+    val trans = Checkpoints.pin(
       edges.join(outW, Seq("src"))
         .select(col("src"), col("dst"), (col("w") * lit(1.0) / col("outw")).as("p")))
 
@@ -51,10 +51,12 @@ object PageRank {
     // SECOND time just to enumerate nodes (at the ×1000 SF that second
     // pass is a full lineitem⋈orders⋈customer⋈supplier replay). Count
     // fused into the materializing job (one barrier, not two).
-    val (nodes, nNodes) = Checkpoints.materializeCount(
+    val nodes = Checkpoints.pin(
       trans.select(col("src").as("node"))
         .union(trans.select(col("dst").as("node")))
-        .distinct())
+        .distinct(),
+      eager = false)
+    val nNodes = nodes.count()
     val teleport = (1.0 - damping) / nNodes
 
     // Each sweep stays EAGERLY materialized. A fully lazy 10-sweep
@@ -68,7 +70,7 @@ object PageRank {
     // build above.
     var ranks = nodes.withColumn("rank", lit(1.0 / nNodes))
     for (_ <- 1 to iterations) {
-      ranks = Checkpoints.materialize(
+      ranks = Checkpoints.pin(
         sweep(trans, nodes, ranks, damping, teleport)
       ) // truncate the lineage, keep each sweep one stage
     }
@@ -101,13 +103,13 @@ object PageRank {
     * first, exactly as [[run]] holds them between sweeps.
     */
   def roundPlan(edges: DataFrame, damping: Double = 0.85): DataFrame = {
-    val e = Checkpoints.materialize(edges)
+    val e = Checkpoints.pin(edges)
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val trans = Checkpoints.materialize(e.join(outW, Seq("src"))
+    val trans = Checkpoints.pin(e.join(outW, Seq("src"))
       .select(col("src"), col("dst"), (col("w") * lit(1.0) / col("outw")).as("p")))
-    val nodes = Checkpoints.materialize(e.select(col("src").as("node"))
+    val nodes = Checkpoints.pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    val ranks = Checkpoints.materialize(nodes.withColumn("rank", lit(1.0)))
+    val ranks = Checkpoints.pin(nodes.withColumn("rank", lit(1.0)))
     sweep(trans, nodes, ranks, damping, teleport = 0.15)
   }
 

@@ -19,19 +19,11 @@ import org.apache.spark.sql.functions._
   *     rand()) makes the estimate reproducible across runs and retries.
   *
   * Every stage is an equi-join or hash aggregate on node/edge keys; the
-  * two multiply-consumed frames are pinned via [[pinSer]] (serialized
-  * executor-local checkpoint) so the pair-gen join is not re-executed
-  * per consumer and the pin never re-inflates to object rows.
+  * two multiply-consumed frames are pinned via [[Checkpoints.pin]]
+  * (serialized) so the pair-gen join is not re-executed per consumer
+  * and the pin never re-inflates to object rows.
   */
 object Triangles {
-
-  /** Serialized executor-local pin — see [[Checkpoints.pinSer]] (the
-    * helper graduated there in round 18 so every corpus-width pin in
-    * the repo shares the OOM-safe storage level; this alias keeps the
-    * original call sites and the SCALING.md §8 post-mortem reference
-    * stable).
-    */
-  def pinSer(df: DataFrame): DataFrame = Checkpoints.pinSer(df)
 
   /** All unordered co-occurrence pairs (a < b) from (basket, item)
     * rows — the co-purchase/co-occurrence edge generator feeding the
@@ -126,7 +118,7 @@ object Triangles {
     *     is skipped outright and the closure join carries the full
     *     wedge stream — the pre-sketch behavior, minus the build cost.
     *
-    * `pin = false` skips the defensive localCheckpoint when the caller
+    * `pin = false` skips the defensive edge pin when the caller
     * already pinned the edge frame (q_triangle_sampled shares one
     * checkpoint between the p = 0.5 stats and the p = 0.2 re-filter —
     * double-caching 600M-row frames is what pushed the ×1000 SF run
@@ -148,12 +140,12 @@ object Triangles {
             bloom: Boolean = true): DataFrame = {
     // consumed 4×: degrees, orientation, bloom build, closure join
     // (3× when the bloom branch is gated off)
-    val edges = if (pin) pinSer(edges0) else edges0
+    val edges = if (pin) Checkpoints.pin(edges0) else edges0
     val deg = edges.select(col("a").as("n")).unionAll(edges.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val aFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
     // consumed 2×: wedge gen + outdegree count
-    val oriented = pinSer(edges
+    val oriented = Checkpoints.pin(edges
       .join(deg.select(col("n").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
       .select(

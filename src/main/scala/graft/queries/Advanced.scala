@@ -133,9 +133,8 @@ object Advanced extends QueryPack {
       // the q_approx_sketch path.
       val B = 256
 
-      // Examined and rejected (r20): pinning `stats` (eager tiny
-      // localCheckpoint) + `vfreq` (pinSer) to collapse the duplicated
-      // subtrees — the listener-captured FINAL plan shows 15 lineitem
+      // Examined and rejected (r20): pinning `stats` + `vfreq` to
+      // collapse the duplicated subtrees — the listener-captured FINAL plan shows 15 lineitem
       // scans / 17 shuffle stages with only 3 exchanges reused (column
       // pruning differentiates the copies), so the dedup looked free.
       // Measured (interleaved A/B, controls embedded): pins LOSE ~+15%

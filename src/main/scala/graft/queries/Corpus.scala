@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, QueryPack, Tables}
-import graft.operators.Checkpoints.pinSer
+import graft.operators.Checkpoints.pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,7 +62,7 @@ object Corpus extends QueryPack {
              FROM scored ORDER BY bm25 DESC, doc_id LIMIT 20"""),
     (s, dir) => {
       val terms = Seq("spark", "table", "query")
-      val allTok = tok(docs(s, dir)).transform(pinSer) // dl + tfq reuse one tokenization
+      val allTok = tok(docs(s, dir)).transform(pin(_)) // dl + tfq reuse one tokenization
       val dl = allTok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
       val stats = dl.agg(avg(col("dl")).as("avgdl"), count(lit(1)).as("n_docs"))
       val tfq = allTok.filter(col("term").isin(terms: _*))
@@ -142,7 +142,7 @@ object Corpus extends QueryPack {
       val toks = docs(s, dir)
         .select(col("doc_id"),
           regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)).as("t"))
-        .transform(pinSer) // bigram + unigram sides share one tokenization
+        .transform(pin(_)) // bigram + unigram sides share one tokenization
       val big = toks.filter(size(col("t")) >= 2)
         .select(explode(expr(
           "zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1), (a, b) -> concat(a, ' ', b))"))
@@ -208,7 +208,7 @@ object Corpus extends QueryPack {
             .as("shingle"))
         .select(col("doc_id"), col("source"),
           conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long").as("g"))
-        .transform(pinSer) // eval + train sides share one shingling
+        .transform(pin(_)) // eval + train sides share one shingling
       val evalSh = sh.filter(col("doc_id") % 10 === 0).select(col("g")).distinct()
       val train = sh.filter(col("doc_id") % 10 =!= 0)
         .select(col("doc_id"), col("source"), col("g")).distinct()
@@ -286,7 +286,7 @@ object Corpus extends QueryPack {
         .select(col("doc_id"),
           md5(trim(regexp_replace(
             regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " "))).as("fp"))
-        .transform(pinSer)
+        .transform(pin(_))
       val cl = norm.groupBy(col("fp"))
         .agg(count(lit(1)).as("cluster_n"), min(col("doc_id")).as("canonical"))
       norm.join(cl, Seq("fp"))
@@ -319,7 +319,7 @@ object Corpus extends QueryPack {
     (s, dir) => {
       val e = events(s, dir)
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
-        .transform(pinSer) // three funnel stages share one scan
+        .transform(pin(_)) // three funnel stages share one scan
       val v = e.filter(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("ts_us")).as("t_view"))
       val c = e.filter(col("event_type") === "click")
@@ -357,7 +357,7 @@ object Corpus extends QueryPack {
         // at epoch-µs magnitudes
         .select(col("user_id"), expr("unix_micros(ts) div 604800000000").as("week"))
         .distinct()
-        .transform(pinSer) // cohort min + membership share the distinct
+        .transform(pin(_)) // cohort min + membership share the distinct
       val cohort = uw.groupBy(col("user_id")).agg(min(col("week")).as("cohort_week"))
       uw.join(cohort, Seq("user_id"))
         .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
@@ -461,7 +461,7 @@ object Corpus extends QueryPack {
     (s, dir) => {
       val sizes = Tables.load(s, dir, "lineitem")
         .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n"))
-        .transform(pinSer) // stats + top share the size table
+        .transform(pin(_)) // stats + top share the size table
       val stats = sizes.agg(
         count(lit(1)).as("n_keys"), max(col("n")).as("max_n"), avg(col("n")).as("avg_n"))
       val top = sizes.orderBy(col("n").desc, col("l_orderkey")).limit(1)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, QueryPack, Tables}
-import graft.operators.Checkpoints.pinSer
+import graft.operators.Checkpoints.pin
 import graft.text.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -204,7 +204,7 @@ object Dedup extends QueryPack {
       val reps = docs(s, dir)
         .groupBy(col("text"))
         .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("mult"))
-        .transform(pinSer)
+        .transform(pin(_))
       val sh = reps
         .select(col("rep_id"), col("mult"),
           graft.functions.MinhashFunctions.simhash16Native(col("text")).as("simhash"))
@@ -451,24 +451,24 @@ object Dedup extends QueryPack {
     val idxOk = idx.join(ok, Seq("bkey"), "left_semi")
     val newBk = lshMembership(newBatch).withColumnRenamed("doc_id", "new_id")
     // feeds the pair join + both semi-joins — LAZY pin
-    // (Checkpoints.materializeLazy contract): the first action is
+    // (Checkpoints.pin's lazy contract): the first action is
     // newSh's eager pin job just below, whose semi-join build side
     // scans cand fully and references it exactly once, so the
     // candidate join is computed, pinned, and consumed in ONE job
     // instead of paying its own barrier (r19 shape: eager pin = one
     // extra sequential job per probe)
-    val cand = graft.operators.Checkpoints.materializeLazy(
+    val cand = pin(
       newBk.join(idxOk, Seq("bkey"))
-        .select(col("new_id"), col("corp_id")).distinct())
+        .select(col("new_id"), col("corp_id")).distinct(), eager = false)
     def shOf(df: DataFrame, idName: String) =
       df.filter(length(col("text")) >= 3)
         .select(col("doc_id").as(idName), explode(shingles(col("text"), 3)).as("s3"))
     val newSh = shOf(newBatch, "new_id")
       .join(cand.select(col("new_id")).distinct(), Seq("new_id"), "left_semi")
-      .transform(pinSer)
+      .transform(pin(_))
     val corpSh = shOf(corpusTexts, "corp_id")
       .join(cand.select(col("corp_id")).distinct(), Seq("corp_id"), "left_semi")
-      .transform(pinSer)
+      .transform(pin(_))
     val nNew = newSh.groupBy(col("new_id")).agg(count(lit(1)).as("na"))
     val nCorp = corpSh.groupBy(col("corp_id")).agg(count(lit(1)).as("nb"))
     val inter = cand
@@ -552,11 +552,11 @@ object Dedup extends QueryPack {
     * the audit sees the round's true incremental shuffle/join structure)
     * for [[graft.Inspect]]. */
   def lshClusterRoundPlan(s: SparkSession, dir: String): DataFrame = {
-    val mByBkey = graft.operators.Checkpoints.materialize(
+    val mByBkey = pin(
       lshMembership(Tables.loadDistributed(s, dir, "documents", "doc_id")))
-    val mByDoc = graft.operators.Checkpoints.materialize(
+    val mByDoc = pin(
       mByBkey.repartition(col("doc_id")))
-    val labels = graft.operators.Checkpoints.materialize(
+    val labels = pin(
       mByDoc.select(col("doc_id")).distinct()
         .select(col("doc_id"), col("doc_id").as("lbl")))
     propagateRound(mByDoc, mByBkey, labels)
@@ -578,22 +578,20 @@ object Dedup extends QueryPack {
     val bucketDocs = Window.partitionBy(col("bkey"))
     // The rounds reference the membership on both keys — doc_id (label
     // pull) and bkey (bucket min) — so keep one checkpointed copy
-    // PRE-PARTITIONED per key: localCheckpoint preserves the physical
-    // partitioning in the LogicalRDD, so none of the rounds re-shuffles
-    // the membership side of its joins/aggregations.
+    // PRE-PARTITIONED per key.
     // ENTRY pins stay EAGER: round 1's job references mByDoc more than
     // once (the label seed subtree AND the propagation join), so lazy
     // pins would compute the membership build repeatedly inside that
-    // job — outside materializeLazy's single-first-consumer contract.
+    // job — outside the lazy pin's single-first-consumer contract.
     // Only the PER-ROUND pin below is lazily fused (one reference per
-    // consumer). localCheckpoint preserves the physical partitioning
-    // in the LogicalRDD either way, so none of the rounds re-shuffles
-    // the membership side of its joins/aggregations.
-    val mByBkey = graft.operators.Checkpoints.materialize(membership
+    // consumer). A pin preserves the physical partitioning in the
+    // LogicalRDD either way, so none of the rounds re-shuffles the
+    // membership side of its joins/aggregations.
+    val mByBkey = pin(membership
       .withColumn("__n", count(lit(1)).over(bucketDocs))
       .filter(col("__n") > 1)
       .drop("__n"))
-    val mByDoc = graft.operators.Checkpoints.materialize(
+    val mByDoc = pin(
       mByBkey.repartition(col("doc_id")))
     var labels = mByDoc.select(col("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("lbl"))
@@ -608,10 +606,10 @@ object Dedup extends QueryPack {
         // LAZY checkpoint's materializing action — it joins the whole
         // round frame against the previous labels, so every partition
         // is computed, pinned, and convergence-checked in the same job
-        // (Checkpoints.materializeLazy; still truncates the
+        // (Checkpoints.pin, eager = false; still truncates the
         // 3×-per-round lineage growth, still goes reliable+eager when
         // a checkpoint dir is configured).
-        val mat = graft.operators.Checkpoints.materializeLazy(next)
+        val mat = pin(next, eager = false)
         val changed = mat
           .join(labels.withColumnRenamed("lbl", "prev"), Seq("doc_id"))
           .filter(col("lbl") =!= col("prev"))
@@ -624,7 +622,7 @@ object Dedup extends QueryPack {
         // plan; the eager-materialize barrier is what costs wall time
         labels =
           if (round % 2 == 0 || round == target)
-            graft.operators.Checkpoints.materialize(next)
+            pin(next)
           else next
       }
     }
@@ -784,7 +782,7 @@ object Dedup extends QueryPack {
       // force the A-probe NOW: its plan reads the index lazily, and the
       // append below must not leak A's own signatures into A's probe
       val resA = probeLshIndex(s, path, batchA, corpus)
-        .withColumn("batch", lit("A")).transform(pinSer)
+        .withColumn("batch", lit("A")).transform(pin(_))
       appendToLshIndex(batchA, path)
       val resB = probeLshIndex(s, path, batchB, corpus.union(batchA))
         .withColumn("batch", lit("B"))
@@ -792,14 +790,14 @@ object Dedup extends QueryPack {
     })
 
   /** Lower-cased word tokens per document — the shared input of the
-    * substring-dedup pair (accounting + rewrite). localCheckpointed:
+    * substring-dedup pair (accounting + rewrite). Pinned:
     * feeds the gram explode AND the final join-back.
     */
   private def spanTokens(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
       .select(col("doc_id"),
         regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)).as("t"))
-      .transform(pinSer)
+      .transform(pin(_))
 
   /** Duplicated-token intervals merged into islands, per doc: every
     * token-8-gram occurrence that is not the corpus-wide FIRST

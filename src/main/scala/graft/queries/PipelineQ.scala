@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, QueryPack, Tables}
-import graft.operators.Checkpoints.pinSer
+import graft.operators.Checkpoints.pin
 import graft.functions.VectorFunctions
 import graft.text.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -82,11 +82,9 @@ object PipelineQ extends QueryPack {
             ORDER BY ws.doc_id"""),
     (s, dir) => {
       // one tokenization feeds the unigram AND 3-gram branches (q_bm25's
-      // reuse pattern). localCheckpoint = executor-local blocks, NOT
-      // fault-tolerant — on a real cluster swap for checkpoint() with a
-      // reliable dir (same note as the label-propagation loop)
+      // reuse pattern)
       val toks = docs(s, dir).select(col("doc_id"), tokens(col("text")).as("t"))
-        .transform(pinSer)
+        .transform(pin(_))
       val tf = toks
         .select(col("doc_id"), explode(col("t")).as("w"))
         .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
@@ -144,7 +142,7 @@ object PipelineQ extends QueryPack {
         .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("w"))
         .groupBy(col("doc_id"), col("w"))
         .agg(any_value(col("lang")).as("lang"), count(lit(1)).as("c"))
-        .transform(pinSer)
+        .transform(pin(_))
       val allf = tf.groupBy(col("w")).agg(sum(col("c")).as("c_all"))
       val enf = tf.filter(col("lang") === "en")
         .groupBy(col("w")).agg(sum(col("c")).as("c_en"))
@@ -297,7 +295,7 @@ object PipelineQ extends QueryPack {
         .filter(col("simhash").isNotNull)
         .groupBy(col("simhash"))
         .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n"))
-        .localCheckpoint(true)
+        .transform(pin(_))
       val bands = grp.select(
         col("simhash"), col("rep"), col("n"),
         explode(array(
@@ -563,7 +561,7 @@ object PipelineQ extends QueryPack {
             .as("shingle"))
         .select(col("doc_id"),
           conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long").as("g"))
-        .transform(pinSer) // doc-count side + position side share one shingling
+        .transform(pin(_)) // doc-count side + position side share one shingling
       val dc = sh.groupBy(col("g"))
         .agg(countDistinct(col("doc_id")).as("nd"))
       sh.join(dc, Seq("g"))
@@ -848,7 +846,7 @@ object PipelineQ extends QueryPack {
                         (a, b) -> named_struct('xy', concat(a, ' ', b), 'x', a))""")).as("p"))
         .select(col("doc_id"), col("p.xy").as("xy"), col("p.x").as("x"))
         .groupBy(col("doc_id"), col("xy"), col("x")).agg(count(lit(1)).as("c"))
-        .transform(pinSer)
+        .transform(pin(_))
       // cxy is BIGRAM-vocabulary-sized — quadratic in the unigram vocab,
       // NOT broadcastable at corpus scale: it shuffle-joins on the xy
       // key (co-partitioned with its own groupBy). Only the unigram
@@ -917,7 +915,7 @@ object PipelineQ extends QueryPack {
                         (a, b) -> named_struct('xy', concat(a, ' ', b), 'x', a))""")).as("p"))
         .select(col("doc_id"), col("p.xy").as("xy"), col("p.x").as("x"))
         .groupBy(col("doc_id"), col("xy"), col("x")).agg(count(lit(1)).as("c"))
-        .transform(pinSer)
+        .transform(pin(_))
       val cxy = dbig.groupBy(col("xy")).agg(sum(col("c")).as("c_xy"))
       val cx = dbig.groupBy(col("x")).agg(sum(col("c")).as("c_x"))
       // vocab = |distinct x| = cx's row count: derived from the unigram
@@ -929,19 +927,19 @@ object PipelineQ extends QueryPack {
       // the bucket rollup; unpinned, the whole scoring subtree — the
       // xy-keyed join of the bigram-grain pin against cxy, the widest
       // work in the query — executed once per consumer (the r19 plan
-      // carried two full copies). Lazy pin (Checkpoints.materializeLazy
+      // carried two full copies). Lazy pin (Checkpoints.pin's lazy
       // contract): the FIRST action is the tercile aggregate's partial
       // pass — a full scan referencing lp exactly once (the bucket
       // rollup's stage cannot start before th's broadcast exists) — so
       // the one job scores, pins, and aggregates simultaneously.
-      val lp = graft.operators.Checkpoints.materializeLazy(
+      val lp = pin(
         dbig.join(cxy, Seq("xy"))
           .join(broadcast(cx), Seq("x"))
           .crossJoin(broadcast(v))
           .groupBy(col("doc_id"))
           .agg((round(
             sum(col("c") * log((col("c_xy") + 1.0) / (col("c_x") + col("vocab"))))
-              / sum(col("c")) * 1e6) / 1e6).as("lp")))
+              / sum(col("c")) * 1e6) / 1e6).as("lp")), eager = false)
       val th = lp.agg(
         (round(expr("percentile(lp, 1.0D / 3)") * 1e6) / 1e6).as("t33"),
         (round(expr("percentile(lp, 2.0D / 3)") * 1e6) / 1e6).as("t66"))
@@ -1319,7 +1317,7 @@ object PipelineQ extends QueryPack {
         .select(col("source"),
           explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
         .distinct()
-        .transform(pinSer) // sizes + both join sides share one tokenization
+        .transform(pin(_)) // sizes + both join sides share one tokenization
       val sz = v.groupBy(col("source")).agg(count(lit(1)).as("n"))
       val a = v.select(col("source").as("source_a"), col("w"))
       val b = v.select(col("source").as("source_b"), col("w").as("wb"))
@@ -1510,7 +1508,7 @@ object PipelineQ extends QueryPack {
       val grp = t(s, dir, "part")
         .groupBy(col("p_brand"), col("p_size"), col("p_name"))
         .agg(min(col("p_partkey")).as("rep"), count(lit(1)).as("n"))
-        .transform(pinSer)
+        .transform(pin(_))
       // Co-partition the PROBE side by the block key: in-block scoring
       // is quadratic in block size, and AQE may coalesce the small
       // collapsed agg output to a handful of partitions — without this
@@ -1539,12 +1537,12 @@ object PipelineQ extends QueryPack {
       // pin the scored pairs before the global sort: orderBy's range-
       // sampling job otherwise RE-EXECUTES the quadratic in-block
       // scoring end to end; the surviving ≥0.82 pair set is tiny, so
-      // the checkpoint costs nothing to hold. LAZY (r20, the
-      // materializeLazy contract): the sampling job is itself a full
+      // the checkpoint costs nothing to hold. LAZY (r20, the lazy
+      // pin contract): the sampling job is itself a full
       // reservoir pass referencing the frame once, so it doubles as the
       // materializing action — the scoring still runs exactly once,
       // minus the eager pin's own job barrier.
-      graft.operators.Checkpoints.materializeLazy(cross.unionByName(intra))
+      pin(cross.unionByName(intra), eager = false)
         .orderBy(col("pk_a"), col("pk_b"))
     })
 
@@ -2709,11 +2707,10 @@ object PipelineQ extends QueryPack {
       // hp % 10 < 2  ⊂  hp % 10 < 5 with the same salt, so the p=0.2
       // edge set is a re-filter of the checkpointed p=0.5 one (same
       // hashes either way).
-      // pinSer, not bare localCheckpoint(true): the default pin stores
-      // deserialized object rows, and reading the ×1000-SF edge frame
-      // back from disk re-inflated it past a 90 g heap (see
-      // Triangles.pinSer). Serialized blocks stream-deserialize instead.
-      val e50 = graft.operators.Triangles.pinSer(
+      // pinned serialized: reading the ×1000-SF edge frame back from
+      // disk as deserialized object rows re-inflated it past a 90 g
+      // heap (see Checkpoints.pin).
+      val e50 = pin(
         graft.operators.Triangles.sampleEdges(
           graft.operators.Triangles.rawBasketPairs(
             t(s, dir, "lineitem"), "l_orderkey", "l_partkey"),
@@ -2749,7 +2746,7 @@ object PipelineQ extends QueryPack {
         case Some("never")  => false
         case _              => inputBytes > BigInt(4L << 30)
       }
-      def wave(df: DataFrame): DataFrame = if (barrier) pinSer(df) else df
+      def wave(df: DataFrame): DataFrame = if (barrier) pin(df) else df
       // Bloom closure prune rides the keep-rate-aware size gate (see
       // [[triBloomGate]]): below it the two sketch passes are pure
       // barrier overhead, above it they shrink the closure exchange —

@@ -441,12 +441,12 @@ object SimilarityQ extends QueryPack {
         // The global sort's range-partitioner SAMPLES its child first,
         // and the projection is map-side all the way from the scan — so
         // unpinned, the 8×64-term ± chains run TWICE (sampling pass +
-        // sort pass). Lazy pin (Checkpoints.materializeLazy contract):
+        // sort pass). Lazy pin (Checkpoints.pin's lazy contract):
         // the sampling job is the first action — a reservoir pass over
         // every partition, referencing the frame exactly once — so one
         // job projects, pins the narrow (id + 9 doubles) rows, and
         // samples; the sort shuffle then reads the pinned blocks.
-        graft.operators.Checkpoints.materializeLazy(projected)
+        graft.operators.Checkpoints.pin(projected, eager = false)
           .orderBy(col("vec_id"))
       })
   }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, QueryPack, Tables}
-import graft.operators.Checkpoints.pinSer
+import graft.operators.Checkpoints.pin
 import graft.text.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -53,7 +53,7 @@ object TrainOps extends QueryPack {
         col("doc_id"),
         explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("term"))
       val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .transform(pinSer) // referenced twice (tf side + df rollup)
+        .transform(pin(_)) // referenced twice (tf side + df rollup)
       val df = tf.groupBy(col("term")).agg(count(lit(1)).as("docfreq"))
       val n = d.agg(count(lit(1)).as("n_docs"))
       val raw = col("tf") * log(col("n_docs") * lit(1.0) / col("docfreq"))
@@ -518,7 +518,7 @@ object TrainOps extends QueryPack {
           least(lit(7L), greatest(lit(0L), floor(col("n_chars") / 250.0).cast("long")))
             .as("bucket"))
       val c = d.groupBy(col("grp"), col("bucket")).agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // 16 rows feeding four derived frames
+        .transform(pin(_)) // 16 rows feeding four derived frames
       val ca = c.filter(col("grp") === 0).select(col("bucket"), col("n").as("na0"))
       val cb = c.filter(col("grp") === 1).select(col("bucket"), col("n").as("nb0"))
       val t0 = c.filter(col("grp") === 0).agg(sum(col("n")).as("tot0"))
@@ -600,14 +600,14 @@ object TrainOps extends QueryPack {
     },
     (s, dir) => {
       import s.implicits._
-      // LAZY pins (Checkpoints.materializeLazy): each round runs TWO
+      // LAZY pins (Checkpoints.pin, eager = false): each round runs TWO
       // jobs, not three — the top-pair collect is the materializing
       // action for the incoming state (it scans every partition through
       // the pair window), and the symbol-mass aggregate is the
       // materializing action for the merged state. Same trace numbers,
       // one fewer sequential driver barrier per round (the r19
       // barrier-latency finding), identical at-scale storage level.
-      var state = graft.operators.Checkpoints.materializeLazy(bpeInitState(docs(s, dir)))
+      var state = pin(bpeInitState(docs(s, dir)), eager = false)
       val trace = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long, Long)]
       var exhausted = false
       for (r <- 1 to 6 if !exhausted) {
@@ -619,7 +619,7 @@ object TrainOps extends QueryPack {
         else {
         val top = topOpt.get
         val (bl, br, w) = (top.getString(0), top.getString(1), top.getLong(2))
-        state = graft.operators.Checkpoints.materializeLazy(bpeApplyMerge(pairs, bl, br))
+        state = pin(bpeApplyMerge(pairs, bl, br), eager = false)
         val symbolsAfter = state.agg(sum(col("freq"))).head.getLong(0)
         trace += ((r.toLong, bl, br, w, symbolsAfter))
         }
@@ -673,7 +673,7 @@ object TrainOps extends QueryPack {
     * materialized round-1 state, as the loop holds it) for
     * [[graft.Inspect]]. */
   def bpeRoundPlans(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    val pairs = bpePairs(graft.operators.Checkpoints.materialize(bpeInitState(docs(s, dir))))
+    val pairs = bpePairs(pin(bpeInitState(docs(s, dir))))
     Seq(
       "pair_count" -> bpeTopPair(pairs),
       "apply_merge" -> bpeApplyMerge(pairs, "t", "h"))

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.operators.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -134,15 +135,14 @@ object ProductQuantizer {
       corpus: DataFrame, path: String, dim: Int, m: Int, k: Int, iters: Int = 2): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cached = corpus.cache()
-    val cb = train(cached, dim, m, k, iters)
+    val pinned = Checkpoints.pin(corpus)
+    val cb = train(pinned, dim, m, k, iters)
     cb.zipWithIndex.flatMap { case (book, s) =>
       book.zipWithIndex.map { case (c, cid) => (s, cid, c.toSeq) }
     }.toSeq.toDF("subspace", "cid", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    encode(cached, cb)
+    encode(pinned, cb)
       .write.mode("overwrite").parquet(s"$path/codes")
-    cached.unpersist(blocking = false)
   }
 
   /** Load the codebooks of a persisted index back into driver form. */

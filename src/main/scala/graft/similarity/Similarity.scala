@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.operators.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -109,7 +110,7 @@ object Similarity {
 
   /** Deterministic distributed k-means (seeds = the nCells lowest
     * vec_ids, fixed iteration count; typed [[CentroidAggregator]] does
-    * the per-cell mean). The corpus frame should be cached by the caller
+    * the per-cell mean). The corpus frame should be pinned by the caller
     * when iters > 0 — the loop rescans it once per iteration.
     */
   def trainCentroids(
@@ -146,10 +147,10 @@ object Similarity {
       nProbe: Int = 4,
       kmeansIters: Int = 3): DataFrame = {
     // the iterative build rescans the corpus (kmeansIters + 1) times —
-    // cache the working set like any iterative ML job
-    val cached = corpus.cache()
-    val centroids = trainCentroids(cached, nCells, kmeansIters)
-    val cells = cached.withColumn("cell", nearestCell(col("embedding"), centroids))
+    // pin the working set like any iterative ML job
+    val pinned = Checkpoints.pin(corpus)
+    val centroids = trainCentroids(pinned, nCells, kmeansIters)
+    val cells = pinned.withColumn("cell", nearestCell(col("embedding"), centroids))
     val qCells = probedCells(queries, centroids, nProbe)
     val scored = cells
       .join(broadcast(qCells), Seq("cell"))
@@ -173,14 +174,13 @@ object Similarity {
       corpus: DataFrame, path: String, nCells: Int = 16, kmeansIters: Int = 3): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cached = corpus.cache()
-    val centroids = trainCentroids(cached, nCells, kmeansIters)
+    val pinned = Checkpoints.pin(corpus)
+    val centroids = trainCentroids(pinned, nCells, kmeansIters)
     centroids.toSeq.map { case (cid, c) => (cid, c.toSeq) }
       .toDF("cid", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    cached.withColumn("cell", nearestCell(col("embedding"), centroids))
+    pinned.withColumn("cell", nearestCell(col("embedding"), centroids))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    cached.unpersist(blocking = false)
   }
 
   /** Probe a persisted IVF index. The probe joins the cell-partitioned

@@ -50,4 +50,19 @@ class SimilaritySpec extends SparkSpec {
     val p = probed.queryExecution.executedPlan.toString
     assert(p.contains("dynamicpruning") || p.contains("PartitionFilters: [dynamicpruning"), p)
   }
+
+  test("ivfTopK leaves nothing in the session cache; a later brute-force scan plans from source") {
+    spark.catalog.clearCache()
+    val corpus = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val q = corpus.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    Similarity.ivfTopK(corpus, q, k = 5, nCells = 8, nProbe = 3).collect()
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(session.sharedState.cacheManager.isEmpty)
+    val brute = Similarity.bruteForceTopK(corpus, q, k = 5).queryExecution.optimizedPlan
+    assert(brute.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.isEmpty, brute)
+  }
 }

@@ -41,4 +41,11 @@ class VerifyFilterSpec extends AnyFunSuite {
     assert(idx("q_topk,q_asof", "q_topk") == 0)
     assert(idx("", "q_topk") == 0)
   }
+
+  test("selection breaks ties by name: a starred filter runs its family sorted") {
+    val registry = Set("q_tri_b", "q_asof_forward", "q_tri", "q_asof", "q_tri_a", "q_topk")
+    assert(Verify.select("q_tri*,q_asof*", registry) ===
+      Seq("q_tri", "q_tri_a", "q_tri_b", "q_asof", "q_asof_forward"))
+    assert(Verify.select("", registry) === registry.toSeq.sorted)
+  }
 }

@@ -94,5 +94,19 @@ class ZipIngestSpec extends SparkSpec {
 
     intercept[IllegalArgumentException](
       NshmDbGenerator.parseArgs(Seq("1.0.4", outDir, "--bogus")))
+
+    // a malformed manifest line past the header is one clear error naming
+    // the manifest, the line number and the line — never a dropped branch
+    for (bad <- Seq("CRU,0.5", s"CRU,O.5,$z2")) {
+      val badManifest = s"/tmp/manifest_bad_${System.nanoTime()}.csv"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(badManifest),
+        s"# comment\ngroup,weight,path\nCRU,0.25,$z1\n$bad\n")
+      val e = intercept[IllegalArgumentException](NshmDbGenerator.run(spark,
+        NshmDbGenerator.parseArgs(Seq("1.0", s"/tmp/gendb_${System.nanoTime()}",
+          "--manifest", badManifest))))
+      assert(e.getMessage.contains(badManifest), e.getMessage)
+      assert(e.getMessage.contains("line 4"), e.getMessage)
+      assert(e.getMessage.contains(bad), e.getMessage)
+    }
   }
 }
