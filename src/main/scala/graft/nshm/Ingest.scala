@@ -252,7 +252,10 @@ object Ingest {
     * Python list. Coordinates arrive (lon, lat); dip direction falls back
     * to the trace azimuth + 90 when `DipDir` is absent (F3), consecutive
     * duplicate trace points are dropped (F4), and planes are constructed
-    * per trace segment (F5) with dip_dir forced to 0 at dip == 90.
+    * per trace segment (F5) with dip_dir forced to 0 at dip == 90. A
+    * section whose trace has fewer than two distinct points fails the
+    * parse on the driver with one IllegalArgumentException naming its
+    * FaultID.
     */
   def parseFaultSections(spark: SparkSession, path: String): Seq[FaultInfo] =
     parseFeatureFrame(spark.read.option("multiLine", true).json(path))
@@ -281,15 +284,26 @@ object Ingest {
         col("f.properties.Rake").cast("double").as("rake"),
         col("f.geometry.coordinates").as("coords"))
       .map { r =>
-        val lonLat = r.getSeq[scala.collection.Seq[Double]](7).map(p => (p(0), p(1)))
+        val lonLat =
+          if (r.isNullAt(7)) Seq.empty
+          else r.getSeq[scala.collection.Seq[Double]](7).map(p => (p(0), p(1))).toSeq
         val trace = removeRepeatedPoints(lonLat).map { case (lon, lat) => (lat, lon) }
-        val dipDir =
-          if (!r.isNullAt(4)) r.getDouble(4)
-          else inferDipDirection(lonLat(0)._1, lonLat(0)._2, lonLat(1)._1, lonLat(1)._2)
-        val planes = planesFromTrace(trace, r.getDouble(2), r.getDouble(3), r.getDouble(5), dipDir)
-        (r.getLong(0), r.getString(1), r.getDouble(6), planes.map(_.corners.map(_.toSeq).toSeq))
+        // a trace without a segment has no planes: None, rejected below
+        val corners = Option.when(trace.length >= 2) {
+          val dipDir =
+            if (!r.isNullAt(4)) r.getDouble(4)
+            else inferDipDirection(lonLat(0)._1, lonLat(0)._2, lonLat(1)._1, lonLat(1)._2)
+          planesFromTrace(trace, r.getDouble(2), r.getDouble(3), r.getDouble(5), dipDir)
+            .map(_.corners.map(_.toSeq).toSeq)
+        }
+        (r.getLong(0), r.getString(1), r.getDouble(6), corners)
       }
       .collect()
+    val traceless = built.collect { case (id, _, _, None) => id }
+    if (traceless.nonEmpty)
+      throw new IllegalArgumentException(
+        "Fault sections with fewer than two distinct trace points have no plane: " +
+          s"FaultID ${traceless.mkString(", ")}")
     if (built.isEmpty) return Seq.empty
     val faultSystem = inferFaultSystem(built.head._2)
     built.toSeq.map { case (id, name, rake, corners) =>
@@ -299,7 +313,7 @@ object Ingest {
         name = name,
         rake = rake,
         tectType = None,
-        fault = Some(Fault(corners.map(c => Plane(c.map(_.toVector).toVector)).toVector)))
+        fault = Some(Fault(corners.get.map(c => Plane(c.map(_.toVector).toVector)).toVector)))
     }
   }
 

@@ -14,7 +14,10 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale notes: `fault`, `parent_fault` and the per-query pair/ID lookup
   * frames are broadcast; the `rupture_faults` bridge is the fact side;
-  * top-k plans as TakeOrderedAndProject. Behavioral divergences from the
+  * top-k plans as TakeOrderedAndProject. Store relations are resolved
+  * once per table version (file listing and schema only; no data or
+  * result is cached, every call still scans), so building a query over
+  * unchanged tables submits no Spark job. Behavioral divergences from the
   * reference (each deliberate, see Scaladoc on the method):
   * zero-valued bounds are honored (reference drops them via Python
   * truthiness, query.py:298-311); NOT over compound DSL expressions works

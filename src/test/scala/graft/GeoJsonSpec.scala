@@ -49,6 +49,29 @@ class GeoJsonSpec extends SparkSpec {
     assert(k.corners(3)(1) > k.corners(0)(1)) // east → larger longitude
   }
 
+  test("a section without two distinct trace points fails with one error naming its FaultID") {
+    def feature(id: Int, dipDir: String, coords: String) =
+      s"""{"type": "Feature",
+         | "properties": {"FaultID": $id, "ParentName": "P$id", "UpDepth": 0.0,
+         |                "LowDepth": 10.0, "DipDeg": 60.0, "Rake": 90.0, "DipDir": $dipDir},
+         | "geometry": {"type": "LineString", "coordinates": $coords}}""".stripMargin
+    val good = feature(1, "null", "[[172.0, -42.0], [173.0, -42.5]]")
+    // one point and no DipDir: the dip-direction fallback has no segment
+    val onePoint = feature(7, "null", "[[171.0, -44.0]]")
+    // DipDir given, but a repeated point is still no segment: zero planes
+    val repeated = feature(8, "135.0", "[[171.0, -44.0], [171.0, -44.0]]")
+    val noTrace = feature(9, "135.0", "null")
+    for ((features, named) <- Seq(
+        Seq(good, onePoint) -> "FaultID 7",
+        Seq(good, repeated) -> "FaultID 8",
+        Seq(good, noTrace) -> "FaultID 9",
+        Seq(onePoint, good, repeated) -> "FaultID 7, 8")) {
+      val json = s"""{"type": "FeatureCollection", "features": [${features.mkString(",")}]}"""
+      val e = intercept[IllegalArgumentException](Ingest.parseFaultSectionsJson(spark, json))
+      assert(e.getMessage.endsWith(named), e.getMessage)
+    }
+  }
+
   test("fault system inference from the catalogue marker names (api.py:178-198)") {
     assert(Ingest.inferFaultSystem(Ingest.HikurangiName) === FaultSystem.Hikurangi)
     assert(Ingest.inferFaultSystem(Ingest.PuysegurName) === FaultSystem.Puysegur)

@@ -1,0 +1,78 @@
+package graft
+
+import graft.nshm.{FaultSystem, Ingest, NshmDb, ParquetNshmStore}
+import graft.ZipFixtures.writeBranchZip
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.Listeners
+
+/** The parquet store resolves each table's relation once per table
+  * version: building a query over resolved tables runs no job, and every
+  * write, from this store or another one on the same directory, is seen
+  * by the next read.
+  */
+class ParquetNshmStoreSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** A parquet store holding the two-rupture branch fixture. */
+  private def populated(): (String, NshmDb) = {
+    val dir = s"/tmp/nshmstore_${System.nanoTime()}"
+    val db = NshmDb.open(spark, dir)
+    Ingest.loadComposite(db, Seq(Ingest.mergeSolutionZips(
+      spark, Seq((1.0, writeBranchZip(rate0 = 0.01, rate1 = 0.002, mfdRate = 0.4))))))
+    (dir, db)
+  }
+
+  /** `rupture` rows from (rupture_id, nshm_id, rate). */
+  private def ruptures(rows: (Long, Long, Double)*): DataFrame =
+    rows.map { case (id, nshmId, rate) => (id, FaultSystem.Crustal, nshmId, 1.0e8, 6.5, 1.0e4, rate) }
+      .toDF("rupture_id", "fault_system", "nshm_id", "area", "magnitude", "len", "rate")
+
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Listeners.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      Listeners.waitUntilEmpty(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building a search submits no jobs; a relation is reused until its table changes") {
+    val (_, db) = populated()
+    assert(db.queryRuptures("Alpine Fault").collect().length === 1)
+    assert(jobsDuring(db.queryRuptures("Alpine Fault")) === 0)
+
+    val store = db.store
+    assert(store.table("rupture") eq store.table("rupture"))
+    val before = store.table("rupture")
+    store.append("rupture", ruptures((10L, 10L, 0.5)))
+    assert(!(store.table("rupture") eq before))
+    assert(store.table("rupture").count() === 3)
+  }
+
+  test("writes through another store on the same directory are seen; own appends at once") {
+    val (dir, db) = populated()
+    val a = db.store
+    val b = new ParquetNshmStore(spark, dir)
+    def rates() = a.table("rupture").select("nshm_id", "rate").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(a.table("rupture").count() === 2)
+
+    b.append("rupture", ruptures((10L, 10L, 0.5)))
+    assert(a.table("rupture").count() === 3)
+
+    // an overwrite deletes the files A listed: A must re-list, not fail
+    b.merge("rupture", ruptures((10L, 10L, 0.7), (11L, 11L, 0.9)), Seq("fault_system", "nshm_id"))
+    assert(rates() === Map(0L -> 0.01, 1L -> 0.002, 10L -> 0.7, 11L -> 0.9))
+
+    a.append("rupture", ruptures((12L, 12L, 0.3)))
+    assert(rates()(12L) === 0.3)
+    assert(b.table("rupture").count() === 5)
+  }
+}

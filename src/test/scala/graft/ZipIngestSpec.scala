@@ -1,6 +1,6 @@
 package graft
 
-import graft.nshm.{FaultSystem, Ingest, NshmDb}
+import graft.nshm.{FaultSystem, Ingest, NshmDb, Schemas}
 import graft.ZipFixtures.writeBranchZip
 
 /** End-to-end composite-solution ingestion from branch zip archives
@@ -51,6 +51,17 @@ class ZipIngestSpec extends SparkSpec {
     java.nio.file.Files.writeString(notZip, "not a zip")
     val e2 = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, notZip.toString))
     assert(e2.getMessage.contains(notZip.toString))
+  }
+
+  test("reopening a store through a file: URI keeps every row") {
+    val dir = s"/tmp/uristore_${System.nanoTime()}"
+    val db = NshmDb.open(spark, dir)
+    Ingest.loadComposite(db, Seq(Ingest.mergeSolutionZips(
+      spark, Seq((1.0, writeBranchZip(rate0 = 0.01, rate1 = 0.002, mfdRate = 0.4))))))
+    def counts(db: NshmDb) = Schemas.all.keys.map(n => n -> db.store.table(n).count()).toMap
+    val before = counts(db)
+    assert(before("rupture") === 2 && before("fault_plane") === 2)
+    assert(counts(NshmDb.open(spark, s"file:$dir")) === before)
   }
 
   test("CLI generator: manifest → merged branches → parquet store round-trip " +
