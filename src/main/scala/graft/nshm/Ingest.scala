@@ -103,12 +103,6 @@ object Ingest {
     first.join(merged, keyCols)
   }
 
-  /** U1 (api.py:546-562): vertical concat of per-system solutions. */
-  def stackSystems(solutions: Seq[DataFrame]): DataFrame = {
-    require(solutions.nonEmpty, "No solutions to stack.")
-    solutions.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
   /** One logic-tree branch solution parsed from its archive members
     * (≙ NSHMSolution, api.py:432-452).
     */
@@ -173,15 +167,38 @@ object Ingest {
     val faults = parseFaultSectionsJson(spark, geo)
     val faultSystem =
       if (faults.isEmpty) FaultSystem.Crustal else faults.head.faultSystem
+    val indices = members(RuptureFaultJoinPath)
+    val badLines = malformedIndexLines(indices)
+    if (badLines.nonEmpty)
+      throw new IllegalArgumentException(
+        s"Branch archive $path: $RuptureFaultJoinPath has malformed rows (want rupture_id, " +
+          s"n, then n fault ids) at line ${badLines.mkString(", ")}")
     val joinTable = parseRaggedIndices(
-      spark.createDataset(members(RuptureFaultJoinPath).linesIterator.toSeq).toDF("value"),
-      faultSystem)
+      spark.createDataset(indices.linesIterator.toSeq).toDF("value"), faultSystem)
     val props = extractRuptures(
       csvDf(spark, members(RupturePropertiesPath)),
       csvDf(spark, members(RuptureRatesPath)),
       faultSystem)
     val mfds = members.get(MfdsPath).map(m => meltMfds(csvDf(spark, m), faultSystem))
     Solution(faults, props, joinTable, mfds, faultSystem)
+  }
+
+  /** 1-based numbers of the non-blank lines after the header of an
+    * indices member that are not an integer rupture id, a non-negative
+    * integer count n and exactly n integer fault ids (trailing empty
+    * fields allowed). Checked up front, with no Spark job:
+    * [[parseRaggedIndices]] would drop such a row as a header, fail a cast
+    * in a later job, or truncate its fault ids.
+    */
+  private def malformedIndexLines(csv: String): Seq[Int] = {
+    def id(f: String) = f.matches("[0-9]+") && f.toLongOption.nonEmpty
+    def wellFormed(line: String) = {
+      val fields = line.split(",", -1).reverse.dropWhile(_.isEmpty).reverse
+      fields.length >= 2 && fields.forall(id) && fields(1).toIntOption.contains(fields.length - 2)
+    }
+    csv.linesIterator.zipWithIndex.drop(1).collect {
+      case (line, i) if line.trim.nonEmpty && !wellFormed(line) => i + 1
+    }.toSeq
   }
 
   /** Weighted merge of branch archives of ONE fault system
@@ -246,8 +263,8 @@ object Ingest {
   }
 
   /** S6 (api.py:244-277,475-476): fault_sections.geojson
-    * FeatureCollection → FaultInfo list with plane geometry. Parsed with
-    * `spark.read.json(multiLine)` + explode (distributed); the result is
+    * FeatureCollection text → FaultInfo list with plane geometry. Parsed
+    * with `spark.read.json` + explode (distributed); the result is
     * collected at the API boundary exactly like the reference returns a
     * Python list. Coordinates arrive (lon, lat); dip direction falls back
     * to the trace azimuth + 90 when `DipDir` is absent (F3), consecutive
@@ -257,18 +274,9 @@ object Ingest {
     * parse on the driver with one IllegalArgumentException naming its
     * FaultID.
     */
-  def parseFaultSections(spark: SparkSession, path: String): Seq[FaultInfo] =
-    parseFeatureFrame(spark.read.option("multiLine", true).json(path))
-
-  /** Same, from an in-memory GeoJSON string (zip-member ingestion). */
   def parseFaultSectionsJson(spark: SparkSession, json: String): Seq[FaultInfo] = {
     import spark.implicits._
-    parseFeatureFrame(spark.read.json(spark.createDataset(Seq(json))))
-  }
-
-  private def parseFeatureFrame(raw: DataFrame): Seq[FaultInfo] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
+    val raw = spark.read.json(spark.createDataset(Seq(json)))
     // F3-F5 are pure per-row trig — they run distributed inside the map;
     // only the finished corner arrays cross the .collect() API boundary
     // (the reference returns a Python list, api.py:244-277).

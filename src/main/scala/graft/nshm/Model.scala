@@ -14,10 +14,6 @@ object FaultSystem {
   val Hikurangi = 1
   val Puysegur = 2
   val Crustal = 3
-  def name(id: Int): String = id match {
-    case 1 => "Hikurangi"; case 2 => "Puysegur"; case 3 => "Crustal"
-    case other => s"Unknown($other)"
-  }
 }
 
 /** A depth-aligned quadrilateral fault plane; corners TL,TR,BR,BL as

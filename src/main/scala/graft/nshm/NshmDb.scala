@@ -48,23 +48,15 @@ final class NshmDb(val store: NshmStore) {
     * J7 join → per-rupture flag aggregation (A5) → HAVING (A6/A7) →
     * top-k by rate DESC NULLS LAST (O1). Returns the reference's 7
     * columns: rupture_id, nshm_id, fault_system, magnitude, area, len,
-    * rate.
-    *
-    * @param ignoreZeroBounds opt-in bug-compat with the reference, which
-    *   drops a bound of exactly 0.0 via Python truthiness
-    *   (query.py:298-311). Default false: a zero bound is a real bound.
+    * rate. A bound of exactly 0.0 is a real bound (the reference drops
+    * it via Python truthiness, query.py:298-311).
     */
   def queryRuptures(
       queryStr: String,
       magnitudeBounds: (Option[Double], Option[Double]) = (None, None),
       rateBounds: (Option[Double], Option[Double]) = (None, None),
       limit: Int = 100,
-      faultCountLimit: Option[Int] = None,
-      ignoreZeroBounds: Boolean = false): DataFrame = {
-    def eff(b: (Option[Double], Option[Double])) =
-      if (!ignoreZeroBounds) b
-      else (b._1.filter(_ != 0.0), b._2.filter(_ != 0.0))
-    val (magnitudeBoundsEff, rateBoundsEff) = (eff(magnitudeBounds), eff(rateBounds))
+      faultCountLimit: Option[Int] = None): DataFrame = {
     val tree = Parser.parse(queryStr)
     val compiled = BoolSetCompiler.compile(tree, col("name"))
     val r = rupture
@@ -75,10 +67,10 @@ final class NshmDb(val store: NshmStore) {
         broadcast(parentFault).as("pf"),
         col("f.parent_id") === col("pf.parent_id"))
       .filter(r("rate").isNotNull)
-    magnitudeBoundsEff._1.foreach(lo => base = base.filter(r("magnitude") >= lo))
-    magnitudeBoundsEff._2.foreach(hi => base = base.filter(r("magnitude") <= hi))
-    rateBoundsEff._1.foreach(lo => base = base.filter(r("rate") >= lo))
-    rateBoundsEff._2.foreach(hi => base = base.filter(r("rate") <= hi))
+    magnitudeBounds._1.foreach(lo => base = base.filter(r("magnitude") >= lo))
+    magnitudeBounds._2.foreach(hi => base = base.filter(r("magnitude") <= hi))
+    rateBounds._1.foreach(lo => base = base.filter(r("rate") >= lo))
+    rateBounds._2.foreach(hi => base = base.filter(r("rate") <= hi))
 
     val aggCols = Seq(
       max(r("nshm_id")).as("nshm_id"),
@@ -454,9 +446,11 @@ object NshmDb {
     sorted(math.min(idx, sorted.length - 1))
   }
 
-  def inMemory(spark: SparkSession): NshmDb = new NshmDb(new InMemoryNshmStore(spark))
+  /** The one way to get a store: open (creating any missing table) the
+    * parquet store under `dir`.
+    */
   def open(spark: SparkSession, dir: String): NshmDb = {
-    val store = new ParquetNshmStore(spark, dir)
+    val store = new NshmStore(spark, dir)
     store.create()
     new NshmDb(store)
   }

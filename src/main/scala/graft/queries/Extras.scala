@@ -455,9 +455,8 @@ object Extras extends QueryPack {
         .orderBy(col("p_partkey"))
     })
 
-  /** Bucketed co-located join (the [[graft.nshm.Catalog]] layout proved
-    * on the fact tables): orders and lineitem persisted `bucketBy` the
-    * join key, then joined WITHOUT an Exchange on either side — at the
+  /** Bucketed co-located join: orders and lineitem persisted `bucketBy`
+    * the join key, then joined WITHOUT an Exchange on either side — at the
     * 100 TB grain this is the difference between re-shuffling both
     * fact tables on every join and paying the layout cost once at
     * ingest. The write happens inside the query so the gate replays the

@@ -1,31 +1,25 @@
 package graft
 
 import graft.nshm.{FaultSystem, Ingest}
-import java.nio.file.{Files, Paths}
 
 class GeoJsonSpec extends SparkSpec {
 
-  private def writeGeoJson(): String = {
-    val json =
-      """{"type": "FeatureCollection", "features": [
-        |  {"type": "Feature",
-        |   "properties": {"FaultID": 1, "ParentName": "Alpine Fault", "UpDepth": 0.0,
-        |                  "LowDepth": 10.0, "DipDeg": 90.0, "Rake": 180.0, "DipDir": null},
-        |   "geometry": {"type": "LineString",
-        |                "coordinates": [[172.0, -42.0], [172.0, -42.0], [173.0, -42.5], [174.0, -43.0]]}},
-        |  {"type": "Feature",
-        |   "properties": {"FaultID": 2, "ParentName": "Kakapo", "UpDepth": 2.0,
-        |                  "LowDepth": 12.0, "DipDeg": 45.0, "Rake": 90.0, "DipDir": 135.0},
-        |   "geometry": {"type": "LineString",
-        |                "coordinates": [[171.0, -44.0], [171.5, -44.2]]}}
-        |]}""".stripMargin
-    val p = Paths.get(s"/tmp/fault_sections_${System.nanoTime()}.geojson")
-    Files.writeString(p, json)
-    p.toString
-  }
+  private val sectionsJson =
+    """{"type": "FeatureCollection", "features": [
+      |  {"type": "Feature",
+      |   "properties": {"FaultID": 1, "ParentName": "Alpine Fault", "UpDepth": 0.0,
+      |                  "LowDepth": 10.0, "DipDeg": 90.0, "Rake": 180.0, "DipDir": null},
+      |   "geometry": {"type": "LineString",
+      |                "coordinates": [[172.0, -42.0], [172.0, -42.0], [173.0, -42.5], [174.0, -43.0]]}},
+      |  {"type": "Feature",
+      |   "properties": {"FaultID": 2, "ParentName": "Kakapo", "UpDepth": 2.0,
+      |                  "LowDepth": 12.0, "DipDeg": 45.0, "Rake": 90.0, "DipDir": 135.0},
+      |   "geometry": {"type": "LineString",
+      |                "coordinates": [[171.0, -44.0], [171.5, -44.2]]}}
+      |]}""".stripMargin
 
   test("parseFaultSections: GeoJSON → FaultInfo with planes (S6/F3-F5, api.py:244-277)") {
-    val faults = Ingest.parseFaultSections(spark, writeGeoJson())
+    val faults = Ingest.parseFaultSectionsJson(spark, sectionsJson)
     assert(faults.map(_.name) === Seq("Alpine Fault", "Kakapo"))
     assert(faults.forall(_.faultSystem === FaultSystem.Crustal))
 
@@ -80,7 +74,7 @@ class GeoJsonSpec extends SparkSpec {
 
   test("registerViews exposes the tables to spark.sql (S2)") {
     import spark.implicits._
-    val db = graft.nshm.NshmDb.inMemory(spark)
+    val db = freshDb()
     db.store.append("parent_fault", Seq((1L, "Alpine Fault")).toDF("parent_id", "name"))
     db.store.append(
       "fault",

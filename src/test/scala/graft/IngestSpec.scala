@@ -59,15 +59,6 @@ class IngestSpec extends SparkSpec {
     assert(got(0).getAs[Double]("rate") === 20.0)
   }
 
-  test("stackSystems: vertical concat tolerating missing columns (≙ api.py:546-562)") {
-    val a = Seq((1L, 3)).toDF("nshm_id", "fault_system")
-    val b = Seq((2L, 1, 0.5)).toDF("nshm_id", "fault_system", "rate")
-    val got = Ingest.stackSystems(Seq(a, b))
-    assert(got.count() === 2)
-    assert(got.columns.toSet === Set("nshm_id", "fault_system", "rate"))
-    intercept[IllegalArgumentException](Ingest.stackSystems(Seq.empty))
-  }
-
   test("inferDipDirection: strike azimuth + 90 in [0, 360) (≙ api.py:201-220)") {
     // due-north strike → dip direction east (90°)
     val dd = Ingest.inferDipDirection(173.0, -43.0, 173.0, -42.0)

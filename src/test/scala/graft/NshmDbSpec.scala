@@ -2,17 +2,16 @@ package graft
 
 import graft.nshm._
 
-/** Mirrors /root/reference/tests/test_nshmdb.py over an in-memory store:
-  * the Alpine-Fault micro-fixture (test_nshmdb.py:21-33) plus insert and
+/** Mirrors the reference's tests/test_nshmdb.py over a store in a fresh
+  * temp dir (≙ the reference's SQLite file in a tmp dir): the
+  * Alpine-Fault micro-fixture (test_nshmdb.py:21-33) plus insert and
   * error paths.
   */
 class NshmDbSpec extends SparkSpec {
 
-  private def freshDb: NshmDb = NshmDb.inMemory(spark)
-
   private def alpineDb: NshmDb = {
     import spark.implicits._
-    val db = freshDb
+    val db = freshDb()
     db.store.append("parent_fault", Seq((1L, "Alpine Fault")).toDF("parent_id", "name"))
     db.store.append(
       "fault",
@@ -45,7 +44,7 @@ class NshmDbSpec extends SparkSpec {
 
   test("get_rupture with no fault links (≙ test_nshmdb.py:36-50)") {
     import spark.implicits._
-    val db = freshDb
+    val db = freshDb()
     db.store.append(
       "rupture",
       Seq((1L, 3, 1L, 25.0, 6.5, 10.0, 0.01))
@@ -56,7 +55,7 @@ class NshmDbSpec extends SparkSpec {
 
   test("get_fault_names (≙ test_nshmdb.py:53-60)") {
     import spark.implicits._
-    val db = freshDb
+    val db = freshDb()
     db.store.append("parent_fault", Seq((1L, "Fault A"), (2L, "Fault B")).toDF("parent_id", "name"))
     assert(db.getFaultNames === Set("Fault A", "Fault B"))
   }
@@ -145,16 +144,13 @@ class NshmDbSpec extends SparkSpec {
     assert(ids(db.queryRuptures("Alpine Fault", faultCountLimit = Some(1))) === Set(1L))
     // limit applies after the rate sort
     assert(ids(db.queryRuptures("Alpine Fault", limit = 1)) === Set(1L))
-    // zero bound is honored by default...
+    // zero bound is honored (the reference drops it, query.py:298-311)
     assert(ids(db.queryRuptures("Alpine Fault", rateBounds = (None, Some(0.0)))) === Set.empty)
-    // ...and dropped under reference bug-compat (query.py:298-311)
-    assert(ids(db.queryRuptures("Alpine Fault", rateBounds = (None, Some(0.0)),
-      ignoreZeroBounds = true)) === Set(1L, 2L))
   }
 
   test("get_fault_info (≙ test_nshmdb.py:136-151) and miss raises (≙ :175-178)") {
     import spark.implicits._
-    val db = freshDb
+    val db = freshDb()
     db.store.append("parent_fault", Seq((1L, "Fault A")).toDF("parent_id", "name"))
     db.store.append(
       "fault",
@@ -171,7 +167,7 @@ class NshmDbSpec extends SparkSpec {
   }
 
   test("insert_many_faults without planes (≙ test_nshmdb.py:181-203)") {
-    val db = freshDb
+    val db = freshDb()
     db.insertManyFaults(Seq(
       FaultInfo(FaultSystem.Crustal, 1L, "Fault A", 90.0, None),
       FaultInfo(FaultSystem.Crustal, 2L, "Fault B", 45.0, Some(1))))
@@ -180,7 +176,7 @@ class NshmDbSpec extends SparkSpec {
   }
 
   test("insert_many_faults with planes (≙ test_nshmdb.py:206-232)") {
-    val db = freshDb
+    val db = freshDb()
     val geom = Fault(Vector(Plane(alpineCorners)))
     db.insertManyFaults(Seq(
       FaultInfo(FaultSystem.Crustal, 1L, "Alpine Fault", 90.0, None, Some(geom))))
@@ -191,7 +187,7 @@ class NshmDbSpec extends SparkSpec {
 
   test("insert_many_ruptures with NSHM→surrogate translation (≙ test_nshmdb.py:235-269)") {
     import spark.implicits._
-    val db = freshDb
+    val db = freshDb()
     db.insertManyFaults(Seq(FaultInfo(FaultSystem.Crustal, 1L, "Fault A", 90.0, None)))
     val ruptures = Seq((1L, 6.5, 100.0, 10.0, 0.01, 3))
       .toDF("nshm_id", "magnitude", "area", "len", "rate", "fault_system")
@@ -206,7 +202,7 @@ class NshmDbSpec extends SparkSpec {
 
   test("insert_magnitude_frequency_distribution (≙ test_nshmdb.py:272-300)") {
     import spark.implicits._
-    val db = freshDb
+    val db = freshDb()
     db.insertManyFaults(Seq(FaultInfo(FaultSystem.Crustal, 1L, "Fault A", 90.0, None)))
     db.insertMfds(Seq((1L, 3, 6.5, 0.01)).toDF("nshm_id", "fault_system", "magnitude", "rate"))
     val rows = db.store.table("magnitude_frequency_distribution")
@@ -216,7 +212,7 @@ class NshmDbSpec extends SparkSpec {
   }
 
   test("parent upsert dedups on natural key (≙ INSERT OR IGNORE, nshmdb.py:263-265)") {
-    val db = freshDb
+    val db = freshDb()
     db.insertManyFaults(Seq(FaultInfo(FaultSystem.Crustal, 1L, "Fault A", 90.0, None)))
     db.insertManyFaults(Seq(FaultInfo(FaultSystem.Hikurangi, 7L, "Fault A", 10.0, None)))
     assert(db.store.table("parent_fault").count() === 1)
@@ -225,7 +221,7 @@ class NshmDbSpec extends SparkSpec {
 
   test("subduction fault naming splits per section (F6, nshmdb.py:556-563)") {
     import spark.implicits._
-    val db = freshDb
+    val db = freshDb()
     db.store.append("parent_fault", Seq((1L, "Hikurangi Interface")).toDF("parent_id", "name"))
     db.store.append(
       "fault",

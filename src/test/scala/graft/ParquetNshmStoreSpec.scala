@@ -1,22 +1,23 @@
 package graft
 
-import graft.nshm.{FaultSystem, Ingest, NshmDb, ParquetNshmStore}
+import graft.nshm.{FaultSystem, Ingest, NshmDb, Schemas}
 import graft.ZipFixtures.writeBranchZip
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.Listeners
 
-/** The parquet store resolves each table's relation once per table
-  * version: building a query over resolved tables runs no job, and every
-  * write, from this store or another one on the same directory, is seen
-  * by the next read.
+/** The store resolves each table's relation once per table version:
+  * building a query over resolved tables runs no job, and every write,
+  * from this store or another one on the same directory, is seen by the
+  * next read.
   */
 class ParquetNshmStoreSpec extends SparkSpec {
   import spark.implicits._
 
   /** A parquet store holding the two-rupture branch fixture. */
   private def populated(): (String, NshmDb) = {
-    val dir = s"/tmp/nshmstore_${System.nanoTime()}"
+    val dir = SparkSpec.tempDir("nshmstore_")
     val db = NshmDb.open(spark, dir)
     Ingest.loadComposite(db, Seq(Ingest.mergeSolutionZips(
       spark, Seq((1.0, writeBranchZip(rate0 = 0.01, rate1 = 0.002, mfdRate = 0.4))))))
@@ -59,7 +60,7 @@ class ParquetNshmStoreSpec extends SparkSpec {
   test("writes through another store on the same directory are seen; own appends at once") {
     val (dir, db) = populated()
     val a = db.store
-    val b = new ParquetNshmStore(spark, dir)
+    val b = NshmDb.open(spark, dir).store
     def rates() = a.table("rupture").select("nshm_id", "rate").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(a.table("rupture").count() === 2)
@@ -68,7 +69,10 @@ class ParquetNshmStoreSpec extends SparkSpec {
     assert(a.table("rupture").count() === 3)
 
     // an overwrite deletes the files A listed: A must re-list, not fail
-    b.merge("rupture", ruptures((10L, 10L, 0.7), (11L, 11L, 0.9)), Seq("fault_system", "nshm_id"))
+    val rows = ruptures((1L, 0L, 0.01), (2L, 1L, 0.002), (10L, 10L, 0.7), (11L, 11L, 0.9))
+    val schema = Schemas.all("rupture")
+    rows.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/rupture")
     assert(rates() === Map(0L -> 0.01, 1L -> 0.002, 10L -> 0.7, 11L -> 0.9))
 
     a.append("rupture", ruptures((12L, 12L, 0.3)))

@@ -1,7 +1,6 @@
 package graft
 
-import graft.nshm.{Catalog, SemVer}
-import org.apache.spark.sql.functions.col
+import graft.nshm.SemVer
 
 /** Physical-plan shape guards: the properties that make these queries
   * scale must not silently regress.
@@ -42,23 +41,6 @@ class PlanSpec extends SparkSpec {
   test("scans prune to the referenced columns only") {
     val p = plan("q_topk")
     assert(p.contains("ReadSchema: struct<o_orderkey:bigint,o_orderstatus:string,o_totalprice:double>"), p)
-  }
-
-  test("partitioned catalog tables prune on fault_system") {
-    import spark.implicits._
-    val store = new graft.nshm.InMemoryNshmStore(spark)
-    store.append(
-      "fault",
-      Seq((1L, 3, 1L, 90.0, Option.empty[Int], 1L), (2L, 1, 2L, 45.0, Option.empty[Int], 1L))
-        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
-    graft.nshm.Schemas.all.keys.filterNot(_ == "fault").foreach { n =>
-      store.append(n, graft.nshm.Schemas.empty(spark, n))
-    }
-    Catalog.save(store, buckets = 2, prefix = "prune_")
-    val cat = Catalog.open(spark, "prune_")
-    val p = cat.table("fault").filter(col("fault_system") === 3)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters") && p.contains("fault_system"), p)
   }
 
   test("range join broadcasts the band table as a nested-loop build side") {

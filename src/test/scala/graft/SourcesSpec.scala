@@ -56,7 +56,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S7: HTTP-backed SolutionProvider resolves a composite over loopback " +
     "(manifest fetch + archive download + dedup)") {
-    import graft.nshm.{HttpSolutionProvider, Ingest, NshmDb, SemVer, SolutionProvider}
+    import graft.nshm.{HttpSolutionProvider, Ingest, SemVer, SolutionProvider}
     import com.sun.net.httpserver.HttpServer
     import java.net.InetSocketAddress
 
@@ -107,7 +107,7 @@ class SourcesSpec extends SparkSpec {
       assert(hits.get(s"/archives/${z2.getFileName}") === 1)
 
       // and the composite loads into the store end-to-end
-      val db = NshmDb.inMemory(spark)
+      val db = freshDb()
       Ingest.loadComposite(db, solutions)
       assert(db.getFaultNames === Set("Alpine Fault", "Kakapo"))
 

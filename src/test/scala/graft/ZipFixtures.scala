@@ -20,10 +20,24 @@ object ZipFixtures {
       |"geometry":{"type":"LineString","coordinates":[[171.0,-44.0],[171.5,-44.2]]}}
       |]}""".stripMargin
 
-  /** Writes a branch archive; members named in `omit` are left out. */
+  /** The two ruptures' ragged rows: 0 on faults 1 and 2, 1 on fault 2. */
+  val twoRuptureIndices: String =
+    """Rupture Index,Num Sections,# 1,# 2
+      |0,2,1,2
+      |1,1,2""".stripMargin
+
+  /** Writes a branch archive; members named in `omit` are left out. The
+    * archive is named after its fresh directory, so every archive's file
+    * name is unique (SourcesSpec serves archives by file name).
+    */
   def writeBranchZip(
-      rate0: Double, rate1: Double, mfdRate: Double, omit: Set[String] = Set.empty): String = {
-    val path = s"/tmp/branch_${System.nanoTime()}.zip"
+      rate0: Double,
+      rate1: Double,
+      mfdRate: Double,
+      omit: Set[String] = Set.empty,
+      indices: String = twoRuptureIndices): String = {
+    val dir = java.nio.file.Paths.get(SparkSpec.tempDir("branch_"))
+    val path = dir.resolve(s"${dir.getFileName}.zip").toString
     val zos = new ZipOutputStream(new FileOutputStream(path))
     def member(name: String, content: String): Unit =
       if (!omit.contains(name)) {
@@ -40,10 +54,7 @@ object ZipFixtures {
       s"""Rupture Index,Annual Rate
          |0,$rate0
          |1,$rate1""".stripMargin)
-    member(Ingest.RuptureFaultJoinPath,
-      """Rupture Index,Num Sections,# 1,# 2
-        |0,2,1,2
-        |1,1,2""".stripMargin)
+    member(Ingest.RuptureFaultJoinPath, indices)
     member(Ingest.MfdsPath,
       s"""Section Index,6.5,7.0
          |1,$mfdRate,0.0

@@ -27,7 +27,7 @@ class ZipIngestSpec extends SparkSpec {
     val mfds = merged.mfds.get.orderBy("nshm_id", "magnitude").collect()
     assert(mfds.length === 2)
 
-    val db = NshmDb.inMemory(spark)
+    val db = freshDb()
     Ingest.loadComposite(db, Seq(merged))
     assert(db.getFaultNames === Set("Alpine Fault", "Kakapo"))
     assert(db.store.table("rupture").count() === 2)
@@ -47,14 +47,30 @@ class ZipIngestSpec extends SparkSpec {
     assert(e.getMessage.contains(Ingest.RuptureFaultJoinPath))
     assert(!e.getMessage.contains(Ingest.RuptureRatesPath))
 
-    val notZip = java.nio.file.Files.createTempFile("branch", ".zip")
+    val notZip = java.nio.file.Paths.get(SparkSpec.tempDir("notzip_"), "branch.zip")
     java.nio.file.Files.writeString(notZip, "not a zip")
     val e2 = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, notZip.toString))
     assert(e2.getMessage.contains(notZip.toString))
+
+    // indices rows that would be dropped as a header, fail a cast deep in
+    // a later job, or be truncated to the ids listed: one error at load
+    // naming the archive, the member and each bad line
+    val header = "Rupture Index,Num Sections,# 1,# 2"
+    for ((rows, lines) <- Seq(
+        Seq("0,2,1,2", "5.0,2,1,2") -> "line 3",
+        Seq("0,two,1,2", "1,1,2") -> "line 2",
+        Seq("0,2,1,2", "1,3,2") -> "line 3",
+        Seq("0,x,1", "", "1,1,2,", "1,2,2,,") -> "line 2, 5")) {
+      val bad = writeBranchZip(0.01, 0.002, 0.4, indices = (header +: rows).mkString("\n"))
+      val e3 = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, bad))
+      assert(e3.getMessage.contains(bad), e3.getMessage)
+      assert(e3.getMessage.contains(Ingest.RuptureFaultJoinPath), e3.getMessage)
+      assert(e3.getMessage.endsWith(lines), e3.getMessage)
+    }
   }
 
   test("reopening a store through a file: URI keeps every row") {
-    val dir = s"/tmp/uristore_${System.nanoTime()}"
+    val dir = SparkSpec.tempDir("uristore_")
     val db = NshmDb.open(spark, dir)
     Ingest.loadComposite(db, Seq(Ingest.mergeSolutionZips(
       spark, Seq((1.0, writeBranchZip(rate0 = 0.01, rate1 = 0.002, mfdRate = 0.4))))))
@@ -69,7 +85,7 @@ class ZipIngestSpec extends SparkSpec {
     import graft.nshm.NshmDbGenerator
     val z1 = writeBranchZip(rate0 = 0.01, rate1 = 0.002, mfdRate = 0.4)
     val z2 = writeBranchZip(rate0 = 0.03, rate1 = 0.004, mfdRate = 0.8)
-    val manifest = s"/tmp/manifest_${System.nanoTime()}.csv"
+    val manifest = s"${SparkSpec.tempDir("manifest_")}/manifest.csv"
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(manifest),
       s"""# group,weight,path
@@ -78,7 +94,7 @@ class ZipIngestSpec extends SparkSpec {
          |CRU,0.75,$z2
          |CRU,0.99,$z2
          |""".stripMargin) // header + duplicate path both ignored
-    val outDir = s"/tmp/gendb_${System.nanoTime()}"
+    val outDir = SparkSpec.tempDir("gendb_")
 
     val cfg = NshmDbGenerator.parseArgs(
       Seq("1.0.4", outDir, "--manifest", manifest))
@@ -94,7 +110,7 @@ class ZipIngestSpec extends SparkSpec {
     assert(db.store.table("magnitude_frequency_distribution").count() === 2)
 
     // skip flags suppress exactly their insert (fresh store)
-    val outDir2 = s"/tmp/gendb_${System.nanoTime()}"
+    val outDir2 = SparkSpec.tempDir("gendb_")
     NshmDbGenerator.run(spark, NshmDbGenerator.parseArgs(Seq(
       "1.0", outDir2, "--manifest", manifest,
       "--skip-rupture-creation", "--skip-mfds-creation")))
@@ -109,11 +125,11 @@ class ZipIngestSpec extends SparkSpec {
     // a malformed manifest line past the header is one clear error naming
     // the manifest, the line number and the line — never a dropped branch
     for (bad <- Seq("CRU,0.5", s"CRU,O.5,$z2")) {
-      val badManifest = s"/tmp/manifest_bad_${System.nanoTime()}.csv"
+      val badManifest = s"${SparkSpec.tempDir("manifest_")}/bad.csv"
       java.nio.file.Files.writeString(java.nio.file.Paths.get(badManifest),
         s"# comment\ngroup,weight,path\nCRU,0.25,$z1\n$bad\n")
       val e = intercept[IllegalArgumentException](NshmDbGenerator.run(spark,
-        NshmDbGenerator.parseArgs(Seq("1.0", s"/tmp/gendb_${System.nanoTime()}",
+        NshmDbGenerator.parseArgs(Seq("1.0", SparkSpec.tempDir("gendb_"),
           "--manifest", badManifest))))
       assert(e.getMessage.contains(badManifest), e.getMessage)
       assert(e.getMessage.contains("line 4"), e.getMessage)
