@@ -168,8 +168,10 @@ final class NshmDb(val store: NshmStore) {
 
   /** Batched hydration: J3 4-way join + per-fault plane assembly (A9) for
     * many ruptures at once. Plane order is made deterministic by sorting
-    * on (parent_id, plane_id) ≙ the reference's ORDER BY f.parent_id +
-    * SQLite rowid order (nshmdb.py:525).
+    * on (rupture_id, parent_id, plane_id) ≙ the reference's ORDER BY
+    * f.parent_id + SQLite rowid order (nshmdb.py:525). The sort runs on the
+    * driver over the collected rows: the key is unique and the rows few,
+    * so a Spark sort would only add a range-partition exchange.
     */
   def getRupturesFaults(ruptureIds: Seq[Long]): Map[Long, Map[String, Fault]] = {
     if (ruptureIds.isEmpty) return Map.empty
@@ -182,8 +184,8 @@ final class NshmDb(val store: NshmStore) {
       .select(Seq(
         col("rf.rupture_id"), col("f.parent_id"), col("pf.name"),
         col("f.fault_id"), col("f.fault_system"), fp("plane_id")) ++ planeCols(fp): _*)
-      .orderBy(col("rf.rupture_id"), col("f.parent_id"), fp("plane_id"))
       .collect()
+      .sortBy(r => (r.getLong(0), r.getLong(1), r.getLong(5)))
 
     val out = scala.collection.mutable.LinkedHashMap.empty[Long, scala.collection.mutable.LinkedHashMap[String, Vector[Plane]]]
     rows.foreach { row =>
@@ -206,7 +208,8 @@ final class NshmDb(val store: NshmStore) {
   }
 
   /** ≙ get_fault (nshmdb.py:368-415). Corners in WGS (storage space);
-    * apply `.toNztm` per plane for the projected view.
+    * apply `.toNztm` per plane for the projected view. Planes are sorted
+    * by plane_id on the driver, after the collect.
     */
   def getFault(faultSystem: Int, faultNshmId: Long): Fault = {
     val fp = faultPlane
@@ -214,8 +217,8 @@ final class NshmDb(val store: NshmStore) {
       .join(broadcast(fault).as("f"), fp("fault_id") === col("f.fault_id"))
       .filter(col("f.nshm_id") === faultNshmId && col("f.fault_system") === faultSystem)
       .select(fp("plane_id") +: planeCols(fp): _*)
-      .orderBy(fp("plane_id"))
       .collect()
+      .sortBy(_.getLong(0))
     Fault(rows.map(planeAt(_, 1)).toVector)
   }
 
@@ -260,50 +263,37 @@ final class NshmDb(val store: NshmStore) {
     fault.select("nshm_id").distinct().collect().map(_.getLong(0)).toSet
 
   /** ≙ most_likely_fault (nshmdb.py:165-248): pseudo-activity rate per
-    * parent fault. F1 magnitude rounding is ceiling-with-clamp (the
-    * smallest stored magnitude ≥ target, clamped to the max stored —
-    * searchsorted semantics, nshmdb.py:215-221). The dynamic OR-of-pairs
-    * predicate (J11) becomes a broadcast lookup-join on (name, magnitude).
-    * Input is an ordered Seq ≙ the reference's insertion-ordered dict.
+    * parent fault. One Spark action collects the rupture's MFD bins
+    * (parent name, magnitude, rate: its faults × their bins, a few
+    * hundred rows); the rest runs on the driver, as in the reference.
+    * F1 magnitude rounding is [[NshmDb.ceilingWithClamp]] over all the
+    * rupture's distinct non-null magnitudes (searchsorted semantics,
+    * nshmdb.py:215-221); a parent scores the sum of its non-null rates at
+    * its snapped magnitude, and has no entry if it stores no such rate.
+    * Input is an ordered Seq of distinct names ≙ the reference's dict.
     */
   def mostLikelyFault(
       faultSystem: Int,
       ruptureNshmId: Long,
       parentFaultMagnitudes: Seq[(String, Double)]): Map[String, Double] = {
-    import spark.implicits._
-    // One plan, one action: the rupture-restricted mfd join is built once;
-    // the F1 ceiling-with-clamp snap (nshmdb.py:215-221) is expressed
-    // relationally — distinct magnitudes × broadcast targets, then
-    // coalesce(min(mag ≥ target), max(mag)) — instead of a separate
-    // collect + driver-side searchsorted.
-    val base = mfd.as("mfd")
+    val bins = mfd.as("mfd")
       .join(ruptureFaults.as("rf"), col("rf.fault_id") === col("mfd.fault_id"))
       .join(rupture.as("r"), col("r.rupture_id") === col("rf.rupture_id"))
       .join(broadcast(fault).as("f"), col("f.fault_id") === col("mfd.fault_id"))
       .join(broadcast(parentFault).as("pf"), col("f.parent_id") === col("pf.parent_id"))
       .filter(col("r.nshm_id") === ruptureNshmId && col("r.fault_system") === faultSystem)
-      .select(
-        col("pf.name").as("pname"),
-        col("mfd.magnitude").as("magnitude"),
-        col("mfd.rate").as("rate"))
-
-    val targets = parentFaultMagnitudes.toDF("pname", "target")
-    val snapped = base
-      .select("magnitude")
-      .distinct()
-      .crossJoin(broadcast(targets))
-      .groupBy("pname", "target")
-      .agg(coalesce(
-        min(when(col("magnitude") >= col("target"), col("magnitude"))),
-        max(col("magnitude"))).as("magnitude"))
-
-    base
-      .join(broadcast(snapped.select("pname", "magnitude")), Seq("pname", "magnitude"))
-      .groupBy("pname")
-      .agg(sum(col("rate")).as("rate"))
+      .filter(col("mfd.magnitude").isNotNull)
+      .select(col("pf.name"), col("mfd.magnitude"), col("mfd.rate"))
       .collect()
-      .map(r => r.getString(0) -> r.getDouble(1))
-      .toMap
+    if (bins.isEmpty) return Map.empty
+
+    val magnitudes = bins.map(_.getDouble(1)).distinct.sorted(Ordering.Double.TotalOrdering)
+    val snapped = parentFaultMagnitudes.map { case (name, target) =>
+      name -> NshmDb.ceilingWithClamp(magnitudes, target)
+    }.toMap
+    bins
+      .filter(r => !r.isNullAt(2) && snapped.get(r.getString(0)).contains(r.getDouble(1)))
+      .groupMapReduce(_.getString(0))(_.getDouble(2))(_ + _)
   }
 
   // ------------------------------------------------------------- inserts
@@ -436,9 +426,10 @@ final class NshmDb(val store: NshmStore) {
 
 object NshmDb {
 
-  /** F1 rounding (nshmdb.py:215-221): the smallest stored value ≥ target,
-    * clamped to the maximum — searchsorted semantics, NOT
-    * nearest-neighbor. `sorted` must be ascending and non-empty.
+  /** F1 rounding (nshmdb.py:215-221), the snap [[NshmDb.mostLikelyFault]]
+    * applies: the smallest stored value ≥ target, clamped to the maximum —
+    * searchsorted semantics, NOT nearest-neighbor. `sorted` must be
+    * ascending and non-empty.
     */
   def ceilingWithClamp(sorted: Array[Double], target: Double): Double = {
     val i = java.util.Arrays.binarySearch(sorted, target)

@@ -71,7 +71,7 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("persisted IVF index probe recall@10 >= 0.9") {
-    val path = java.nio.file.Files.createTempDirectory("ivf_recall").toString
+    val path = SparkSpec.tempDir("ivf_recall")
     Similarity.writeIvfIndex(corpus, path, nCells = nClusters, kmeansIters = 3)
     val r = recallOf(Similarity.probeIvfIndex(path, queries, k = k, nProbe = 2))
     assert(r >= 0.9, s"probeIvfIndex recall@10 = $r")

@@ -9,7 +9,7 @@ class BpeSpec extends SparkSpec {
 
   test("self-pair runs merge leftmost-nonoverlapping; ties break lexicographically") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe_fix").toString
+    val dir = SparkSpec.tempDir("bpe_fix")
     Seq((1L, "aaaa aaa bb", "en", "unit", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")

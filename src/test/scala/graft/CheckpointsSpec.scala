@@ -121,7 +121,7 @@ class CheckpointsSpec extends SparkSpec {
 
   test("with a checkpoint dir: goes reliable, writes there, and round-trips") {
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = SparkSpec.tempDir("graft-ckpt")
     sc.setCheckpointDir(dir)
     try {
       val df = (1 to 1000).map(i => (i.toLong, s"row_$i")).toDF("id", "s")

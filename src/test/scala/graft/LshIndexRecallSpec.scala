@@ -62,7 +62,7 @@ class LshIndexRecallSpec extends SparkSpec {
     import spark.implicits._
     val corpus = corpusDocs.toDF("doc_id", "text")
     val batch = newDocs.toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("lsh_recall").toString
+    val path = SparkSpec.tempDir("lsh_recall")
     Dedup.writeLshIndex(corpus, path)
     val found = Dedup.probeLshIndex(spark, path, batch, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -110,7 +110,7 @@ class LshIndexRecallSpec extends SparkSpec {
 
     val corpus = corpusDocs.toDF("doc_id", "text")
     val batch1 = newDocs.toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("lsh_inc").toString
+    val path = SparkSpec.tempDir("lsh_inc")
     Dedup.writeLshIndex(corpus, path)
     Dedup.appendToLshIndex(batch1, path)
     val found = Dedup.probeLshIndex(
@@ -133,7 +133,7 @@ class LshIndexRecallSpec extends SparkSpec {
     import spark.implicits._
     val corpus = corpusDocs.toDF("doc_id", "text")
     val batch = newDocs.toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("lsh_cap").toString
+    val path = SparkSpec.tempDir("lsh_cap")
     Dedup.writeLshIndex(corpus, path)
     def rows(maxBucket: Int) =
       Dedup.probeLshIndex(spark, path, batch, corpus, maxBucket = maxBucket)

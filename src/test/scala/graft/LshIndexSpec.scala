@@ -18,7 +18,7 @@ class LshIndexSpec extends SparkSpec {
       .filter(col("doc_id") < 200)
       .select(col("doc_id"), col("text"))
       .filter(length(col("text")) >= 3)
-    val path = java.nio.file.Files.createTempDirectory("lsh_self").resolve("idx").toString
+    val path = s"${SparkSpec.tempDir("lsh_self")}/idx"
     queries.Dedup.writeLshIndex(corpus, path)
 
     // expected reachable set, from the same membership the index stores

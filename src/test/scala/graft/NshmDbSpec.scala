@@ -245,4 +245,89 @@ class NshmDbSpec extends SparkSpec {
     val faults = db.getRuptureFaults(1L)
     assert(faults.keySet === Set("Hikurangi Interface: Section 1", "Hikurangi Interface: Section 2"))
   }
+
+  /** Plane `id` of the plane-order fixture: its top edge sits at a latitude
+    * unique to the id, so a test can tell the planes apart.
+    */
+  private def orderPlane(id: Long): Plane = {
+    val lat = -41.0 - id * 0.1
+    Plane.fromFlat(lat, 175.0, lat, 175.5, lat - 0.05, 175.5, lat - 0.05, 175.0, 0.0, 15.0)
+  }
+
+  test("planes come back in plane_id order, whatever order the files hold them in") {
+    import spark.implicits._
+    val db = freshDb()
+    db.store.append("parent_fault",
+      Seq((1L, "Wellington Fault"), (2L, "Ohariu Fault"), (3L, "Hikurangi Interface"))
+        .toDF("parent_id", "name"))
+    db.store.append(
+      "fault",
+      Seq((1L, 3, 10L, 180.0, Option.empty[Int], 1L), (2L, 3, 20L, 180.0, Option.empty[Int], 2L),
+        (3L, 1, 30L, 90.0, Option.empty[Int], 3L))
+        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    // one file per append: plane 3 first, then 2 ahead of 1 and 5 ahead of 4
+    def appendPlanes(planes: (Long, Long)*): Unit = db.store.append(
+      "fault_plane",
+      planes.map { case (id, faultId) =>
+        val c = orderPlane(id).corners
+        (id, c(0)(0), c(0)(1), c(1)(0), c(1)(1), c(2)(0), c(2)(1), c(3)(0), c(3)(1),
+          c(0)(2), c(2)(2), faultId)
+      }.toDF("plane_id", "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
+        "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
+        "top_depth", "bottom_depth", "fault_id").coalesce(1))
+    appendPlanes(3L -> 1L)
+    appendPlanes(2L -> 1L, 5L -> 2L, 1L -> 1L, 6L -> 3L, 4L -> 2L)
+    db.store.append(
+      "rupture",
+      Seq((1L, 3, 1L, 300.0, 7.2, 30.0, 0.002))
+        .toDF("rupture_id", "fault_system", "nshm_id", "area", "magnitude", "len", "rate"))
+    db.store.append(
+      "rupture_faults",
+      Seq((1L, 1L, 2L), (2L, 1L, 3L), (3L, 1L, 1L)).toDF("rupture_fault_id", "rupture_id", "fault_id"))
+
+    def fault(ids: Long*) = Fault(ids.map(orderPlane).toVector)
+    val expected = Map(
+      "Wellington Fault" -> fault(1L, 2L, 3L),
+      "Ohariu Fault" -> fault(4L, 5L),
+      "Hikurangi Interface: Section 3" -> fault(6L))
+    assert(db.getFault(FaultSystem.Crustal, 10L).planes === fault(1L, 2L, 3L).planes)
+    assert(db.getRuptureFaults(1L) === expected)
+    assert(db.query("Wellington Fault").map { case (id, r) => id -> r.faults } === Map(1L -> expected))
+  }
+
+  test("most_likely_fault snaps over all the rupture's magnitudes, per parent (≙ nshmdb.py:165-248)") {
+    import spark.implicits._
+    val db = freshDb()
+    db.store.append("parent_fault", Seq((1L, "Awatere"), (2L, "Clarence")).toDF("parent_id", "name"))
+    // fault 3 is an Awatere section outside the rupture
+    db.store.append(
+      "fault",
+      Seq((1L, 3, 1L, 180.0, Option.empty[Int], 1L), (2L, 3, 2L, 180.0, Option.empty[Int], 2L),
+        (3L, 3, 3L, 180.0, Option.empty[Int], 1L))
+        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    db.store.append(
+      "rupture",
+      Seq((1L, 3, 1L, 200.0, 7.0, 20.0, 0.001))
+        .toDF("rupture_id", "fault_system", "nshm_id", "area", "magnitude", "len", "rate"))
+    db.store.append(
+      "rupture_faults",
+      Seq((1L, 1L, 1L), (2L, 1L, 2L)).toDF("rupture_fault_id", "rupture_id", "fault_id"))
+    db.store.append(
+      "magnitude_frequency_distribution",
+      Seq[(Long, Long, Option[Double], Double)](
+        (1L, 1L, Some(6.0), 0.1), (2L, 1L, Some(7.0), 0.2),
+        (3L, 2L, Some(6.5), 0.3), (4L, 2L, Some(7.5), 0.4), (5L, 2L, None, 9.0),
+        (6L, 3L, Some(6.5), 0.5), (7L, 3L, Some(8.5), 0.6))
+        .toDF("entry_id", "fault_id", "magnitude", "rate"))
+    // the rupture's magnitudes are {6.0, 6.5, 7.0, 7.5}
+    def mlf(targets: (String, Double)*) = db.mostLikelyFault(FaultSystem.Crustal, 1L, targets)
+
+    // 6.2 snaps to 6.5, which only Clarence stores in the rupture
+    assert(mlf("Awatere" -> 6.2, "Clarence" -> 6.2) === Map("Clarence" -> 0.3))
+    // 6.8 snaps to Awatere's 7.0, not Clarence's own 7.5
+    assert(mlf("Clarence" -> 6.8) === Map.empty)
+    assert(mlf("Awatere" -> 6.8) === Map("Awatere" -> 0.2))
+    // below every bin takes the minimum; above every bin clamps to 7.5, not fault 3's 8.5
+    assert(mlf("Awatere" -> 5.0, "Clarence" -> 8.0) === Map("Awatere" -> 0.1, "Clarence" -> 0.4))
+  }
 }

@@ -79,4 +79,22 @@ class ParquetNshmStoreSpec extends SparkSpec {
     assert(rates()(12L) === 0.3)
     assert(b.table("rupture").count() === 5)
   }
+
+  test("warm point lookups submit a bounded number of jobs") {
+    val (_, db) = populated()
+    // (lookup, most jobs it may submit once warm): the broadcasts and the
+    // scan, no sort exchange and no second pass over a join
+    val lookups = Seq[(String, () => Any, Int)](
+      ("getFault", () => db.getFault(FaultSystem.Crustal, 1L), 2),
+      ("getRupture", () => db.getRupture(FaultSystem.Crustal, 0L), 5),
+      ("query", () => db.query("Alpine Fault"), 9),
+      ("mostLikelyFault",
+        () => db.mostLikelyFault(FaultSystem.Crustal, 0L, Seq("Alpine Fault" -> 6.5, "Kakapo" -> 7.0)), 5))
+    lookups.foreach { case (_, call, _) => call() }
+    val over = lookups.flatMap { case (name, call, most) =>
+      val jobs = jobsDuring(call())
+      if (jobs > most) Some(s"$name submitted $jobs jobs, expected at most $most") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
+  }
 }

@@ -118,7 +118,7 @@ class ProductQuantizerSpec extends SparkSpec {
   }
 
   test("persisted index round-trips: probe equals in-memory ADC") {
-    val path = s"/tmp/graft-pq-index-${System.nanoTime()}"
+    val path = SparkSpec.tempDir("graft-pq-index") + "/index"
     ProductQuantizer.writePqIndex(clustered, path, dim, m = 4, k = 8, iters = 1)
     val queries = clustered.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))

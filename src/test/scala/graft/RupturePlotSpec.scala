@@ -55,7 +55,7 @@ class RupturePlotSpec extends SparkSpec {
   }
 
   test("plotRupture: writes the .geojson plot model next to the raster path (S10 stub)") {
-    val dir = Files.createTempDirectory("rupture_plot")
+    val dir = Paths.get(SparkSpec.tempDir("rupture_plot"))
     val out = RupturePlot.plotRupture("t", faults, dir.resolve("rupture_7.png"))
     assert(out === dir.resolve("rupture_7.geojson"))
     val fc = Files.readString(out)

@@ -26,7 +26,7 @@ class SchemaContractSpec extends SparkSpec {
 
   test("validate names the mis-typed column of a bad fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contract_bad").toString
+    val dir = SparkSpec.tempDir("contract_bad")
     Seq((1L, "not-a-time", 2L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
@@ -37,7 +37,7 @@ class SchemaContractSpec extends SparkSpec {
 
   test("validate reports a missing column and a missing table, not just the first problem") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contract_missing").toString
+    val dir = SparkSpec.tempDir("contract_missing")
     Seq((1L, "x", "en", "web")) // n_chars absent
       .toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
@@ -49,7 +49,7 @@ class SchemaContractSpec extends SparkSpec {
 
   test("validate aggregates a mis-typed column, a missing column and a missing table into one error") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contract_drifted").toString
+    val dir = SparkSpec.tempDir("contract_drifted")
     Seq((1L, "not-a-time", 2L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
@@ -65,7 +65,7 @@ class SchemaContractSpec extends SparkSpec {
   test("loadEvents normalizes both encodings to the same instants") {
     import spark.implicits._
     // micros-native fixture: what the refreshed testdata declares
-    val dir = java.nio.file.Files.createTempDirectory("enc_ntz").toString
+    val dir = SparkSpec.tempDir("enc_ntz")
     spark.sql(
       """SELECT CAST(1 AS BIGINT) AS event_id,
                 TIMESTAMP_NTZ'2024-03-01 12:00:00.000123' AS ts,
@@ -73,7 +73,7 @@ class SchemaContractSpec extends SparkSpec {
                 CAST(1.5 AS DOUBLE) AS value, '{}' AS props""")
       .write.parquet(s"$dir/events.parquet")
     // legacy fixture: the same instant as nanos-since-epoch INT64
-    val legacyDir = java.nio.file.Files.createTempDirectory("enc_long").toString
+    val legacyDir = SparkSpec.tempDir("enc_long")
     val us = java.time.LocalDateTime.of(2024, 3, 1, 12, 0, 0, 123000)
       .toInstant(java.time.ZoneOffset.UTC)
     val ns = us.getEpochSecond * 1000000000L + us.getNano
@@ -88,7 +88,7 @@ class SchemaContractSpec extends SparkSpec {
 
   test("load memo: relation reused per session, invalidated when the file changes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tables_memo").toString
+    val dir = SparkSpec.tempDir("tables_memo")
     Seq((1L, "a", "en", "s", 1L)).toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val first = Tables.load(spark, dir, "documents")

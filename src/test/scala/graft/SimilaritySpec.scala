@@ -40,7 +40,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted IVF index: probe equals the inline build; scan prunes to probed cells") {
-    val path = s"/tmp/graft-ivf-index-${System.nanoTime()}"
+    val path = SparkSpec.tempDir("graft-ivf-index") + "/index"
     Similarity.writeIvfIndex(e, path, nCells = 8, kmeansIters = 3)
     val probed = Similarity.probeIvfIndex(path, queries, k = 5, nProbe = 3)
     val inline = Similarity.ivfTopK(e, queries, k = 5, nCells = 8, nProbe = 3, kmeansIters = 3)

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/data"
+  private def tmp(prefix: String): String = SparkSpec.tempDir(prefix) + "/data"
 
   test("ORC round-trip preserves schema and pushes filters to the scan") {
     val dir = tmp("graft-orc")
@@ -39,7 +38,7 @@ class SourcesSpec extends SparkSpec {
 
   test("compaction shrinks a fragmented parquet dir, preserves data, rolls up sizes") {
     import spark.implicits._
-    val dir = s"/tmp/graft-compact-${System.nanoTime()}"
+    val dir = tmp("graft-compact")
     // 20 tiny files
     (1 to 2000).map(i => (i.toLong, s"row_$i")).toDF("id", "s")
       .repartition(20).write.parquet(dir)
@@ -90,7 +89,7 @@ class SourcesSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val cache = java.nio.file.Files.createTempDirectory("graft-http-cache")
+      val cache = java.nio.file.Paths.get(SparkSpec.tempDir("graft-http-cache"))
       val provider = new HttpSolutionProvider(base, cache)
 
       val solutions = SolutionProvider.downloadCompositeSolution(

@@ -19,7 +19,7 @@ object SparkSpec {
     val s = GraftSession.builder("graft-test")
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft-test-warehouse-${System.nanoTime()}")
+      .config("spark.sql.warehouse.dir", tempDir("warehouse_"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

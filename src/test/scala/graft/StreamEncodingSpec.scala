@@ -31,8 +31,8 @@ class StreamEncodingSpec extends SparkSpec {
     // the testdata contract is a single FILE named events.parquet, not a
     // directory — write to a scratch dir and move the part file in place
     def asSingleFile(df: org.apache.spark.sql.DataFrame): String = {
-      val dir = java.nio.file.Files.createTempDirectory("enc_stream")
-      val scratch = java.nio.file.Files.createTempDirectory("enc_scratch").resolve("p")
+      val dir = java.nio.file.Paths.get(SparkSpec.tempDir("enc_stream"))
+      val scratch = java.nio.file.Paths.get(SparkSpec.tempDir("enc_scratch"), "p")
       df.coalesce(1).write.parquet(scratch.toString)
       val part = java.nio.file.Files.list(scratch).iterator()
       val found = Iterator.continually(part).takeWhile(_.hasNext).map(_.next())

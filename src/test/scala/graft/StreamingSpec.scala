@@ -107,7 +107,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("idempotent batch sink: replaying a batch id overwrites, not appends") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString + "/out"
+    val dir = SparkSpec.tempDir("graft-sink") + "/out"
     import spark.implicits._
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "tag")
     EventStreams.writeBatchIdempotent(dir)(b0, 0L)
@@ -120,7 +120,7 @@ class StreamingSpec extends SparkSpec {
 
   test("checkpointed restart resumes exactly-once: no re-reads, no losses") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val base = SparkSpec.tempDir("graft-restart")
     val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
     def run(): Unit = {
       val q = spark.readStream
