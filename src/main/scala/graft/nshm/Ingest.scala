@@ -32,23 +32,30 @@ object Ingest {
       .withColumn("fault_system", lit(faultSystem))
   }
 
-  /** S5/U3 (api.py:362-398): ragged indices CSV — rows of
+  /** S5/U3 (api.py:362-398): ragged indices CSV text — rows of
     * `rupture_id, n, f1..fn` — to one (rupture_id, fault_id) row per pair.
-    * The reference's np.repeat of ids by counts ≡ `explode` of the sliced
-    * per-row fault-id array. Input: a single-column DataFrame of raw lines
-    * (e.g. `spark.read.text`); the header row is dropped by the numeric
-    * guard.
+    * Lines are split and checked once, on the driver (line 1 is a header
+    * if its first field is not an integer; trailing empty fields are
+    * allowed); one IllegalArgumentException names each malformed line.
+    * Spark only explodes the id arrays (≙ np.repeat of ids by counts).
     */
-  def parseRaggedIndices(lines: DataFrame, faultSystem: Int): DataFrame = {
-    val parts = split(col(lines.columns.head), ",")
-    lines
-      .select(parts.as("parts"))
-      .filter(col("parts").getItem(0).rlike("^[0-9]+$"))
-      .select(
-        col("parts").getItem(0).cast("long").as("rupture_id"),
-        slice(col("parts"), lit(3), col("parts").getItem(1).cast("int")).as("fault_ids"))
+  def parseRaggedIndices(spark: SparkSession, csv: String, faultSystem: Int): DataFrame = {
+    import spark.implicits._
+    def id(f: String) = f.matches("[0-9]+") && f.toLongOption.nonEmpty
+    val parsed = csv.linesIterator.zipWithIndex.collect {
+      case (line, i) if line.trim.nonEmpty && !(i == 0 && line.split(",", -1)(0).toLongOption.isEmpty) =>
+        val fields = line.split(",", -1).reverse.dropWhile(_.isEmpty).reverse
+        val wellFormed = fields.length >= 2 && fields.forall(id) &&
+          fields(1).toIntOption.contains(fields.length - 2)
+        Either.cond(wellFormed, (fields(0).toLong, fields.drop(2).map(_.toLong)), i + 1)
+    }.toSeq
+    val badLines = parsed.collect { case Left(n) => n }
+    if (badLines.nonEmpty)
+      throw new IllegalArgumentException(
+        s"$RuptureFaultJoinPath has malformed rows (want rupture_id, n, then n fault ids) " +
+          s"at line ${badLines.mkString(", ")}")
+    parsed.collect { case Right(row) => row }.toDF("rupture_id", "fault_ids")
       .select(col("rupture_id"), explode(col("fault_ids")).as("fault_id"))
-      .select(col("rupture_id"), col("fault_id").cast("long").as("fault_id"))
       .withColumn("fault_system", lit(faultSystem))
   }
 
@@ -157,7 +164,6 @@ object Ingest {
     * archives carry no MFD member → None, as in the reference.
     */
   def loadSolutionZip(spark: SparkSession, path: String): Solution = {
-    import spark.implicits._
     val members = readZipMembers(path, RequiredMembers.toSet + MfdsPath)
     val missing = RequiredMembers.filterNot(members.contains)
     if (missing.nonEmpty)
@@ -167,38 +173,18 @@ object Ingest {
     val faults = parseFaultSectionsJson(spark, geo)
     val faultSystem =
       if (faults.isEmpty) FaultSystem.Crustal else faults.head.faultSystem
-    val indices = members(RuptureFaultJoinPath)
-    val badLines = malformedIndexLines(indices)
-    if (badLines.nonEmpty)
-      throw new IllegalArgumentException(
-        s"Branch archive $path: $RuptureFaultJoinPath has malformed rows (want rupture_id, " +
-          s"n, then n fault ids) at line ${badLines.mkString(", ")}")
-    val joinTable = parseRaggedIndices(
-      spark.createDataset(indices.linesIterator.toSeq).toDF("value"), faultSystem)
+    val joinTable =
+      try parseRaggedIndices(spark, members(RuptureFaultJoinPath), faultSystem)
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"Branch archive $path: ${e.getMessage}", e)
+      }
     val props = extractRuptures(
       csvDf(spark, members(RupturePropertiesPath)),
       csvDf(spark, members(RuptureRatesPath)),
       faultSystem)
     val mfds = members.get(MfdsPath).map(m => meltMfds(csvDf(spark, m), faultSystem))
     Solution(faults, props, joinTable, mfds, faultSystem)
-  }
-
-  /** 1-based numbers of the non-blank lines after the header of an
-    * indices member that are not an integer rupture id, a non-negative
-    * integer count n and exactly n integer fault ids (trailing empty
-    * fields allowed). Checked up front, with no Spark job:
-    * [[parseRaggedIndices]] would drop such a row as a header, fail a cast
-    * in a later job, or truncate its fault ids.
-    */
-  private def malformedIndexLines(csv: String): Seq[Int] = {
-    def id(f: String) = f.matches("[0-9]+") && f.toLongOption.nonEmpty
-    def wellFormed(line: String) = {
-      val fields = line.split(",", -1).reverse.dropWhile(_.isEmpty).reverse
-      fields.length >= 2 && fields.forall(id) && fields(1).toIntOption.contains(fields.length - 2)
-    }
-    csv.linesIterator.zipWithIndex.drop(1).collect {
-      case (line, i) if line.trim.nonEmpty && !wellFormed(line) => i + 1
-    }.toSeq
   }
 
   /** Weighted merge of branch archives of ONE fault system
@@ -269,55 +255,66 @@ object Ingest {
     * Python list. Coordinates arrive (lon, lat); dip direction falls back
     * to the trace azimuth + 90 when `DipDir` is absent (F3), consecutive
     * duplicate trace points are dropped (F4), and planes are constructed
-    * per trace segment (F5) with dip_dir forced to 0 at dip == 90. A
-    * section whose trace has fewer than two distinct points fails the
-    * parse on the driver with one IllegalArgumentException naming its
-    * FaultID.
+    * per trace segment (F5) with dip_dir forced to 0 at dip == 90. Bad
+    * features fail the parse on the driver, one IllegalArgumentException
+    * naming each: first a null required property (by FaultID, else the
+    * `features[i]` index), then a trace of under two distinct points.
     */
   def parseFaultSectionsJson(spark: SparkSession, json: String): Seq[FaultInfo] = {
     import spark.implicits._
     val raw = spark.read.json(spark.createDataset(Seq(json)))
+    val required = Seq("FaultID", "ParentName", "UpDepth", "LowDepth", "DipDeg", "Rake")
     // F3-F5 are pure per-row trig — they run distributed inside the map;
     // only the finished corner arrays cross the .collect() API boundary
     // (the reference returns a Python list, api.py:244-277).
     val built = raw
-      .select(explode(col("features")).as("f"))
+      .select(posexplode(col("features")).as(Seq("i", "f")))
       .select(
         col("f.properties.FaultID").cast("long").as("fault_id"),
         col("f.properties.ParentName").as("name"),
         col("f.properties.UpDepth").cast("double").as("top_km"),
         col("f.properties.LowDepth").cast("double").as("bottom_km"),
-        col("f.properties.DipDir").cast("double").as("dip_dir"),
         col("f.properties.DipDeg").cast("double").as("dip"),
         col("f.properties.Rake").cast("double").as("rake"),
-        col("f.geometry.coordinates").as("coords"))
+        col("f.properties.DipDir").cast("double").as("dip_dir"),
+        col("f.geometry.coordinates").as("coords"),
+        col("i"))
       .map { r =>
+        // Row's primitive getters throw on null: columns 0-5 are flagged, not read
+        val missing = required.zipWithIndex.collect { case (p, j) if r.isNullAt(j) => p }
         val lonLat =
           if (r.isNullAt(7)) Seq.empty
           else r.getSeq[scala.collection.Seq[Double]](7).map(p => (p(0), p(1))).toSeq
         val trace = removeRepeatedPoints(lonLat).map { case (lon, lat) => (lat, lon) }
         // a trace without a segment has no planes: None, rejected below
-        val corners = Option.when(trace.length >= 2) {
+        val corners = Option.when(missing.isEmpty && trace.length >= 2) {
           val dipDir =
-            if (!r.isNullAt(4)) r.getDouble(4)
+            if (!r.isNullAt(6)) r.getDouble(6)
             else inferDipDirection(lonLat(0)._1, lonLat(0)._2, lonLat(1)._1, lonLat(1)._2)
-          planesFromTrace(trace, r.getDouble(2), r.getDouble(3), r.getDouble(5), dipDir)
+          planesFromTrace(trace, r.getDouble(2), r.getDouble(3), r.getDouble(4), dipDir)
             .map(_.corners.map(_.toSeq).toSeq)
         }
-        (r.getLong(0), r.getString(1), r.getDouble(6), corners)
+        val id = Option.unless(r.isNullAt(0))(r.getLong(0))
+        (r.getInt(8), id, r.getString(1), if (missing.isEmpty) r.getDouble(5) else 0.0, missing, corners)
       }
       .collect()
-    val traceless = built.collect { case (id, _, _, None) => id }
+    val incomplete = built.collect { case (i, id, _, _, missing, _) if missing.nonEmpty =>
+      s"${id.fold(s"features[$i]")(n => s"FaultID $n")} (no ${missing.mkString(", ")})"
+    }
+    if (incomplete.nonEmpty)
+      throw new IllegalArgumentException(
+        s"Fault sections missing required properties: ${incomplete.mkString("; ")}")
+    val traceless = built.collect { case (_, id, _, _, _, None) => id.get }
     if (traceless.nonEmpty)
       throw new IllegalArgumentException(
         "Fault sections with fewer than two distinct trace points have no plane: " +
           s"FaultID ${traceless.mkString(", ")}")
     if (built.isEmpty) return Seq.empty
-    val faultSystem = inferFaultSystem(built.head._2)
-    built.toSeq.map { case (id, name, rake, corners) =>
+    val faultSystem = inferFaultSystem(built.head._3)
+    built.toSeq.map { case (_, id, name, rake, _, corners) =>
       FaultInfo(
         faultSystem = faultSystem,
-        faultNshmId = id,
+        faultNshmId = id.get,
         name = name,
         rake = rake,
         tectType = None,

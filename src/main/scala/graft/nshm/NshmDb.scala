@@ -1,6 +1,7 @@
 package graft.nshm
 
 import graft.dsl.{BoolSetCompiler, Parser}
+import graft.operators.Checkpoints
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -298,47 +299,50 @@ final class NshmDb(val store: NshmStore) {
 
   // ------------------------------------------------------------- inserts
 
-  /** Scale-safe dense surrogate-id allocation (≙ the reference's max+1
-    * scheme, nshmdb.py:270-272, keyed by natural order rather than
-    * insertion order): range-partition on the natural key so global order
-    * holds across partitions, sort within each, then per-partition counts
-    * → cumulative offsets → local rank (`zipWithIndex`, the shape SURVEY
-    * §7.D prescribes). Replaces `row_number().over(Window.orderBy(...))`,
-    * which serialized every insert batch through a single reducer.
+  /** The one surrogate-id allocator (≙ the reference's max+1 scheme,
+    * nshmdb.py:270-272, in natural-key order, not insertion order): ids
+    * fill field 0 of `Schemas.all(table)` from [[nextId]]. Range-partition
+    * and sort on the key, pin lazily, then per-partition sizes → offsets
+    * → local rank (SURVEY §7.D). The pin's first action, the size job (or
+    * the write, for one partition), scans every partition once, so the
+    * upstream joins run once; `zipWithIndex` would not do, as its count
+    * job skips the last partition and the pin would backfill it.
     */
-  private def appendWithDenseId(
-      table: String,
-      df: DataFrame,
-      idCol: String,
-      start: Long,
-      orderCols: Seq[String]): Unit = {
-    val ordered = df
-      .repartitionByRange(orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-    // zipWithIndex runs a per-partition count job before the data job, so
-    // without a persist the whole upstream plan (anti-join / nshm-id
-    // translation joins) would be computed twice per insert batch.
-    val orderedRdd = ordered.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val schema = ordered.schema.add(idCol, LongType, nullable = false)
-      val rows = orderedRdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ (start + i)) }
-      store.append(table, spark.createDataFrame(rows, schema))
-    } finally orderedRdd.unpersist(blocking = false)
+  private def appendWithDenseId(table: String, rows: DataFrame, orderCols: Seq[String]): Unit = {
+    val start = nextId(table)
+    val ordered = Checkpoints.pin(
+      rows.repartitionByRange(orderCols.map(col): _*).sortWithinPartitions(orderCols.map(col): _*),
+      eager = false)
+    val sorted = ordered.rdd
+    val offsets =
+      if (sorted.getNumPartitions == 1) Array(start)
+      else sorted.mapPartitions(it => Iterator(it.size.toLong)).collect().scanLeft(start)(_ + _)
+    val withIds = sorted.mapPartitionsWithIndex { (p, it) =>
+      it.zip(Iterator.iterate(offsets(p))(_ + 1)).map { case (r, id) => Row.fromSeq(r.toSeq :+ id) }
+    }
+    val schema = ordered.schema.add(Schemas.all(table).fields(0).name, LongType, nullable = false)
+    store.append(table, spark.createDataFrame(withIds, schema))
+  }
+
+  /** max + 1 of `table`'s id; on an empty table 1, or [[NshmDb.FirstFaultId]]. */
+  private def nextId(table: String): Long = {
+    val row = store.table(table).agg(max(col(Schemas.all(table).fields(0).name))).collect().head
+    if (!row.isNullAt(0)) row.getLong(0) + 1
+    else if (table == "fault") NshmDb.FirstFaultId
+    else 1L
   }
 
   /** ≙ insert_many_faults (nshmdb.py:250-311): upsert parent faults on
     * their natural key (left-anti join + append, ≙ INSERT OR IGNORE),
-    * allocate surrogate fault ids from max+1 (0-based on an empty table —
-    * quirk parity with nshmdb.py:270-272), flatten plane corners (F8).
+    * number faults and planes in input order from [[nextId]] (driver
+    * `Seq`s, as in the reference), flatten plane corners (F8).
     */
   def insertManyFaults(faults: Seq[FaultInfo]): Unit = {
     import spark.implicits._
     val names = faults.map(_.name).distinct.toDF("name")
-    val newNames = names.join(parentFault, Seq("name"), "left_anti")
-    val startParent = maxId("parent_fault", "parent_id").map(_ + 1).getOrElse(1L)
-    appendWithDenseId("parent_fault", newNames, "parent_id", startParent, Seq("name"))
+    appendWithDenseId("parent_fault", names.join(parentFault, Seq("name"), "left_anti"), Seq("name"))
 
-    val startFault = maxId("fault", "fault_id").map(_ + 1).getOrElse(0L)
+    val startFault = nextId("fault")
     val faultRows = faults.zipWithIndex.map { case (f, i) =>
       (startFault + i, f.faultSystem, f.faultNshmId, f.rake, f.tectType, f.name)
     }.toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "name")
@@ -348,21 +352,19 @@ final class NshmDb(val store: NshmStore) {
         .join(broadcast(parentFault), Seq("name"))
         .select("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
 
-    val planeTuples = faults.zipWithIndex.flatMap { case (f, i) =>
-      f.fault.toSeq.flatMap(_.planes).map { p =>
-        val c = p.corners
-        (c(0)(0), c(0)(1), c(1)(0), c(1)(1), c(2)(0), c(2)(1), c(3)(0), c(3)(1),
-          p.topDepth, p.bottomDepth, startFault + i)
-      }
+    val planeRows = faults.zipWithIndex.flatMap { case (f, i) =>
+      f.fault.toSeq.flatMap(_.planes).map(p => (p, startFault + i))
     }
-    if (planeTuples.nonEmpty) {
-      val startPlane = maxId("fault_plane", "plane_id").map(_ + 1).getOrElse(1L)
-      val planes = planeTuples.zipWithIndex.map { case (t, j) => (startPlane + j, t) }
-        .map { case (id, t) => (id, t._1, t._2, t._3, t._4, t._5, t._6, t._7, t._8, t._9, t._10, t._11) }
-        .toDF(
-          "plane_id", "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
-          "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
-          "top_depth", "bottom_depth", "fault_id")
+    if (planeRows.nonEmpty) {
+      val startPlane = nextId("fault_plane")
+      val planes = planeRows.zipWithIndex.map { case ((p, faultId), j) =>
+        val c = p.corners
+        (startPlane + j, c(0)(0), c(0)(1), c(1)(0), c(1)(1), c(2)(0), c(2)(1), c(3)(0), c(3)(1),
+          p.topDepth, p.bottomDepth, faultId)
+      }.toDF(
+        "plane_id", "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
+        "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
+        "top_depth", "bottom_depth", "fault_id")
       store.append("fault_plane", planes)
     }
   }
@@ -373,19 +375,14 @@ final class NshmDb(val store: NshmStore) {
     * translated to surrogates via left joins (J8/J9).
     */
   def insertManyRuptures(ruptures: DataFrame, ruptureFaultsDf: DataFrame): Unit = {
-    val startRupture = maxId("rupture", "rupture_id").map(_ + 1).getOrElse(1L)
-    appendWithDenseId(
-      "rupture", ruptures, "rupture_id", startRupture, Seq("fault_system", "nshm_id"))
+    appendWithDenseId("rupture", ruptures, Seq("fault_system", "nshm_id"))
 
     val renamed = ruptureFaultsDf
       .withColumnRenamed("rupture_id", "rupture_nshm_id")
       .withColumnRenamed("fault_id", "fault_nshm_id")
     val translated = nshmIdToRuptureId(nshmIdToFaultId(renamed))
-    val startRf = maxId("rupture_faults", "rupture_fault_id").map(_ + 1).getOrElse(1L)
     appendWithDenseId(
-      "rupture_faults",
-      translated.select("rupture_id", "fault_id"),
-      "rupture_fault_id", startRf, Seq("rupture_id", "fault_id"))
+      "rupture_faults", translated.select("rupture_id", "fault_id"), Seq("rupture_id", "fault_id"))
   }
 
   /** ≙ insert_magnitude_frequency_distribution (nshmdb.py:452-468).
@@ -393,11 +390,10 @@ final class NshmDb(val store: NshmStore) {
     */
   def insertMfds(mfds: DataFrame): Unit = {
     val translated = nshmIdToFaultId(mfds.withColumnRenamed("nshm_id", "fault_nshm_id"))
-    val start = maxId("magnitude_frequency_distribution", "entry_id").map(_ + 1).getOrElse(1L)
     appendWithDenseId(
       "magnitude_frequency_distribution",
       translated.select("fault_id", "magnitude", "rate"),
-      "entry_id", start, Seq("fault_id", "magnitude"))
+      Seq("fault_id", "magnitude"))
   }
 
   /** ≙ _nshm_id_to_fault_id (nshmdb.py:313-322): left join on the
@@ -417,14 +413,12 @@ final class NshmDb(val store: NshmStore) {
         col("fault_system"), col("nshm_id").as("rupture_nshm_id"), col("rupture_id"))),
       Seq("fault_system", "rupture_nshm_id"),
       "left")
-
-  private def maxId(table: String, idCol: String): Option[Long] = {
-    val row = store.table(table).agg(max(col(idCol))).collect()(0)
-    if (row.isNullAt(0)) None else Some(row.getLong(0))
-  }
 }
 
 object NshmDb {
+
+  /** `fault` ids start at 0, the others at 1: the reference's quirk (nshmdb.py:270-272). */
+  private val FirstFaultId = 0L
 
   /** F1 rounding (nshmdb.py:215-221), the snap [[NshmDb.mostLikelyFault]]
     * applies: the smallest stored value ≥ target, clamped to the maximum —

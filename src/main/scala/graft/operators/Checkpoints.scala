@@ -78,6 +78,9 @@ object Checkpoints {
     *    one reference).
     *  - PipelineQ q_jaro_fuzzy scored-pair frame — same pre-sort
     *    sampling shape as q_random_projection.
+    *  - NshmDb.appendWithDenseId sorted insert rows — first action is
+    *    the per-partition size collect (every partition, one
+    *    reference), or with a single partition the write.
     */
   def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
     val sc = df.sparkSession.sparkContext

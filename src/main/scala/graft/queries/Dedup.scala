@@ -694,7 +694,7 @@ object Dedup extends QueryPack {
       val d = docs(s, dir)
       val corpus = d.filter(col("doc_id") % 10 =!= 0).select(col("doc_id"), col("text"))
       val newb = d.filter(col("doc_id") % 10 === 0).select(col("doc_id"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("lsh_index").resolve("idx").toString
+      val path = StreamQ.Staging.dir("lsh_index").resolve("idx").toString
       writeLshIndex(corpus, path)
       probeLshIndex(s, path, newb, corpus, minJaccard = 0.5)
     })
@@ -776,8 +776,7 @@ object Dedup extends QueryPack {
       val corpus = d.filter(m10 =!= 0 && m10 =!= 5).select(col("doc_id"), col("text"))
       val batchA = d.filter(m10 === 5).select(col("doc_id"), col("text"))
       val batchB = d.filter(m10 === 0).select(col("doc_id"), col("text"))
-      val path = java.nio.file.Files
-        .createTempDirectory("lsh_index_inc").resolve("idx").toString
+      val path = StreamQ.Staging.dir("lsh_index_inc").resolve("idx").toString
       writeLshIndex(corpus, path)
       // force the A-probe NOW: its plan reads the index lazily, and the
       // append below must not leak A's own signatures into A's probe

@@ -19,11 +19,12 @@ import scala.jdk.CollectionConverters._
 object StreamQ extends QueryPack {
 
   /** All stream-drain staging — source dirs, parquet-sink output,
-    * checkpoints — lives under ONE per-JVM root, deleted recursively
-    * when the JVM exits: at sf100 a single drain's parquet output plus
-    * RocksDB checkpoint is tens of GB, and the default temp dir may be
-    * tmpfs (RAM). `GRAFT_STAGE_DIR` overrides the root's parent so a
-    * scale run can point staging at real disk. Queries whose RESULT is
+    * checkpoints — and [[Dedup]]'s on-disk LSH indexes live under ONE
+    * per-JVM root, deleted recursively when the JVM exits: at sf100 a
+    * single drain's parquet output plus RocksDB checkpoint is tens of
+    * GB, and the default temp dir may be tmpfs (RAM). `GRAFT_STAGE_DIR`
+    * overrides the root's parent so a scale run can point staging at
+    * real disk. Queries whose RESULT is
     * a bounded aggregate over the drained output additionally delete
     * their heavyweight dirs EAGERLY (the readback collapses to a
     * handful of rows first — see [[boundedReadback]]); row-grain

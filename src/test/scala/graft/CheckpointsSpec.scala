@@ -148,7 +148,6 @@ class CheckpointsSpec extends SparkSpec {
     // a bare cache() registers the frame with the session's CacheManager,
     // which then silently re-plans every later query over the same scan
     val pinCall = raw"localCheckpoint\(|\.cache\(\)|\.persist\(|\.checkpoint\(".r
-    val defName = raw"\bdef\s+(\w+)".r
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
     val files = walk(new java.io.File("src/main"))
@@ -159,10 +158,6 @@ class CheckpointsSpec extends SparkSpec {
       lines = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]).toSeq
       (line, i) <- lines.zipWithIndex
       if pinCall.findFirstIn(line).isDefined
-      // the one exception: NshmDb.appendWithDenseId's RDD persist keeps
-      // zipWithIndex from running the insert's upstream plan twice
-      enclosing = lines.take(i + 1).flatMap(l => defName.findFirstMatchIn(l).map(_.group(1)))
-      if !(f.getName == "NshmDb.scala" && enclosing.lastOption.contains("appendWithDenseId"))
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, "pin through Checkpoints.pin instead:\n" + hits.mkString("\n"))
   }

@@ -66,6 +66,30 @@ class GeoJsonSpec extends SparkSpec {
     }
   }
 
+  test("sections with a null or absent required property fail with one error naming each") {
+    val trace = """"geometry": {"type": "LineString", "coordinates": [[172.0, -42.0], [173.0, -42.5]]}"""
+    def feature(props: String) = s"""{"type": "Feature", "properties": {$props}, $trace}"""
+    val good = feature(""""FaultID": 1, "ParentName": "Alpine Fault", "UpDepth": 0.0,
+      "LowDepth": 10.0, "DipDeg": 60.0, "Rake": 90.0, "DipDir": null""")
+    val noDepthRake = feature(""""FaultID": 5, "ParentName": "P5", "UpDepth": null,
+      "LowDepth": 10.0, "DipDeg": 60.0, "Rake": null""")
+    val noId = feature(""""FaultID": null, "ParentName": "P", "UpDepth": 0.0,
+      "LowDepth": 10.0, "DipDeg": 60.0, "Rake": 90.0""")
+    // a null ParentName would lose its fault row to the insert's name join
+    val noName = feature(""""FaultID": 7, "ParentName": null, "UpDepth": 0.0,
+      "LowDepth": 10.0, "DipDeg": 60.0, "Rake": 90.0""")
+    val noDip = feature(""""FaultID": 8, "ParentName": "P8", "UpDepth": 0.0,
+      "LowDepth": 10.0, "Rake": 90.0""")
+    for ((features, named) <- Seq(
+        Seq(good, noName) -> "FaultID 7 (no ParentName)",
+        Seq(good, noDepthRake, noId, noDip) ->
+          "FaultID 5 (no UpDepth, Rake); features[2] (no FaultID); FaultID 8 (no DipDeg)")) {
+      val json = s"""{"type": "FeatureCollection", "features": [${features.mkString(",")}]}"""
+      val e = intercept[IllegalArgumentException](Ingest.parseFaultSectionsJson(spark, json))
+      assert(e.getMessage.endsWith(named), e.getMessage)
+    }
+  }
+
   test("fault system inference from the catalogue marker names (api.py:178-198)") {
     assert(Ingest.inferFaultSystem(Ingest.HikurangiName) === FaultSystem.Hikurangi)
     assert(Ingest.inferFaultSystem(Ingest.PuysegurName) === FaultSystem.Puysegur)

@@ -21,14 +21,17 @@ class IngestSpec extends SparkSpec {
   }
 
   test("parseRaggedIndices: variable-arity rows explode to pairs (≙ api.py:362-398)") {
-    val lines = Seq("Rupture Index,Num Sections,# 1,# 2,# 3",
-      "0,3,10,11,12", "1,1,20", "2,2,30,31").toDF("value")
-    val got = Ingest.parseRaggedIndices(lines, FaultSystem.Hikurangi)
-      .orderBy("rupture_id", "fault_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.toSeq === Seq(
-      (0L, 10L), (0L, 11L), (0L, 12L), (1L, 20L), (2L, 30L), (2L, 31L)))
+    val rows = Seq("0,3,10,11,12", "1,1,20", "2,2,30,31")
+    // line 1 is a header only when its first field is not an integer
+    val header = "Rupture Index,Num Sections,# 1,# 2,# 3"
+    for (csv <- Seq(header +: rows, rows).map(_.mkString("\n"))) {
+      val got = Ingest.parseRaggedIndices(spark, csv, FaultSystem.Hikurangi)
+        .orderBy("rupture_id", "fault_id")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(got.toSeq === Seq(
+        (0L, 10L), (0L, 11L), (0L, 12L), (1L, 20L), (2L, 30L), (2L, 31L)))
+    }
   }
 
   test("extractRuptures: props left-join rates with storage names (≙ api.py:336-360)") {

@@ -330,4 +330,55 @@ class NshmDbSpec extends SparkSpec {
     // below every bin takes the minimum; above every bin clamps to 7.5, not fault 3's 8.5
     assert(mlf("Awatere" -> 5.0, "Clarence" -> 8.0) === Map("Awatere" -> 0.1, "Clarence" -> 0.4))
   }
+
+  test("surrogate ids: max + 1 over non-empty tables, fault from 0 (≙ nshmdb.py:270-272)") {
+    import spark.implicits._
+    val db = freshDb()
+    def section(nshmId: Long, name: String, planes: Long*) =
+      FaultInfo(FaultSystem.Crustal, nshmId, name, 90.0, None,
+        Option.when(planes.nonEmpty)(Fault(planes.map(orderPlane).toVector)))
+    def insert(
+        faults: Seq[FaultInfo], ruptures: Seq[Long], links: Seq[(Long, Long)], mfds: Seq[(Long, Double)]) = {
+      db.insertManyFaults(faults)
+      db.insertManyRuptures(
+        ruptures.map(n => (n, 6.5, 100.0, 10.0, 0.01, FaultSystem.Crustal))
+          .toDF("nshm_id", "magnitude", "area", "len", "rate", "fault_system"),
+        links.map { case (r, f) => (r, f, FaultSystem.Crustal) }
+          .toDF("rupture_id", "fault_id", "fault_system"))
+      db.insertMfds(mfds.map { case (n, m) => (n, FaultSystem.Crustal, m, 0.1) }
+        .toDF("nshm_id", "fault_system", "magnitude", "rate"))
+    }
+    // two batches of distinct rows, so the second batch's every id starts
+    // from a non-empty table; plane k is orderPlane(k)
+    insert(Seq(section(10L, "Zeta", 1L, 2L), section(5L, "Alpha", 3L)),
+      ruptures = Seq(7L, 3L), links = Seq(7L -> 10L, 7L -> 5L, 3L -> 10L),
+      mfds = Seq(10L -> 7.0, 5L -> 6.5, 10L -> 6.5))
+    insert(Seq(section(30L, "Mu", 4L), section(20L, "Alpha", 5L, 6L), section(15L, "Beta")),
+      ruptures = Seq(9L, 4L), links = Seq(9L -> 30L, 9L -> 10L, 4L -> 20L),
+      mfds = Seq(20L -> 6.5, 30L -> 7.0, 30L -> 6.5))
+
+    def rows(table: String, cols: String*): Seq[Seq[Any]] =
+      db.store.table(table).select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    // parent ids in name order per batch, the new names only
+    assert(rows("parent_fault", "parent_id", "name") ===
+      Seq(Seq(1L, "Alpha"), Seq(2L, "Zeta"), Seq(3L, "Beta"), Seq(4L, "Mu")))
+    // fault ids from 0, in input order
+    assert(rows("fault", "fault_id", "nshm_id", "parent_id") ===
+      Seq(Seq(0L, 10L, 2L), Seq(1L, 5L, 1L), Seq(2L, 30L, 4L), Seq(3L, 20L, 1L), Seq(4L, 15L, 3L)))
+    // plane ids from 1, in input order
+    assert(rows("fault_plane", "plane_id", "fault_id", "top_left_lat") ===
+      Seq(1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 2L, 5L -> 3L, 6L -> 3L).map { case (id, fault) =>
+        Seq(id, fault, orderPlane(id).corners(0)(0))
+      })
+    // the rest in natural-key order per batch
+    assert(rows("rupture", "rupture_id", "nshm_id") ===
+      Seq(Seq(1L, 3L), Seq(2L, 7L), Seq(3L, 4L), Seq(4L, 9L)))
+    assert(rows("rupture_faults", "rupture_fault_id", "rupture_id", "fault_id") ===
+      Seq(Seq(1L, 1L, 0L), Seq(2L, 2L, 0L), Seq(3L, 2L, 1L),
+        Seq(4L, 3L, 3L), Seq(5L, 4L, 0L), Seq(6L, 4L, 2L)))
+    assert(rows("magnitude_frequency_distribution", "entry_id", "fault_id", "magnitude") ===
+      Seq(Seq(1L, 0L, 6.5), Seq(2L, 0L, 7.0), Seq(3L, 1L, 6.5),
+        Seq(4L, 2L, 6.5), Seq(5L, 2L, 7.0), Seq(6L, 3L, 6.5)))
+  }
 }

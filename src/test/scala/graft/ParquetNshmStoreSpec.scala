@@ -97,4 +97,15 @@ class ParquetNshmStoreSpec extends SparkSpec {
     }
     assert(over.isEmpty, over.mkString("; "))
   }
+
+  test("a two-branch composite build submits a bounded number of jobs") {
+    val merged = Ingest.mergeSolutionZips(spark, Seq(
+      (0.25, writeBranchZip(rate0 = 0.01, rate1 = 0.002, mfdRate = 0.4)),
+      (0.75, writeBranchZip(rate0 = 0.03, rate1 = 0.004, mfdRate = 0.8))))
+    val db = freshDb()
+    val jobs = jobsDuring(Ingest.loadComposite(db, Seq(merged)))
+    assert(db.store.table("rupture_faults").count() === 3)
+    // the build's count today: one more job per insert shows here
+    assert(jobs <= 43, s"loadComposite submitted $jobs jobs")
+  }
 }

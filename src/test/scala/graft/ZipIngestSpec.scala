@@ -54,14 +54,16 @@ class ZipIngestSpec extends SparkSpec {
 
     // indices rows that would be dropped as a header, fail a cast deep in
     // a later job, or be truncated to the ids listed: one error at load
-    // naming the archive, the member and each bad line
+    // naming the archive, the member and each bad line; line 1 is a
+    // header only when its first field is not an integer
     val header = "Rupture Index,Num Sections,# 1,# 2"
     for ((rows, lines) <- Seq(
-        Seq("0,2,1,2", "5.0,2,1,2") -> "line 3",
-        Seq("0,two,1,2", "1,1,2") -> "line 2",
-        Seq("0,2,1,2", "1,3,2") -> "line 3",
-        Seq("0,x,1", "", "1,1,2,", "1,2,2,,") -> "line 2, 5")) {
-      val bad = writeBranchZip(0.01, 0.002, 0.4, indices = (header +: rows).mkString("\n"))
+        Seq(header, "0,2,1,2", "5.0,2,1,2") -> "line 3",
+        Seq(header, "0,two,1,2", "1,1,2") -> "line 2",
+        Seq(header, "0,2,1,2", "1,3,2") -> "line 3",
+        Seq(header, "0,x,1", "", "1,1,2,", "1,2,2,,") -> "line 2, 5",
+        Seq("0,3,1", "1,1,2") -> "line 1")) {
+      val bad = writeBranchZip(0.01, 0.002, 0.4, indices = rows.mkString("\n"))
       val e3 = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, bad))
       assert(e3.getMessage.contains(bad), e3.getMessage)
       assert(e3.getMessage.contains(Ingest.RuptureFaultJoinPath), e3.getMessage)
