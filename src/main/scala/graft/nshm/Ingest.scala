@@ -248,11 +248,23 @@ object Ingest {
     case _ => FaultSystem.Crustal
   }
 
+  /** The part of a fault-sections GeoJSON member that
+    * [[parseFaultSectionsJson]] reads: ids as BIGINT, depths, angles and
+    * coordinates as DOUBLE.
+    */
+  private val FaultSectionsSchema: String =
+    "features ARRAY<STRUCT<" +
+      "properties: STRUCT<FaultID: BIGINT, ParentName: STRING, UpDepth: DOUBLE, LowDepth: DOUBLE, " +
+      "DipDeg: DOUBLE, Rake: DOUBLE, DipDir: DOUBLE>, " +
+      "geometry: STRUCT<coordinates: ARRAY<ARRAY<DOUBLE>>>>>"
+
   /** S6 (api.py:244-277,475-476): fault_sections.geojson
     * FeatureCollection text → FaultInfo list with plane geometry. Parsed
     * with `spark.read.json` + explode (distributed); the result is
     * collected at the API boundary exactly like the reference returns a
-    * Python list. Coordinates arrive (lon, lat); dip direction falls back
+    * Python list. The read declares [[FaultSectionsSchema]], so no
+    * inference pass runs, a property no feature carries reads as null, and
+    * a value of another type fails the read. Coordinates arrive (lon, lat); dip direction falls back
     * to the trace azimuth + 90 when `DipDir` is absent (F3), consecutive
     * duplicate trace points are dropped (F4), and planes are constructed
     * per trace segment (F5) with dip_dir forced to 0 at dip == 90. Bad
@@ -262,7 +274,8 @@ object Ingest {
     */
   def parseFaultSectionsJson(spark: SparkSession, json: String): Seq[FaultInfo] = {
     import spark.implicits._
-    val raw = spark.read.json(spark.createDataset(Seq(json)))
+    val raw = spark.read.schema(FaultSectionsSchema).option("mode", "FAILFAST")
+      .json(spark.createDataset(Seq(json)))
     val required = Seq("FaultID", "ParentName", "UpDepth", "LowDepth", "DipDeg", "Rake")
     // F3-F5 are pure per-row trig — they run distributed inside the map;
     // only the finished corner arrays cross the .collect() API boundary
@@ -270,13 +283,13 @@ object Ingest {
     val built = raw
       .select(posexplode(col("features")).as(Seq("i", "f")))
       .select(
-        col("f.properties.FaultID").cast("long").as("fault_id"),
+        col("f.properties.FaultID").as("fault_id"),
         col("f.properties.ParentName").as("name"),
-        col("f.properties.UpDepth").cast("double").as("top_km"),
-        col("f.properties.LowDepth").cast("double").as("bottom_km"),
-        col("f.properties.DipDeg").cast("double").as("dip"),
-        col("f.properties.Rake").cast("double").as("rake"),
-        col("f.properties.DipDir").cast("double").as("dip_dir"),
+        col("f.properties.UpDepth").as("top_km"),
+        col("f.properties.LowDepth").as("bottom_km"),
+        col("f.properties.DipDeg").as("dip"),
+        col("f.properties.Rake").as("rake"),
+        col("f.properties.DipDir").as("dip_dir"),
         col("f.geometry.coordinates").as("coords"),
         col("i"))
       .map { r =>

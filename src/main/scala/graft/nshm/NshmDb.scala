@@ -10,12 +10,18 @@ import org.apache.spark.sql.types.LongType
   * (`/root/reference/nshmdb/nshmdb.py:82-683`): one engine (no
   * sqlite-for-writes / duckdb-for-analytics split), queries are Catalyst
   * plans, the DSL compiles to `Column`s (no SQL strings), and the
-  * reference's per-result N+1 hydration loop (nshmdb.py:664-683) is a
-  * single batched join.
+  * reference's per-result N+1 hydration loop (nshmdb.py:664-683) is one
+  * batched round of scans.
   *
-  * Scale notes: `fault`, `parent_fault` and the per-query pair/ID lookup
-  * frames are broadcast; the `rupture_faults` bridge is the fact side;
-  * top-k plans as TakeOrderedAndProject. Store relations are resolved
+  * Scale notes: a search is one plan: `fault` and `parent_fault` are
+  * broadcast, the `rupture_faults` bridge is the fact side, top-k plans
+  * as TakeOrderedAndProject. A point lookup is one to three rounds of
+  * concurrent scans joined on the driver: the fault-model tables
+  * (`parent_fault`, `fault`, `fault_plane`: one row per parent, section or
+  * plane, thousands whatever the rupture count) are read whole, and
+  * `rupture`, `rupture_faults` and `magnitude_frequency_distribution`
+  * only through a filter on their key that reaches the parquet scan, so
+  * no lookup plan has an exchange. Store relations are resolved
   * once per table version (file listing and schema only; no data or
   * result is cached, every call still scans), so building a query over
   * unchanged tables submits no Spark job. Behavioral divergences from the
@@ -95,7 +101,7 @@ final class NshmDb(val store: NshmStore) {
   }
 
   /** ≙ NSHMDB.query (nshmdb.py:623-683): run the search, then hydrate ALL
-    * result ruptures' fault geometry in one batched join (the reference
+    * result ruptures' fault geometry in one batched round (the reference
     * re-queries per row). Keyed by NSHM rupture id as in the reference.
     */
   def query(
@@ -123,41 +129,119 @@ final class NshmDb(val store: NshmStore) {
     Rupture(faultSystem, nshmId, opt(0), opt(1), opt(2), opt(3), faults)
   }
 
-  /** The ten flattened corner columns of `fault_plane`, in [[Plane.fromFlat]] order. */
-  private def planeCols(fp: DataFrame) = Seq(
-    "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
-    "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
-    "top_depth", "bottom_depth").map(fp(_))
-
+  /** A `fault_plane` row's ten corner columns, from `i`, in [[Plane.fromFlat]] order. */
   private def planeAt(row: Row, i: Int): Plane = {
     def d(j: Int) = row.getDouble(i + j)
     Plane.fromFlat(d(0), d(1), d(2), d(3), d(4), d(5), d(6), d(7), d(8), d(9))
   }
 
-  /** [[FaultInfo]] columns of a `fault` frame joined to `parent_fault` as `p`. */
-  private def faultInfoCols(f: DataFrame) =
-    Seq(f("fault_system"), f("nshm_id"), col("p.name"), f("rake"), f("tect_type"))
-
-  private def faultInfoAt(r: Row): FaultInfo =
+  /** A `fault` row (schema order) under its parent's name. */
+  private def faultInfoAt(f: Row, name: String): FaultInfo =
     FaultInfo(
-      faultSystem = r.getInt(0),
-      faultNshmId = r.getLong(1),
-      name = r.getString(2),
-      rake = r.getDouble(3),
-      tectType = if (r.isNullAt(4)) None else Some(r.getInt(4)))
+      faultSystem = f.getInt(1),
+      faultNshmId = f.getLong(2),
+      name = name,
+      rake = f.getDouble(3),
+      tectType = if (f.isNullAt(4)) None else Some(f.getInt(4)))
+
+  private def longAt(row: Row, i: Int): Option[Long] =
+    if (row.isNullAt(i)) None else Some(row.getLong(i))
+
+  // ------------------------------------------------- key-filtered scans
+
+  /** Collects every frame at once and returns the rows in input order.
+    * Each scan runs on a fresh daemon thread: Spark's local properties
+    * (job group, description, scheduler pool) are inherited by a thread
+    * from the one that creates it, so every scan's jobs carry the
+    * caller's; a pooled thread would keep the properties it was created
+    * with. The call returns once every scan has finished, and then
+    * rethrows the first failure in input order.
+    */
+  private def collectAll(frames: DataFrame*): Seq[Array[Row]] = {
+    val rows = new Array[Array[Row]](frames.length)
+    val failures = new Array[Throwable](frames.length)
+    val scans = frames.zipWithIndex.map { case (df, i) =>
+      val t = new Thread(() =>
+        try rows(i) = df.collect()
+        catch { case e: Throwable => failures(i) = e },
+        s"nshm-scan-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    scans.foreach(_.join())
+    failures.find(_ != null).foreach(e => throw e)
+    rows.toSeq
+  }
+
+  /** `rupture` rows matching one NSHM id: rupture_id, then the measures. */
+  private def ruptureByKey(faultSystem: Option[Int], nshmId: Long): DataFrame = {
+    val key = col("nshm_id") === nshmId
+    rupture
+      .filter(faultSystem.fold(key)(fs => key && col("fault_system") === fs))
+      .select(("rupture_id" +: ruptureMeasures).map(col): _*)
+  }
+
+  /** (rupture_id, fault_id) rows of the given ruptures; rupture_id is never null. */
+  private def linksOf(ruptureIds: Seq[Long]): DataFrame =
+    ruptureFaults.filter(col("rupture_id").isin(ruptureIds: _*)).select("rupture_id", "fault_id")
+
+  /** `fault` rows (schema order) with their parent's name, by fault_id:
+    * the driver side of `fault ⋈ parent_fault`, so a fault whose parent
+    * is absent has no entry.
+    */
+  private def withParentNames(faults: Array[Row], parents: Array[Row]): Map[Long, (Row, String)] = {
+    val names = parents.map(r => r.getLong(0) -> r.getString(1)).toMap
+    faults.flatMap(f => longAt(f, 5).flatMap(names.get).map(n => f.getLong(0) -> (f, n))).toMap
+  }
+
+  /** Each fault's name: its parent's, or, outside the crustal system,
+    * "<parent>: Section <fault_id>". HACK preserved from the reference
+    * (nshmdb.py:556-563): geometries are only connected in the crustal
+    * setting, so subduction faults are split per section.
+    */
+  private def sectionName(parentName: String, faultId: Long, faultSystem: Int): String =
+    if (faultSystem == FaultSystem.Crustal) parentName else s"$parentName: Section $faultId"
+
+  /** Hydration on the driver (J3 + A9): the links joined to the whole
+    * `parent_fault`, `fault` and `fault_plane` reads, planes grouped per
+    * fault name. Plane order is (rupture_id, parent_id, plane_id)
+    * ≙ the reference's ORDER BY f.parent_id + SQLite rowid order
+    * (nshmdb.py:525). A link whose fault, parent or planes are absent
+    * adds nothing, as in an inner join.
+    */
+  private def hydrate(
+      links: Array[Row],
+      parents: Array[Row],
+      faults: Array[Row],
+      planes: Array[Row]): Map[Long, Map[String, Fault]] = {
+    val named = withParentNames(faults, parents)
+    val planesOf = planes.filter(!_.isNullAt(11)).groupBy(_.getLong(11))
+    val rows = for {
+      link <- links
+      faultId <- longAt(link, 1).toSeq
+      (f, parentName) <- named.get(faultId).toSeq
+      p <- planesOf.getOrElse(faultId, Array.empty[Row])
+    } yield
+      (link.getLong(0), f.getLong(5), p.getLong(0), sectionName(parentName, faultId, f.getInt(1)), p)
+    rows.sortBy(r => (r._1, r._2, r._3)).groupBy(_._1).map { case (id, rs) =>
+      id -> rs.groupBy(_._4).map { case (n, ps) => n -> Fault(ps.map(r => planeAt(r._5, 1)).toVector) }
+    }
+  }
 
   // ----------------------------------------------------------- accessors
 
-  /** ≙ get_rupture (nshmdb.py:470-500). */
+  /** ≙ get_rupture (nshmdb.py:470-500): the rupture by key with the
+    * fault-model tables, then its links by rupture_id.
+    */
   def getRupture(faultSystem: Int, ruptureNshmId: Long): Rupture = {
-    val row = rupture
-      .filter(col("nshm_id") === ruptureNshmId && col("fault_system") === faultSystem)
-      .select(("rupture_id" +: ruptureMeasures).map(col): _*)
-      .collect()
-      .headOption
-      .getOrElse(throw new NoSuchElementException(
-        s"No rupture with nshm_id = $ruptureNshmId in fault system = $faultSystem"))
-    ruptureAt(row, 1, faultSystem, ruptureNshmId, getRuptureFaults(row.getLong(0)))
+    val Seq(found, parents, faults, planes) =
+      collectAll(ruptureByKey(Some(faultSystem), ruptureNshmId), parentFault, fault, faultPlane)
+    val row = found.headOption.getOrElse(throw new NoSuchElementException(
+      s"No rupture with nshm_id = $ruptureNshmId in fault system = $faultSystem"))
+    val ruptureId = row.getLong(0)
+    val faultsById = hydrate(linksOf(Seq(ruptureId)).collect(), parents, faults, planes)
+    ruptureAt(row, 1, faultSystem, ruptureNshmId, faultsById.getOrElse(ruptureId, Map.empty))
   }
 
   /** ≙ get_rupture_faults (nshmdb.py:502-565) — takes the INTERNAL
@@ -167,73 +251,40 @@ final class NshmDb(val store: NshmStore) {
   def getRuptureFaults(ruptureId: Long): Map[String, Fault] =
     getRupturesFaults(Seq(ruptureId)).getOrElse(ruptureId, Map.empty)
 
-  /** Batched hydration: J3 4-way join + per-fault plane assembly (A9) for
-    * many ruptures at once. Plane order is made deterministic by sorting
-    * on (rupture_id, parent_id, plane_id) ≙ the reference's ORDER BY
-    * f.parent_id + SQLite rowid order (nshmdb.py:525). The sort runs on the
-    * driver over the collected rows: the key is unique and the rows few,
-    * so a Spark sort would only add a range-partition exchange.
+  /** Batched hydration for many ruptures at once, in one round: their
+    * `rupture_faults` rows by rupture_id beside the fault-model tables,
+    * joined on the driver by [[hydrate]].
     */
   def getRupturesFaults(ruptureIds: Seq[Long]): Map[Long, Map[String, Fault]] = {
     if (ruptureIds.isEmpty) return Map.empty
-    val fp = faultPlane
-    val rows = fp
-      .join(ruptureFaults.as("rf"), fp("fault_id") === col("rf.fault_id"))
-      .join(broadcast(fault).as("f"), fp("fault_id") === col("f.fault_id"))
-      .join(broadcast(parentFault).as("pf"), col("f.parent_id") === col("pf.parent_id"))
-      .filter(col("rf.rupture_id").isin(ruptureIds: _*))
-      .select(Seq(
-        col("rf.rupture_id"), col("f.parent_id"), col("pf.name"),
-        col("f.fault_id"), col("f.fault_system"), fp("plane_id")) ++ planeCols(fp): _*)
-      .collect()
-      .sortBy(r => (r.getLong(0), r.getLong(1), r.getLong(5)))
-
-    val out = scala.collection.mutable.LinkedHashMap.empty[Long, scala.collection.mutable.LinkedHashMap[String, Vector[Plane]]]
-    rows.foreach { row =>
-      val ruptureId = row.getLong(0)
-      val parentName = row.getString(2)
-      val faultId = row.getLong(3)
-      val faultSystem = row.getInt(4)
-      // HACK preserved from the reference (nshmdb.py:556-563): geometries
-      // are only connected in the crustal setting, so subduction faults
-      // are split per section.
-      val faultName =
-        if (faultSystem == FaultSystem.Crustal) parentName
-        else s"$parentName: Section $faultId"
-      val byName = out.getOrElseUpdate(ruptureId, scala.collection.mutable.LinkedHashMap.empty)
-      byName(faultName) = byName.getOrElse(faultName, Vector.empty) :+ planeAt(row, 6)
-    }
-    out.map { case (id, byName) =>
-      id -> byName.map { case (n, planes) => n -> Fault(planes) }.toMap
-    }.toMap
+    val Seq(links, parents, faults, planes) =
+      collectAll(linksOf(ruptureIds), parentFault, fault, faultPlane)
+    hydrate(links, parents, faults, planes)
   }
 
   /** ≙ get_fault (nshmdb.py:368-415). Corners in WGS (storage space);
     * apply `.toNztm` per plane for the projected view. Planes are sorted
-    * by plane_id on the driver, after the collect.
+    * by plane_id on the driver; a missing fault has no planes.
     */
   def getFault(faultSystem: Int, faultNshmId: Long): Fault = {
-    val fp = faultPlane
-    val rows = fp
-      .join(broadcast(fault).as("f"), fp("fault_id") === col("f.fault_id"))
-      .filter(col("f.nshm_id") === faultNshmId && col("f.fault_system") === faultSystem)
-      .select(fp("plane_id") +: planeCols(fp): _*)
-      .collect()
-      .sortBy(_.getLong(0))
-    Fault(rows.map(planeAt(_, 1)).toVector)
+    val Seq(found, planes) = collectAll(
+      fault.filter(col("nshm_id") === faultNshmId && col("fault_system") === faultSystem)
+        .select("fault_id"),
+      faultPlane)
+    val ids = found.map(_.getLong(0)).toSet
+    val own = planes.filter(p => longAt(p, 11).exists(ids))
+    Fault(own.sortBy(_.getLong(0)).map(planeAt(_, 1)).toVector)
   }
 
   /** ≙ get_fault_info (nshmdb.py:417-450); throws on a miss like the
     * reference's ValueError.
     */
   def getFaultInfo(faultSystem: Int, faultNshmId: Long): FaultInfo = {
-    val f = fault
-    f.join(broadcast(parentFault).as("p"), f("parent_id") === col("p.parent_id"))
-      .filter(f("fault_system") === faultSystem && f("nshm_id") === faultNshmId)
-      .select(faultInfoCols(f): _*)
-      .collect()
-      .headOption
-      .map(faultInfoAt)
+    val Seq(found, parents) = collectAll(
+      fault.filter(col("fault_system") === faultSystem && col("nshm_id") === faultNshmId),
+      parentFault)
+    withParentNames(found, parents).values.headOption
+      .map { case (f, name) => faultInfoAt(f, name) }
       .getOrElse(throw new IllegalArgumentException(
         s"Could not find fault with id = $faultNshmId in fault system = $faultSystem"))
   }
@@ -241,18 +292,19 @@ final class NshmDb(val store: NshmStore) {
   /** ≙ get_rupture_fault_info (nshmdb.py:567-594). Quirk preserved and
     * documented: filters only on the rupture NSHM id, NOT fault_system
     * (nshmdb.py:589) — ambiguous when the same nshm_id exists in several
-    * systems.
+    * systems. Sections sharing a parent give one entry, the lowest
+    * fault_id's.
     */
   def getRuptureFaultInfo(ruptureNshmId: Long): Map[String, FaultInfo] = {
-    val f = fault
-    f.join(ruptureFaults.as("rf"), f("fault_id") === col("rf.fault_id"))
-      .join(rupture.as("r"), col("r.rupture_id") === col("rf.rupture_id"))
-      .join(broadcast(parentFault).as("p"), f("parent_id") === col("p.parent_id"))
-      .filter(col("r.nshm_id") === ruptureNshmId)
-      .select(faultInfoCols(f): _*)
-      .collect()
-      .map { r => val info = faultInfoAt(r); info.name -> info }
-      .toMap
+    val Seq(found, parents, faults) =
+      collectAll(ruptureByKey(None, ruptureNshmId), parentFault, fault)
+    if (found.isEmpty) return Map.empty
+    val named = withParentNames(faults, parents)
+    val sections = linksOf(found.map(_.getLong(0)).toSeq).collect()
+      .flatMap(link => longAt(link, 1).flatMap(named.get))
+    sections.groupBy(_._2).map { case (name, fs) =>
+      name -> faultInfoAt(fs.map(_._1).minBy(_.getLong(0)), name)
+    }
   }
 
   /** ≙ get_fault_names (nshmdb.py:596-608). */
@@ -264,8 +316,9 @@ final class NshmDb(val store: NshmStore) {
     fault.select("nshm_id").distinct().collect().map(_.getLong(0)).toSet
 
   /** ≙ most_likely_fault (nshmdb.py:165-248): pseudo-activity rate per
-    * parent fault. One Spark action collects the rupture's MFD bins
-    * (parent name, magnitude, rate: its faults × their bins, a few
+    * parent fault. At most three rounds of key-filtered scans: the
+    * rupture by key with `fault` and `parent_fault`, its links by
+    * rupture_id, then the MFD bins of its faults by fault_id (a few
     * hundred rows); the rest runs on the driver, as in the reference.
     * F1 magnitude rounding is [[NshmDb.ceilingWithClamp]] over all the
     * rupture's distinct non-null magnitudes (searchsorted semantics,
@@ -277,24 +330,32 @@ final class NshmDb(val store: NshmStore) {
       faultSystem: Int,
       ruptureNshmId: Long,
       parentFaultMagnitudes: Seq[(String, Double)]): Map[String, Double] = {
-    val bins = mfd.as("mfd")
-      .join(ruptureFaults.as("rf"), col("rf.fault_id") === col("mfd.fault_id"))
-      .join(rupture.as("r"), col("r.rupture_id") === col("rf.rupture_id"))
-      .join(broadcast(fault).as("f"), col("f.fault_id") === col("mfd.fault_id"))
-      .join(broadcast(parentFault).as("pf"), col("f.parent_id") === col("pf.parent_id"))
-      .filter(col("r.nshm_id") === ruptureNshmId && col("r.fault_system") === faultSystem)
-      .filter(col("mfd.magnitude").isNotNull)
-      .select(col("pf.name"), col("mfd.magnitude"), col("mfd.rate"))
+    val Seq(found, parents, faults) =
+      collectAll(ruptureByKey(Some(faultSystem), ruptureNshmId), parentFault, fault)
+    if (found.isEmpty) return Map.empty
+    val faultIds = linksOf(found.map(_.getLong(0)).toSeq).collect().flatMap(longAt(_, 1))
+    if (faultIds.isEmpty) return Map.empty
+    val binsOf = mfd
+      .filter(col("fault_id").isin(faultIds.distinct.toSeq: _*) && col("magnitude").isNotNull)
+      .select("fault_id", "magnitude", "rate")
       .collect()
+      .groupBy(_.getLong(0))
+    val named = withParentNames(faults, parents)
+    // (parent name, magnitude, rate) per link, as the reference's join
+    val bins = for {
+      faultId <- faultIds
+      (_, name) <- named.get(faultId).toSeq
+      bin <- binsOf.getOrElse(faultId, Array.empty[Row])
+    } yield (name, bin.getDouble(1), Option.unless(bin.isNullAt(2))(bin.getDouble(2)))
     if (bins.isEmpty) return Map.empty
 
-    val magnitudes = bins.map(_.getDouble(1)).distinct.sorted(Ordering.Double.TotalOrdering)
+    val magnitudes = bins.map(_._2).distinct.sorted(Ordering.Double.TotalOrdering)
     val snapped = parentFaultMagnitudes.map { case (name, target) =>
       name -> NshmDb.ceilingWithClamp(magnitudes, target)
     }.toMap
     bins
-      .filter(r => !r.isNullAt(2) && snapped.get(r.getString(0)).contains(r.getDouble(1)))
-      .groupMapReduce(_.getString(0))(_.getDouble(2))(_ + _)
+      .collect { case (name, m, Some(rate)) if snapped.get(name).contains(m) => name -> rate }
+      .groupMapReduce(_._1)(_._2)(_ + _)
   }
 
   // ------------------------------------------------------------- inserts

@@ -1,6 +1,6 @@
 package graft
 
-import graft.nshm.{FaultSystem, Ingest}
+import graft.nshm.{Fault, FaultInfo, FaultSystem, Ingest}
 
 class GeoJsonSpec extends SparkSpec {
 
@@ -88,6 +88,24 @@ class GeoJsonSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](Ingest.parseFaultSectionsJson(spark, json))
       assert(e.getMessage.endsWith(named), e.getMessage)
     }
+  }
+
+  test("a property that no feature carries reads as absent: DipDir is inferred, Rake is an error") {
+    def collection(props: String) =
+      s"""{"type": "FeatureCollection", "features": [{"type": "Feature", "properties": {$props},
+         | "geometry": {"type": "LineString",
+         |              "coordinates": [[172.0, -42.0], [173.0, -42.5]]}}]}""".stripMargin
+    // integral depths and rake read as doubles
+    val noDipDir = Ingest.parseFaultSectionsJson(spark, collection(
+      """"FaultID": 4, "ParentName": "Awatere", "UpDepth": 0, "LowDepth": 12.5,
+        |"DipDeg": 60.0, "Rake": 180""".stripMargin))
+    val dipDir = Ingest.inferDipDirection(172.0, -42.0, 173.0, -42.5)
+    assert(noDipDir === Seq(FaultInfo(FaultSystem.Crustal, 4L, "Awatere", 180.0, None, Some(Fault(
+      Ingest.planesFromTrace(Seq((-42.0, 172.0), (-42.5, 173.0)), 0.0, 12.5, 60.0, dipDir))))))
+
+    val e = intercept[IllegalArgumentException](Ingest.parseFaultSectionsJson(spark, collection(
+      """"FaultID": 4, "ParentName": "Awatere", "UpDepth": 0.0, "LowDepth": 12.5, "DipDeg": 60.0""")))
+    assert(e.getMessage === "Fault sections missing required properties: FaultID 4 (no Rake)")
   }
 
   test("fault system inference from the catalogue marker names (api.py:178-198)") {

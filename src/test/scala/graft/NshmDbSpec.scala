@@ -244,6 +244,46 @@ class NshmDbSpec extends SparkSpec {
       Seq((1L, 1L, 1L), (2L, 1L, 2L)).toDF("rupture_fault_id", "rupture_id", "fault_id"))
     val faults = db.getRuptureFaults(1L)
     assert(faults.keySet === Set("Hikurangi Interface: Section 1", "Hikurangi Interface: Section 2"))
+    assert(db.getRupture(FaultSystem.Hikurangi, 1L).faults === faults)
+    assert(db.query("Hikurangi Interface").map { case (id, r) => id -> r.faults } === Map(1L -> faults))
+  }
+
+  test("misses: a missing rupture or fault info throws as before; a missing fault has no planes") {
+    val db = alpineDb
+    val noRupture = intercept[NoSuchElementException](db.getRupture(FaultSystem.Crustal, 99L))
+    assert(noRupture.getMessage === "No rupture with nshm_id = 99 in fault system = 3")
+    // the key is (fault_system, nshm_id): the right id in another system misses
+    intercept[NoSuchElementException](db.getRupture(FaultSystem.Hikurangi, 1L))
+    val noInfo = intercept[IllegalArgumentException](db.getFaultInfo(FaultSystem.Hikurangi, 1L))
+    assert(noInfo.getMessage === "Could not find fault with id = 1 in fault system = 1")
+    assert(db.getFault(FaultSystem.Crustal, 99L) === Fault(Vector.empty))
+    assert(db.getFault(FaultSystem.Hikurangi, 1L) === Fault(Vector.empty))
+    assert(db.getRuptureFaultInfo(99L) === Map.empty)
+    assert(db.getRupturesFaults(Seq(99L)) === Map.empty)
+    assert(db.mostLikelyFault(FaultSystem.Crustal, 99L, Seq("Alpine Fault" -> 6.5)) === Map.empty)
+  }
+
+  test("get_rupture_fault_info keys on the NSHM id alone; a shared parent keeps its lowest fault_id") {
+    import spark.implicits._
+    val db = freshDb()
+    db.store.append("parent_fault", Seq((1L, "Awatere"), (2L, "Hikurangi")).toDF("parent_id", "name"))
+    // faults 5 and 3 are two Awatere sections; fault 7 is a Hikurangi one
+    db.store.append(
+      "fault",
+      Seq((5L, 3, 50L, 10.0, Option.empty[Int], 1L), (3L, 3, 30L, 20.0, Option.empty[Int], 1L),
+        (7L, 1, 70L, 90.0, Some(2), 2L))
+        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    // NSHM rupture id 4 in two fault systems
+    db.store.append(
+      "rupture",
+      Seq((1L, 3, 4L, 100.0, 7.0, 10.0, 0.01), (2L, 1, 4L, 100.0, 8.0, 10.0, 0.001))
+        .toDF("rupture_id", "fault_system", "nshm_id", "area", "magnitude", "len", "rate"))
+    db.store.append(
+      "rupture_faults",
+      Seq((1L, 1L, 3L), (2L, 1L, 5L), (3L, 2L, 7L)).toDF("rupture_fault_id", "rupture_id", "fault_id"))
+    assert(db.getRuptureFaultInfo(4L) === Map(
+      "Awatere" -> FaultInfo(FaultSystem.Crustal, 30L, "Awatere", 20.0, None),
+      "Hikurangi" -> FaultInfo(FaultSystem.Hikurangi, 70L, "Hikurangi", 90.0, Some(2))))
   }
 
   /** Plane `id` of the plane-order fixture: its top edge sits at a latitude

@@ -2,10 +2,18 @@ package graft
 
 import graft.nshm.{FaultSystem, Ingest, NshmDb, Schemas}
 import graft.ZipFixtures.writeBranchZip
+import org.apache.spark.SparkException
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.Listeners
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** The store resolves each table's relation once per table version:
   * building a query over resolved tables runs no job, and every write,
@@ -23,6 +31,20 @@ class ParquetNshmStoreSpec extends SparkSpec {
       spark, Seq((1.0, writeBranchZip(rate0 = 0.01, rate1 = 0.002, mfdRate = 0.4))))))
     (dir, db)
   }
+
+  /** The six point lookups on the branch fixture (hydration without the search). */
+  private def lookups(db: NshmDb) = Seq[(String, () => Any)](
+    "getFault" -> (() => db.getFault(FaultSystem.Crustal, 1L)),
+    "getRupture" -> (() => db.getRupture(FaultSystem.Crustal, 0L)),
+    "getRupturesFaults" -> (() => db.getRupturesFaults(Seq(1L, 2L))),
+    "getFaultInfo" -> (() => db.getFaultInfo(FaultSystem.Crustal, 2L)),
+    "getRuptureFaultInfo" -> (() => db.getRuptureFaultInfo(0L)),
+    "mostLikelyFault" ->
+      (() => db.mostLikelyFault(FaultSystem.Crustal, 0L, Seq("Alpine Fault" -> 6.5, "Kakapo" -> 7.0))))
+
+  /** The lookups' scan threads that are still alive. */
+  private def scanThreads(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(t => t.getName.startsWith("nshm-scan-") && t.isAlive).toSet
 
   /** `rupture` rows from (rupture_id, nshm_id, rate). */
   private def ruptures(rows: (Long, Long, Double)*): DataFrame =
@@ -82,14 +104,16 @@ class ParquetNshmStoreSpec extends SparkSpec {
 
   test("warm point lookups submit a bounded number of jobs") {
     val (_, db) = populated()
-    // (lookup, most jobs it may submit once warm): the broadcasts and the
-    // scan, no sort exchange and no second pass over a join
+    // (lookup, most jobs it may submit once warm): one per scan, plus the
+    // search's own jobs for `query`
     val lookups = Seq[(String, () => Any, Int)](
       ("getFault", () => db.getFault(FaultSystem.Crustal, 1L), 2),
       ("getRupture", () => db.getRupture(FaultSystem.Crustal, 0L), 5),
       ("query", () => db.query("Alpine Fault"), 9),
       ("mostLikelyFault",
-        () => db.mostLikelyFault(FaultSystem.Crustal, 0L, Seq("Alpine Fault" -> 6.5, "Kakapo" -> 7.0)), 5))
+        () => db.mostLikelyFault(FaultSystem.Crustal, 0L, Seq("Alpine Fault" -> 6.5, "Kakapo" -> 7.0)), 5),
+      ("getFaultInfo", () => db.getFaultInfo(FaultSystem.Crustal, 2L), 2),
+      ("getRuptureFaultInfo", () => db.getRuptureFaultInfo(0L), 4))
     lookups.foreach { case (_, call, _) => call() }
     val over = lookups.flatMap { case (name, call, most) =>
       val jobs = jobsDuring(call())
@@ -107,5 +131,74 @@ class ParquetNshmStoreSpec extends SparkSpec {
     assert(db.store.table("rupture_faults").count() === 3)
     // the build's count today: one more job per insert shows here
     assert(jobs <= 43, s"loadComposite submitted $jobs jobs")
+  }
+
+  test("point lookups plan no exchange and read the fact tables only through a pushed key filter") {
+    val (_, db) = populated()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    Listeners.waitUntilEmpty(sc)
+    spark.listenerManager.register(listener)
+    try {
+      lookups(db).foreach { case (_, call) => call() }
+      Listeners.waitUntilEmpty(sc)
+    } finally spark.listenerManager.unregister(listener)
+
+    // a fact table's scan must push an equality or IN on its key
+    val keyOf = Map(
+      "rupture" -> "nshm_id", "rupture_faults" -> "rupture_id",
+      "magnitude_frequency_distribution" -> "fault_id")
+    object Nodes extends AdaptiveSparkPlanHelper
+    val scanned = scala.collection.mutable.Set.empty[String]
+    val problems = plans.asScala.toSeq.flatMap { plan =>
+      val exchanges = Nodes.collect(plan) {
+        case e: Exchange => e.nodeName
+        case e: ReusedExchangeExec => e.nodeName
+      }
+      val unkeyed = Nodes.collect(plan) { case s: FileSourceScanExec => s }.flatMap { s =>
+        val table = s.relation.location.rootPaths.head.getName
+        scanned += table
+        val pushed = s.metadata.getOrElse("PushedFilters", "")
+        keyOf.get(table).filterNot(k => s"\\b(EqualTo|In)\\($k,".r.findFirstIn(pushed).isDefined)
+          .map(k => s"$table scanned without a pushed $k filter: $pushed")
+      }
+      exchanges.map(e => s"$e in\n$plan") ++ unkeyed
+    }
+    assert(keyOf.keySet.subsetOf(scanned), s"scanned only ${scanned.mkString(", ")}")
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("a lookup's concurrent scans act as one call: the caller's job group, its failure, no thread left") {
+    val (dir, db) = populated()
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    Listeners.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("g", "point lookups", interruptOnCancel = false)
+      try lookups(db).foreach { case (name, call) =>
+        call()
+        assert(scanThreads().isEmpty, s"$name left scan threads running")
+      } finally sc.clearJobGroup()
+      Listeners.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(!groups.isEmpty)
+    assert(groups.asScala.toSet === Set("g"))
+
+    // a scan that fails fails the call, once every scan has finished
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "fault_plane", "part-99999-corrupt.parquet"), "not parquet".getBytes)
+    val e = intercept[SparkException](db.getFault(FaultSystem.Crustal, 1L))
+    assert(e.getMessage.contains("part-99999-corrupt.parquet"), e.getMessage)
+    assert(scanThreads().isEmpty)
   }
 }

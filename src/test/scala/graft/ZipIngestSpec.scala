@@ -40,6 +40,22 @@ class ZipIngestSpec extends SparkSpec {
     assert(only.keySet === Set(1L))
   }
 
+  test("a rupture whose indices line lists no section has no faults") {
+    val z = writeBranchZip(0.01, 0.002, 0.4, indices =
+      """Rupture Index,Num Sections,# 1,# 2
+        |0,2,1,2
+        |1,0""".stripMargin)
+    val db = freshDb()
+    Ingest.loadComposite(db, Seq(Ingest.mergeSolutionZips(spark, Seq((1.0, z)))))
+    assert(db.store.table("rupture_faults").count() === 2)
+    val r = db.getRupture(FaultSystem.Crustal, 1L)
+    assert(r.rate === Some(0.002))
+    assert(r.faults === Map.empty)
+    assert(db.getRuptureFaultInfo(1L) === Map.empty)
+    assert(db.mostLikelyFault(FaultSystem.Crustal, 1L, Seq("Kakapo" -> 7.0)) === Map.empty)
+    assert(db.getRupture(FaultSystem.Crustal, 0L).faults.keySet === Set("Alpine Fault", "Kakapo"))
+  }
+
   test("malformed branch archive fails with one error naming the path and missing member") {
     val z = writeBranchZip(0.01, 0.002, 0.4, omit = Set(Ingest.RuptureFaultJoinPath))
     val e = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, z))
