@@ -8,6 +8,10 @@ import org.apache.spark.sql.functions._
   * api.py:41-176) stays a driver-side shim out of engine scope; everything
   * from raw file content onward is a DataFrame transform.
   *
+  * [[mergeSolutionZips]] is the one archive entry point; it parses each
+  * group's branch-invariant members once and reads only the rates and
+  * MFDs of later archives (≙ api.py:481-485).
+  *
   * Scale notes: the reference streams one branch at a time purely to bound
   * memory (comments at api.py:498-505); the union-all + groupBy-sum here
   * gets the same bound from Catalyst partial aggregation and distributes.
@@ -97,21 +101,8 @@ object Ingest {
       .agg(sum(col("__wrate")).as(rateCol))
   }
 
-  /** A8 full-row variant: branch-invariant columns (magnitude/area/len…)
-    * come from the first branch (≙ api.py:481-485 parse-once comment),
-    * merged rates from all branches.
-    */
-  def mergeBranches(
-      branches: Seq[(Double, DataFrame)],
-      keyCols: Seq[String],
-      rateCol: String = "rate"): DataFrame = {
-    val merged = mergeBranchRates(branches, keyCols, rateCol)
-    val first = branches.head._2.drop(rateCol)
-    first.join(merged, keyCols)
-  }
-
-  /** One logic-tree branch solution parsed from its archive members
-    * (≙ NSHMSolution, api.py:432-452).
+  /** One fault system's solution, merged over its weighted branch
+    * archives (≙ NSHMSolution, api.py:432-452).
     */
   final case class Solution(
       faults: Seq[FaultInfo],
@@ -133,7 +124,16 @@ object Ingest {
   private val RequiredMembers: Seq[String] =
     Seq(FaultInformationPath, RuptureFaultJoinPath, RuptureRatesPath, RupturePropertiesPath)
 
-  private def readZipMembers(path: String, wanted: Set[String]): Map[String, String] = {
+  /** The columns each CSV member must carry; the MFD member's others are magnitudes. */
+  private val MemberColumns: Map[String, Seq[String]] = Map(
+    RupturePropertiesPath -> Seq("Rupture Index", "Magnitude", "Area (m^2)", "Length (m)"),
+    RuptureRatesPath -> Seq("Rupture Index", "Annual Rate"),
+    MfdsPath -> Seq("Section Index"))
+
+  /** Checks by entry name that archive `path` carries every required
+    * member, then reads the members named in `read` that it carries.
+    */
+  private def readZipMembers(path: String, read: Set[String]): Map[String, String] = {
     val zf =
       try new java.util.zip.ZipFile(path)
       catch {
@@ -141,74 +141,71 @@ object Ingest {
           throw new IllegalArgumentException(s"Branch archive $path is not a zip file", e)
       }
     try {
-      import scala.jdk.CollectionConverters._
-      zf.entries().asScala
-        .filter(e => wanted.contains(e.getName))
-        .map { e =>
-          val bytes = zf.getInputStream(e).readAllBytes()
-          e.getName -> new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        }
-        .toMap
+      val missing = RequiredMembers.filter(zf.getEntry(_) == null)
+      if (missing.nonEmpty)
+        throw new IllegalArgumentException(
+          s"Branch archive $path is missing ${missing.mkString(", ")}")
+      read.flatMap(name => Option(zf.getEntry(name))).map { e =>
+        e.getName -> new String(zf.getInputStream(e).readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      }.toMap
     } finally zf.close()
   }
 
-  private def csvDf(spark: SparkSession, content: String): DataFrame = {
-    import spark.implicits._
-    spark.read.option("header", true).option("inferSchema", true)
-      .csv(spark.createDataset(content.linesIterator.toSeq))
-  }
-
-  /** Parse one branch zip: GeoJSON faults (S6/F3-F5), ragged join table
-    * (S5/U3), properties ⋈ rates (S4/J10), melted MFDs (U2/P6)
-    * (≙ the first-branch parse, api.py:472-485). Hikurangi/Puysegur
-    * archives carry no MFD member → None, as in the reference.
+  /** CSV member `name` of archive `path`, its columns checked on the
+    * driver: one IllegalArgumentException names each column of
+    * [[MemberColumns]] it lacks and each MFD magnitude that is not a number.
     */
-  def loadSolutionZip(spark: SparkSession, path: String): Solution = {
-    val members = readZipMembers(path, RequiredMembers.toSet + MfdsPath)
-    val missing = RequiredMembers.filterNot(members.contains)
-    if (missing.nonEmpty)
-      throw new IllegalArgumentException(
-        s"Branch archive $path is missing ${missing.mkString(", ")}")
-    val geo = members(FaultInformationPath)
-    val faults = parseFaultSectionsJson(spark, geo)
-    val faultSystem =
-      if (faults.isEmpty) FaultSystem.Crustal else faults.head.faultSystem
-    val joinTable =
-      try parseRaggedIndices(spark, members(RuptureFaultJoinPath), faultSystem)
-      catch {
-        case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"Branch archive $path: ${e.getMessage}", e)
-      }
-    val props = extractRuptures(
-      csvDf(spark, members(RupturePropertiesPath)),
-      csvDf(spark, members(RuptureRatesPath)),
-      faultSystem)
-    val mfds = members.get(MfdsPath).map(m => meltMfds(csvDf(spark, m), faultSystem))
-    Solution(faults, props, joinTable, mfds, faultSystem)
+  private def csvMember(spark: SparkSession, path: String, members: Map[String, String], name: String): DataFrame = {
+    import spark.implicits._
+    val df = spark.read.option("header", true).option("inferSchema", true)
+      .csv(spark.createDataset(members(name).linesIterator.toSeq))
+    val required = MemberColumns(name)
+    val bad = required.filterNot(c => df.columns.exists(_.equalsIgnoreCase(c))).map(c => s"no '$c'") ++
+      df.columns.filter(c => name == MfdsPath && !required.contains(c) && c.toDoubleOption.isEmpty)
+        .map(c => s"magnitude '$c' is not a number")
+    if (bad.nonEmpty)
+      throw new IllegalArgumentException(s"Branch archive $path: $name has bad columns: ${bad.mkString(", ")}")
+    df
   }
 
-  /** Weighted merge of branch archives of ONE fault system
-    * (≙ _merge_branches, api.py:455-529): faults and the join table are
-    * branch-invariant and parsed once from the first branch; rupture
-    * rates and MFD rates are Σ(wᵢ·rateᵢ) across branches via the
-    * distributed union-all merge.
+  /** Weighted merge of the branch archives of ONE fault system
+    * (≙ _merge_branches, api.py:455-529). The branch-invariant members,
+    * GeoJSON faults (S6/F3-F5), the ragged join table (S5/U3) and the
+    * rupture properties, are parsed once, from the first archive
+    * (≙ api.py:472-485). Every archive gives only its rates and MFDs,
+    * merged as Σ(wᵢ·rateᵢ) by [[mergeBranchRates]] (A8); the properties
+    * take the merged rates in one [[extractRuptures]] (S4/J10). A later
+    * archive's other members are checked by name but not read, so
+    * malformed content there is not reported, as in the reference.
+    * Hikurangi/Puysegur archives carry no MFD member → None.
     */
   def mergeSolutionZips(spark: SparkSession, branches: Seq[(Double, String)]): Solution = {
     require(branches.nonEmpty, "No branches to merge.")
-    val parsed = branches.map { case (w, p) => (w, loadSolutionZip(spark, p)) }
-    val (firstW @ _, first) = parsed.head
-    val mergedProps = mergeBranches(
-      parsed.map { case (w, s) => (w, s.ruptureProperties) },
-      keyCols = Seq("nshm_id", "fault_system"))
-    val mergedMfds = first.mfds.map { _ =>
-      mergeBranchRates(
-        parsed.map { case (w, s) =>
-          (w, s.mfds.getOrElse(throw new IllegalArgumentException(
-            "Expected MFDs for the solution but got None")))
-        },
-        keyCols = Seq("nshm_id", "magnitude", "fault_system"))
+    val firstPath = branches.head._2
+    val first = readZipMembers(firstPath, RequiredMembers.toSet + MfdsPath)
+    val faults = parseFaultSectionsJson(spark, first(FaultInformationPath))
+    val faultSystem =
+      if (faults.isEmpty) FaultSystem.Crustal else faults.head.faultSystem
+    val joinTable =
+      try parseRaggedIndices(spark, first(RuptureFaultJoinPath), faultSystem)
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"Branch archive $firstPath: ${e.getMessage}", e)
+      }
+    val properties = csvMember(spark, firstPath, first, RupturePropertiesPath)
+    val withMfds = first.contains(MfdsPath)
+    val rated = branches.map { case (w, path) =>
+      val members = if (path == firstPath) first else readZipMembers(path, Set(RuptureRatesPath, MfdsPath))
+      if (withMfds && !members.contains(MfdsPath))
+        throw new IllegalArgumentException(
+          s"Branch archive $path is missing $MfdsPath, which the first archive of its group has")
+      (w, csvMember(spark, path, members, RuptureRatesPath),
+        Option.when(withMfds)(meltMfds(csvMember(spark, path, members, MfdsPath), faultSystem)))
     }
-    first.copy(ruptureProperties = mergedProps, mfds = mergedMfds)
+    val rates = mergeBranchRates(rated.map { case (w, r, _) => (w, r) }, Seq("Rupture Index"), "Annual Rate")
+    val mfds = Option.when(withMfds)(mergeBranchRates(
+      rated.map { case (w, _, m) => (w, m.get) }, Seq("nshm_id", "magnitude", "fault_system")))
+    Solution(faults, extractRuptures(properties, rates, faultSystem), joinTable, mfds, faultSystem)
   }
 
   /** Stack per-system solutions and load them into a database

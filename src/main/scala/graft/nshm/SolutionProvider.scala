@@ -87,11 +87,11 @@ object SolutionProvider {
   /** Shared manifest parse: one line per branch `group,weight,zip-path`
     * (blank lines and `#` comments ignored). Only the first remaining
     * line may be a header, recognized by a non-numeric weight field; any
-    * other line that is not a non-empty group, a numeric weight and a
-    * non-empty path throws one IllegalArgumentException naming `source`,
-    * the line number and the line, instead of silently dropping a
-    * branch. First-seen weight wins per (group, path) — the reference's
-    * `seen_ids` dedup (api.py:100-110).
+    * other line that is not a non-empty group, a finite non-negative
+    * weight and a non-empty path throws one IllegalArgumentException
+    * naming `source`, the line number and the line, instead of silently
+    * dropping a branch or merging NaN rates. First-seen weight wins per
+    * (group, path) — the reference's `seen_ids` dedup (api.py:100-110).
     */
   def parseManifest(
       rawLines: Seq[String], source: String): Map[String, Seq[(Double, String)]] = {
@@ -99,12 +99,12 @@ object SolutionProvider {
       .filter { case (l, _) => l.nonEmpty && !l.startsWith("#") }
     val parsed = lines.zipWithIndex.flatMap { case ((line, i), k) =>
       line.split(",", 3).map(_.trim) match {
-        case Array(group, weight, path)
-            if group.nonEmpty && path.nonEmpty && weight.toDoubleOption.isDefined =>
+        case Array(group, weight, path) if group.nonEmpty && path.nonEmpty &&
+            weight.toDoubleOption.exists(w => w >= 0 && !w.isInfinite) =>
           Some((group, weight.toDouble, path))
         case Array(_, weight, _) if k == 0 && weight.toDoubleOption.isEmpty => None
         case _ => throw new IllegalArgumentException(
-          s"$source line ${i + 1}: expected group,weight,path with a numeric weight, got '$line'")
+          s"$source line ${i + 1}: expected group,weight,path with a finite non-negative weight, got '$line'")
       }
     }
     parsed
@@ -123,8 +123,8 @@ object SolutionProvider {
     * non-empty group (`Ingest.mergeSolutionZips` ≙ `_merge_branches`),
     * and return the per-system solutions ready for
     * `Ingest.loadComposite` (≙ `_stack_fault_systems` + the generator's
-    * insert loop). Group order follows the manifest for deterministic
-    * surrogate-id allocation.
+    * insert loop). Groups come in name order, not manifest order; that
+    * order fixes the surrogate ids.
     */
   def downloadCompositeSolution(
       spark: SparkSession,

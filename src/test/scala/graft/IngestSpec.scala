@@ -53,15 +53,6 @@ class IngestSpec extends SparkSpec {
     assert(got.toSeq === Seq((1L, 0.25 * 10 + 0.75 * 100), (2L, 0.25 * 20 + 0.75 * 200)))
   }
 
-  test("mergeBranches keeps branch-invariant columns from the first branch (≙ api.py:481-485)") {
-    val b1 = Seq((1L, 6.5, 10.0)).toDF("nshm_id", "magnitude", "rate")
-    val b2 = Seq((1L, 6.5, 30.0)).toDF("nshm_id", "magnitude", "rate")
-    val got = Ingest.mergeBranches(Seq((0.5, b1), (0.5, b2)), Seq("nshm_id")).collect()
-    assert(got.length === 1)
-    assert(got(0).getAs[Double]("magnitude") === 6.5)
-    assert(got(0).getAs[Double]("rate") === 20.0)
-  }
-
   test("inferDipDirection: strike azimuth + 90 in [0, 360) (≙ api.py:201-220)") {
     // due-north strike → dip direction east (90°)
     val dd = Ingest.inferDipDirection(173.0, -43.0, 173.0, -42.0)

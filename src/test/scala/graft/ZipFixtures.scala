@@ -26,23 +26,24 @@ object ZipFixtures {
       |0,2,1,2
       |1,1,2""".stripMargin
 
-  /** Writes a branch archive; members named in `omit` are left out. The
-    * archive is named after its fresh directory, so every archive's file
-    * name is unique (SourcesSpec serves archives by file name).
+  /** Writes a branch archive; members named in `omit` are left out, and
+    * those in `overrides` carry the given content. The archive is named
+    * after its fresh directory, so every archive's file name is unique
+    * (SourcesSpec serves archives by file name).
     */
   def writeBranchZip(
       rate0: Double,
       rate1: Double,
       mfdRate: Double,
       omit: Set[String] = Set.empty,
-      indices: String = twoRuptureIndices): String = {
+      overrides: Map[String, String] = Map.empty): String = {
     val dir = java.nio.file.Paths.get(SparkSpec.tempDir("branch_"))
     val path = dir.resolve(s"${dir.getFileName}.zip").toString
     val zos = new ZipOutputStream(new FileOutputStream(path))
     def member(name: String, content: String): Unit =
       if (!omit.contains(name)) {
         zos.putNextEntry(new ZipEntry(name))
-        zos.write(content.getBytes("UTF-8"))
+        zos.write(overrides.getOrElse(name, content).getBytes("UTF-8"))
         zos.closeEntry()
       }
     member(Ingest.FaultInformationPath, geojson)
@@ -54,7 +55,7 @@ object ZipFixtures {
       s"""Rupture Index,Annual Rate
          |0,$rate0
          |1,$rate1""".stripMargin)
-    member(Ingest.RuptureFaultJoinPath, indices)
+    member(Ingest.RuptureFaultJoinPath, twoRuptureIndices)
     member(Ingest.MfdsPath,
       s"""Section Index,6.5,7.0
          |1,$mfdRate,0.0

@@ -11,17 +11,32 @@ class ZipIngestSpec extends SparkSpec {
 
   test("composite build: two weighted branches merge, stack, and load (≙ api.py:455-622)") {
     val z1 = writeBranchZip(rate0 = 0.01, rate1 = 0.002, mfdRate = 0.4)
-    val z2 = writeBranchZip(rate0 = 0.03, rate1 = 0.004, mfdRate = 0.8)
+    // the second archive's branch-invariant members differ; the merge
+    // keeps the first archive's (≙ api.py:481-485)
+    val z2 = writeBranchZip(rate0 = 0.03, rate1 = 0.004, mfdRate = 0.8, overrides = Map(
+      Ingest.RupturePropertiesPath ->
+        "Rupture Index,Magnitude,Area (m^2),Length (m)\n0,5.0,3.0e8,3.0e4\n1,5.5,4.0e8,4.0e4",
+      Ingest.FaultInformationPath -> ZipFixtures.geojson.replace("Alpine Fault", "Other Fault")))
 
     val merged = Ingest.mergeSolutionZips(spark, Seq((0.25, z1), (0.75, z2)))
     assert(merged.faultSystem === FaultSystem.Crustal)
     assert(merged.faults.map(_.name) === Seq("Alpine Fault", "Kakapo"))
 
-    // weighted rates: 0.25·r1 + 0.75·r2
-    val rates = merged.ruptureProperties.orderBy("nshm_id")
-      .select("rate").collect().map(_.getDouble(0))
+    // first-archive properties with weighted rates: 0.25·r1 + 0.75·r2
+    val props = merged.ruptureProperties.orderBy("nshm_id").collect()
+    assert(props.map(_.getAs[Double]("magnitude")).toSeq === Seq(6.5, 7.0))
+    assert(props.map(_.getAs[Double]("area")).toSeq === Seq(1.0e8, 2.0e8))
+    val rates = props.map(_.getAs[Double]("rate"))
     assert(math.abs(rates(0) - (0.25 * 0.01 + 0.75 * 0.03)) < 1e-12)
     assert(math.abs(rates(1) - (0.25 * 0.002 + 0.75 * 0.004)) < 1e-12)
+
+    // a later archive's GeoJSON, indices and properties are checked by
+    // name only: content that would fail to parse is not read
+    val unread = writeBranchZip(rate0 = 0.03, rate1 = 0.004, mfdRate = 0.8, overrides = Seq(
+      Ingest.FaultInformationPath, Ingest.RuptureFaultJoinPath, Ingest.RupturePropertiesPath)
+      .map(_ -> "0,not parsed").toMap)
+    val same = Ingest.mergeSolutionZips(spark, Seq((0.25, z1), (0.75, unread)))
+    assert(same.ruptureProperties.orderBy("nshm_id").collect() === props)
 
     // positive-rate filter kept only the nonzero melted cells
     val mfds = merged.mfds.get.orderBy("nshm_id", "magnitude").collect()
@@ -41,10 +56,10 @@ class ZipIngestSpec extends SparkSpec {
   }
 
   test("a rupture whose indices line lists no section has no faults") {
-    val z = writeBranchZip(0.01, 0.002, 0.4, indices =
+    val z = writeBranchZip(0.01, 0.002, 0.4, overrides = Map(Ingest.RuptureFaultJoinPath ->
       """Rupture Index,Num Sections,# 1,# 2
         |0,2,1,2
-        |1,0""".stripMargin)
+        |1,0""".stripMargin))
     val db = freshDb()
     Ingest.loadComposite(db, Seq(Ingest.mergeSolutionZips(spark, Seq((1.0, z)))))
     assert(db.store.table("rupture_faults").count() === 2)
@@ -57,15 +72,20 @@ class ZipIngestSpec extends SparkSpec {
   }
 
   test("malformed branch archive fails with one error naming the path and missing member") {
+    val good = writeBranchZip(0.01, 0.002, 0.4)
     val z = writeBranchZip(0.01, 0.002, 0.4, omit = Set(Ingest.RuptureFaultJoinPath))
-    val e = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, z))
-    assert(e.getMessage.contains(z))
-    assert(e.getMessage.contains(Ingest.RuptureFaultJoinPath))
-    assert(!e.getMessage.contains(Ingest.RuptureRatesPath))
+    // a later archive is checked by member name too
+    for (branches <- Seq(Seq((1.0, z)), Seq((0.5, good), (0.5, z)))) {
+      val e = intercept[IllegalArgumentException](Ingest.mergeSolutionZips(spark, branches))
+      assert(e.getMessage.contains(z))
+      assert(e.getMessage.contains(Ingest.RuptureFaultJoinPath))
+      assert(!e.getMessage.contains(Ingest.RuptureRatesPath))
+    }
 
     val notZip = java.nio.file.Paths.get(SparkSpec.tempDir("notzip_"), "branch.zip")
     java.nio.file.Files.writeString(notZip, "not a zip")
-    val e2 = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, notZip.toString))
+    val e2 = intercept[IllegalArgumentException](
+      Ingest.mergeSolutionZips(spark, Seq((1.0, notZip.toString))))
     assert(e2.getMessage.contains(notZip.toString))
 
     // indices rows that would be dropped as a header, fail a cast deep in
@@ -79,12 +99,36 @@ class ZipIngestSpec extends SparkSpec {
         Seq(header, "0,2,1,2", "1,3,2") -> "line 3",
         Seq(header, "0,x,1", "", "1,1,2,", "1,2,2,,") -> "line 2, 5",
         Seq("0,3,1", "1,1,2") -> "line 1")) {
-      val bad = writeBranchZip(0.01, 0.002, 0.4, indices = rows.mkString("\n"))
-      val e3 = intercept[IllegalArgumentException](Ingest.loadSolutionZip(spark, bad))
+      val bad = writeBranchZip(0.01, 0.002, 0.4,
+        overrides = Map(Ingest.RuptureFaultJoinPath -> rows.mkString("\n")))
+      val e3 = intercept[IllegalArgumentException](Ingest.mergeSolutionZips(spark, Seq((1.0, bad))))
       assert(e3.getMessage.contains(bad), e3.getMessage)
       assert(e3.getMessage.contains(Ingest.RuptureFaultJoinPath), e3.getMessage)
       assert(e3.getMessage.endsWith(lines), e3.getMessage)
     }
+  }
+
+  test("a CSV member without a column ingest reads fails on the driver, naming archive, member and column") {
+    val good = writeBranchZip(0.01, 0.002, 0.4)
+    for ((member, content, named) <- Seq(
+        (Ingest.RupturePropertiesPath, "Rupture Index,Area (m^2)\n0,1.0e8\n1,2.0e8",
+          Seq("'Magnitude'", "'Length (m)'")),
+        (Ingest.RuptureRatesPath, "Rupture Index,Rate\n0,0.01\n1,0.002", Seq("'Annual Rate'")),
+        (Ingest.MfdsPath, "Section Index,6.5,M7\n1,0.4,0.0\n2,0.0,0.2", Seq("'M7'")),
+        (Ingest.MfdsPath, "Section,6.5,7.0\n1,0.4,0.0\n2,0.0,0.2", Seq("'Section Index'", "'Section'")))) {
+      val bad = writeBranchZip(0.03, 0.004, 0.8, overrides = Map(member -> content))
+      // properties are read from the first archive; rates and MFDs from every archive
+      val branches =
+        if (member == Ingest.RupturePropertiesPath) Seq((1.0, bad)) else Seq((0.5, good), (0.5, bad))
+      val e = intercept[IllegalArgumentException](Ingest.mergeSolutionZips(spark, branches))
+      for (part <- bad +: member +: named) assert(e.getMessage.contains(part), e.getMessage)
+    }
+
+    // a later archive without the MFD member the first archive has is named
+    val noMfds = writeBranchZip(0.03, 0.004, 0.8, omit = Set(Ingest.MfdsPath))
+    val e = intercept[IllegalArgumentException](
+      Ingest.mergeSolutionZips(spark, Seq((0.5, good), (0.5, noMfds))))
+    assert(e.getMessage.contains(noMfds) && e.getMessage.contains(Ingest.MfdsPath), e.getMessage)
   }
 
   test("reopening a store through a file: URI keeps every row") {
@@ -142,7 +186,7 @@ class ZipIngestSpec extends SparkSpec {
 
     // a malformed manifest line past the header is one clear error naming
     // the manifest, the line number and the line — never a dropped branch
-    for (bad <- Seq("CRU,0.5", s"CRU,O.5,$z2")) {
+    for (bad <- Seq("CRU,0.5", s"CRU,O.5,$z2", s"CRU,NaN,$z2", s"CRU,Infinity,$z2", s"CRU,-0.5,$z2")) {
       val badManifest = s"${SparkSpec.tempDir("manifest_")}/bad.csv"
       java.nio.file.Files.writeString(java.nio.file.Paths.get(badManifest),
         s"# comment\ngroup,weight,path\nCRU,0.25,$z1\n$bad\n")
