@@ -6,8 +6,10 @@
 For each of the six store tables, reads the parquet files at any depth
 under <store>/<table>/ with DuckDB and compares the two sides as multisets
 of rows, both ways, with EXCEPT ALL. Prints one line per table: the row
-count of each side and the rows found only in A and only in B. Exits 1 if
-any table differs, 2 if a store lacks a table directory.
+count of each side, the rows found only in A and only in B, and each
+side's parquet file count and bytes, so a change of file layout shows
+even when the rows are equal. Exits 1 if any table's rows differ (the
+layout does not count), 2 if a store lacks a table directory.
 """
 
 import glob
@@ -20,13 +22,24 @@ TABLES = ("parent_fault", "fault", "fault_plane", "rupture", "rupture_faults",
           "magnitude_frequency_distribution")
 
 
-def relation(con, store, table):
-    """A SQL relation over the table's parquet files, or None when it has none."""
+def parquet_files(store, table):
+    """The table's parquet files, at any depth under its directory."""
     d = os.path.join(store, table)
     if not os.path.isdir(d):
         print("store_diff: %s has no table directory %s" % (store, table), file=sys.stderr)
         sys.exit(2)
-    files = sorted(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
+    return sorted(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
+
+
+def layout(store, table):
+    """(parquet file count, parquet bytes) of the table."""
+    files = parquet_files(store, table)
+    return len(files), sum(os.path.getsize(f) for f in files)
+
+
+def relation(con, store, table):
+    """A SQL relation over the table's parquet files, or None when it has none."""
+    files = parquet_files(store, table)
     if not files:
         return None
     listed = ", ".join("'%s'" % f.replace("'", "''") for f in files)
@@ -68,13 +81,16 @@ def main(argv):
         return 2
     con = duckdb.connect()
     differs = False
-    print("%-34s %10s %10s %8s %8s" % ("table", "rows A", "rows B", "only A", "only B"))
+    print("%-34s %10s %10s %8s %8s %9s %9s %11s %11s" % (
+        "table", "rows A", "rows B", "only A", "only B", "files A", "files B", "bytes A", "bytes B"))
     for table in TABLES:
         n_a, n_b, only_a, only_b = diff_table(con, argv[1], argv[2], table)
+        (files_a, bytes_a), (files_b, bytes_b) = layout(argv[1], table), layout(argv[2], table)
         same = only_a == 0 and only_b == 0
         differs |= not same
-        print("%-34s %10d %10d %8d %8d  %s" % (
-            table, n_a, n_b, only_a, only_b, "equal" if same else "DIFFERENT"))
+        print("%-34s %10d %10d %8d %8d %9d %9d %11d %11d  %s" % (
+            table, n_a, n_b, only_a, only_b, files_a, files_b, bytes_a, bytes_b,
+            "equal" if same else "DIFFERENT"))
     return 1 if differs else 0
 
 

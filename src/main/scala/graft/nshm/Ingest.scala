@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Distributed re-expression of the reference's single-process ETL
   * (`/root/reference/nshmdb/api.py`). The network fetch (GraphQL/zip,
-  * api.py:41-176) stays a driver-side shim out of engine scope; everything
-  * from raw file content onward is a DataFrame transform.
+  * api.py:41-176) stays a driver-side shim out of engine scope; members are
+  * checked on the driver, CSV members typed by role, then merged as DataFrames.
   *
   * [[mergeSolutionZips]] is the one archive entry point; it parses each
   * group's branch-invariant members once and reads only the rates and
@@ -124,7 +124,7 @@ object Ingest {
   private val RequiredMembers: Seq[String] =
     Seq(FaultInformationPath, RuptureFaultJoinPath, RuptureRatesPath, RupturePropertiesPath)
 
-  /** The columns each CSV member must carry; the MFD member's others are magnitudes. */
+  /** The columns each CSV member must carry, its index first; the MFD member's others are magnitudes. */
   private val MemberColumns: Map[String, Seq[String]] = Map(
     RupturePropertiesPath -> Seq("Rupture Index", "Magnitude", "Area (m^2)", "Length (m)"),
     RuptureRatesPath -> Seq("Rupture Index", "Annual Rate"),
@@ -151,21 +151,23 @@ object Ingest {
     } finally zf.close()
   }
 
-  /** CSV member `name` of archive `path`, its columns checked on the
-    * driver: one IllegalArgumentException names each column of
+  /** CSV member `name` of archive `path`, read with no job and checked on
+    * the driver: one IllegalArgumentException names each column of
     * [[MemberColumns]] it lacks and each MFD magnitude that is not a number.
+    * Types are declared: the index LONG, other required columns and magnitudes DOUBLE, the rest STRING.
     */
   private def csvMember(spark: SparkSession, path: String, members: Map[String, String], name: String): DataFrame = {
     import spark.implicits._
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(spark.createDataset(members(name).linesIterator.toSeq))
+    val df = spark.read.option("header", true).csv(spark.createDataset(members(name).linesIterator.toSeq))
     val required = MemberColumns(name)
     val bad = required.filterNot(c => df.columns.exists(_.equalsIgnoreCase(c))).map(c => s"no '$c'") ++
       df.columns.filter(c => name == MfdsPath && !required.contains(c) && c.toDoubleOption.isEmpty)
         .map(c => s"magnitude '$c' is not a number")
     if (bad.nonEmpty)
       throw new IllegalArgumentException(s"Branch archive $path: $name has bad columns: ${bad.mkString(", ")}")
-    df
+    def declared(c: String) = if (c.equalsIgnoreCase(required.head)) "long"
+      else if (name == MfdsPath || required.exists(_.equalsIgnoreCase(c))) "double" else "string"
+    df.select(df.columns.map(c => col(s"`$c`").cast(declared(c)).as(c)).toSeq: _*)
   }
 
   /** Weighted merge of the branch archives of ONE fault system

@@ -5,6 +5,7 @@ import graft.operators.Checkpoints
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark-native equivalent of the reference `NSHMDB` facade
   * (`/root/reference/nshmdb/nshmdb.py:82-683`): one engine (no
@@ -309,11 +310,11 @@ final class NshmDb(val store: NshmStore) {
 
   /** ≙ get_fault_names (nshmdb.py:596-608). */
   def getFaultNames: Set[String] =
-    parentFault.select("name").distinct().collect().map(_.getString(0)).toSet
+    parentFault.select("name").collect().map(_.getString(0)).toSet
 
   /** ≙ get_fault_ids (nshmdb.py:610-621) — NSHM ids, not surrogates. */
   def getFaultIds: Set[Long] =
-    fault.select("nshm_id").distinct().collect().map(_.getLong(0)).toSet
+    fault.select("nshm_id").collect().map(_.getLong(0)).toSet
 
   /** ≙ most_likely_fault (nshmdb.py:165-248): pseudo-activity rate per
     * parent fault. At most three rounds of key-filtered scans: the
@@ -360,7 +361,7 @@ final class NshmDb(val store: NshmStore) {
 
   // ------------------------------------------------------------- inserts
 
-  /** The one surrogate-id allocator (≙ the reference's max+1 scheme,
+  /** Surrogate ids for a `DataFrame` insert (≙ the reference's max+1 scheme,
     * nshmdb.py:270-272, in natural-key order, not insertion order): ids
     * fill field 0 of `Schemas.all(table)` from [[nextId]]. Range-partition
     * and sort on the key, pin lazily, then per-partition sizes → offsets
@@ -385,48 +386,47 @@ final class NshmDb(val store: NshmStore) {
     store.append(table, spark.createDataFrame(withIds, schema))
   }
 
-  /** max + 1 of `table`'s id; on an empty table 1, or [[NshmDb.FirstFaultId]]. */
+  /** [[idAfter]] the max of `table`'s id, by one aggregate job. */
   private def nextId(table: String): Long = {
     val row = store.table(table).agg(max(col(Schemas.all(table).fields(0).name))).collect().head
-    if (!row.isNullAt(0)) row.getLong(0) + 1
-    else if (table == "fault") NshmDb.FirstFaultId
-    else 1L
+    idAfter(table, Option.unless(row.isNullAt(0))(row.getLong(0)))
   }
 
-  /** ≙ insert_many_faults (nshmdb.py:250-311): upsert parent faults on
-    * their natural key (left-anti join + append, ≙ INSERT OR IGNORE),
-    * number faults and planes in input order from [[nextId]] (driver
-    * `Seq`s, as in the reference), flatten plane corners (F8).
+  /** max + 1; an empty table starts at 1, `fault` at 0 (the reference's quirk, nshmdb.py:270-272). */
+  private def idAfter(table: String, maxId: Option[Long]): Long =
+    maxId.fold(if (table == "fault") 0L else 1L)(_ + 1)
+
+  /** ≙ insert_many_faults (nshmdb.py:250-311), on the driver: upsert
+    * parent faults on their natural key (≙ INSERT OR IGNORE) against one
+    * collect of `parent_fault`, new names in Spark's string order; number
+    * faults and planes in input order from [[nextId]]; flatten corners (F8).
     */
   def insertManyFaults(faults: Seq[FaultInfo]): Unit = {
     import spark.implicits._
-    val names = faults.map(_.name).distinct.toDF("name")
-    appendWithDenseId("parent_fault", names.join(parentFault, Seq("name"), "left_anti"), Seq("name"))
+    val known = parentFault.collect().map(r => r.getString(1) -> r.getLong(0)).toMap
+    val added = faults.map(_.name).distinct.filterNot(known.contains).sortBy(UTF8String.fromString)
+      .zip(Iterator.iterate(idAfter("parent_fault", known.values.maxOption))(_ + 1))
+    if (added.nonEmpty) store.append("parent_fault", added.toDF("name", "parent_id"))
+    val parentIds = known ++ added
 
     val startFault = nextId("fault")
-    val faultRows = faults.zipWithIndex.map { case (f, i) =>
-      (startFault + i, f.faultSystem, f.faultNshmId, f.rake, f.tectType, f.name)
-    }.toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "name")
-    store.append(
-      "fault",
-      faultRows
-        .join(broadcast(parentFault), Seq("name"))
-        .select("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    store.append("fault", faults.zipWithIndex.map { case (f, i) =>
+      (startFault + i, f.faultSystem, f.faultNshmId, f.rake, f.tectType, parentIds(f.name))
+    }.toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
 
     val planeRows = faults.zipWithIndex.flatMap { case (f, i) =>
       f.fault.toSeq.flatMap(_.planes).map(p => (p, startFault + i))
     }
     if (planeRows.nonEmpty) {
       val startPlane = nextId("fault_plane")
-      val planes = planeRows.zipWithIndex.map { case ((p, faultId), j) =>
+      store.append("fault_plane", planeRows.zipWithIndex.map { case ((p, faultId), j) =>
         val c = p.corners
         (startPlane + j, c(0)(0), c(0)(1), c(1)(0), c(1)(1), c(2)(0), c(2)(1), c(3)(0), c(3)(1),
           p.topDepth, p.bottomDepth, faultId)
       }.toDF(
         "plane_id", "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
         "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
-        "top_depth", "bottom_depth", "fault_id")
-      store.append("fault_plane", planes)
+        "top_depth", "bottom_depth", "fault_id"))
     }
   }
 
@@ -477,9 +477,6 @@ final class NshmDb(val store: NshmStore) {
 }
 
 object NshmDb {
-
-  /** `fault` ids start at 0, the others at 1: the reference's quirk (nshmdb.py:270-272). */
-  private val FirstFaultId = 0L
 
   /** F1 rounding (nshmdb.py:215-221), the snap [[NshmDb.mostLikelyFault]]
     * applies: the smallest stored value ≥ target, clamped to the maximum —

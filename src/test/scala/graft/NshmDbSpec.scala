@@ -219,6 +219,21 @@ class NshmDbSpec extends SparkSpec {
     assert(db.store.table("fault").count() === 2)
   }
 
+  test("new parent names are numbered in Spark's string order: UTF-8 bytes, not UTF-16 units") {
+    val db = freshDb()
+    // U+1F600 comes first in UTF-16 code units (a surrogate pair) and in
+    // this input, after U+FF21 in UTF-8 bytes
+    val (emoji, fullwidthA) = ("\uD83D\uDE00", "\uFF21")
+    db.insertManyFaults(Seq(
+      FaultInfo(FaultSystem.Crustal, 1L, emoji, 90.0, None),
+      FaultInfo(FaultSystem.Crustal, 2L, fullwidthA, 90.0, None)))
+    val ids = db.store.table("parent_fault").collect().map(r => r.getString(1) -> r.getLong(0)).toMap
+    val sparkOrder = spark.createDataset(Seq(emoji, fullwidthA))(org.apache.spark.sql.Encoders.STRING)
+      .orderBy("value").collect().toSeq
+    assert(sparkOrder === Seq(fullwidthA, emoji))
+    assert(sparkOrder.map(ids) === Seq(1L, 2L))
+  }
+
   test("subduction fault naming splits per section (F6, nshmdb.py:556-563)") {
     import spark.implicits._
     val db = freshDb()

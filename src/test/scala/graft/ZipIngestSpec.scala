@@ -110,18 +110,43 @@ class ZipIngestSpec extends SparkSpec {
 
   test("a CSV member without a column ingest reads fails on the driver, naming archive, member and column") {
     val good = writeBranchZip(0.01, 0.002, 0.4)
+    val properties = "Rupture Index,Magnitude,Area (m^2),Length (m)"
+    def build(branches: Seq[(Double, String)]): NshmDb = {
+      val db = freshDb()
+      Ingest.loadComposite(db, Seq(Ingest.mergeSolutionZips(spark, branches)))
+      db
+    }
+    def tables(db: NshmDb) = Schemas.all.keys.map(n => n -> db.store.table(n).collect().toSet).toMap
+    // (member, content, what the error names; nothing when the build equals the default member's)
     for ((member, content, named) <- Seq(
         (Ingest.RupturePropertiesPath, "Rupture Index,Area (m^2)\n0,1.0e8\n1,2.0e8",
           Seq("'Magnitude'", "'Length (m)'")),
         (Ingest.RuptureRatesPath, "Rupture Index,Rate\n0,0.01\n1,0.002", Seq("'Annual Rate'")),
         (Ingest.MfdsPath, "Section Index,6.5,M7\n1,0.4,0.0\n2,0.0,0.2", Seq("'M7'")),
-        (Ingest.MfdsPath, "Section,6.5,7.0\n1,0.4,0.0\n2,0.0,0.2", Seq("'Section Index'", "'Section'")))) {
+        (Ingest.MfdsPath, "Section,6.5,7.0\n1,0.4,0.0\n2,0.0,0.2", Seq("'Section Index'", "'Section'")),
+        // declared types: a cell that is not a number fails the cast, never reads as null
+        (Ingest.RupturePropertiesPath, s"$properties\n0,6.5,1.0e8,1.0e4\n1,big,2.0e8,2.0e4",
+          Seq("CAST_INVALID_INPUT", "'big'")),
+        (Ingest.RuptureRatesPath, "Rupture Index,Annual Rate\n0,0.03\n1,often", Seq("CAST_INVALID_INPUT", "'often'")),
+        (Ingest.MfdsPath, "Section Index,6.5,7.0\n1,0.8,0.0\n2,lots,0.4", Seq("CAST_INVALID_INPUT", "'lots'")),
+        // a column ingest does not read is a string, whatever it holds
+        (Ingest.RupturePropertiesPath,
+          "Rupture Index,Magnitude,Name,Area (m^2),Length (m)\n0,6.5,Alpine,1.0e8,1.0e4\n1,7.0,Kakapo,2.0e8,2.0e4",
+          Seq.empty))) {
       val bad = writeBranchZip(0.03, 0.004, 0.8, overrides = Map(member -> content))
       // properties are read from the first archive; rates and MFDs from every archive
-      val branches =
-        if (member == Ingest.RupturePropertiesPath) Seq((1.0, bad)) else Seq((0.5, good), (0.5, bad))
-      val e = intercept[IllegalArgumentException](Ingest.mergeSolutionZips(spark, branches))
-      for (part <- bad +: member +: named) assert(e.getMessage.contains(part), e.getMessage)
+      def branches(z: String) =
+        if (member == Ingest.RupturePropertiesPath) Seq((1.0, z)) else Seq((0.5, good), (0.5, z))
+      if (named.isEmpty)
+        assert(tables(build(branches(bad))) === tables(build(branches(writeBranchZip(0.03, 0.004, 0.8)))))
+      else if (named.head == "CAST_INVALID_INPUT") {
+        val e = intercept[Exception](build(branches(bad)))
+        val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+        for (part <- named) assert(messages.contains(part), messages)
+      } else {
+        val e = intercept[IllegalArgumentException](Ingest.mergeSolutionZips(spark, branches(bad)))
+        for (part <- bad +: member +: named) assert(e.getMessage.contains(part), e.getMessage)
+      }
     }
 
     // a later archive without the MFD member the first archive has is named
