@@ -53,4 +53,15 @@ object BoolSetCompiler {
     }
     Compiled(flagCols, fold(tree))
   }
+
+  /** The expression's truth value on one set, given as membership: `hit(n)`
+    * tells whether atom `n` is in the set. Agrees with [[compile]]'s
+    * predicate on a group whose flag for `n` is set exactly when `hit(n)`.
+    */
+  def holds(tree: Expr, hit: String => Boolean): Boolean = tree match {
+    case Atom(n) => hit(n)
+    case Not(x) => !holds(x, hit)
+    case And(l, r) => holds(l, hit) && holds(r, hit)
+    case Or(l, r) => holds(l, hit) || holds(r, hit)
+  }
 }

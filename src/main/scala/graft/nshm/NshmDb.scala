@@ -1,11 +1,13 @@
 package graft.nshm
 
-import graft.dsl.{BoolSetCompiler, Parser}
+import graft.dsl.{BoolSetCompiler, Expr, Parser}
 import graft.operators.Checkpoints
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** Spark-native equivalent of the reference `NSHMDB` facade
   * (`/root/reference/nshmdb/nshmdb.py:82-683`): one engine (no
@@ -14,18 +16,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference's per-result N+1 hydration loop (nshmdb.py:664-683) is one
   * batched round of scans.
   *
-  * Scale notes: a search is one plan: `fault` and `parent_fault` are
-  * broadcast, the `rupture_faults` bridge is the fact side, top-k plans
-  * as TakeOrderedAndProject. A point lookup is one to three rounds of
-  * concurrent scans joined on the driver: the fault-model tables
-  * (`parent_fault`, `fault`, `fault_plane`: one row per parent, section or
-  * plane, thousands whatever the rupture count) are read whole, and
-  * `rupture`, `rupture_faults` and `magnitude_frequency_distribution`
-  * only through a filter on their key that reaches the parquet scan, so
-  * no lookup plan has an exchange. Store relations are resolved
-  * once per table version (file listing and schema only; no data or
-  * result is cached, every call still scans), so building a query over
-  * unchanged tables submits no Spark job. Behavioral divergences from the
+  * Scale notes: the fault-model tables (`parent_fault`, `fault`,
+  * `fault_plane`: one row per parent, section or plane, thousands whatever
+  * the rupture count) are read whole and joined on the driver. A search
+  * resolves its atoms against them first, then, for an expression false
+  * on the empty set, reads only the links of the atoms' faults and the
+  * qualifying ruptures by id, finishing the top-k on the driver; any other
+  * expression aggregates over every rupture in one Spark plan (see
+  * [[queryRuptures]]). A point lookup is one to three rounds of
+  * concurrent scans joined on the driver: `rupture`, `rupture_faults` and
+  * `magnitude_frequency_distribution` are read only through a filter on
+  * their key that reaches the parquet scan, so no lookup plan has an
+  * exchange. Store relations are resolved once per table version (file
+  * listing and schema only; no data or result is cached, every call still
+  * scans). Behavioral divergences from the
   * reference (each deliberate, see Scaladoc on the method):
   * zero-valued bounds are honored (reference drops them via Python
   * truthiness, query.py:298-311); NOT over compound DSL expressions works
@@ -52,12 +56,28 @@ final class NshmDb(val store: NshmStore) {
   // ---------------------------------------------------------------- query
 
   /** The analytical search (≙ NSHMDB.query → query.to_sql,
-    * nshmdb.py:623-663 / query.py:295-338) as a DataFrame plan:
-    * J7 join → per-rupture flag aggregation (A5) → HAVING (A6/A7) →
-    * top-k by rate DESC NULLS LAST (O1). Returns the reference's 7
-    * columns: rupture_id, nshm_id, fault_system, magnitude, area, len,
-    * rate. A bound of exactly 0.0 is a real bound (the reference drops
-    * it via Python truthiness, query.py:298-311).
+    * nshmdb.py:623-663 / query.py:295-338): the ruptures whose set of
+    * parent-fault names satisfies the DSL expression, top-k by rate DESC
+    * (NaN first, as Spark orders it). Returns the reference's 7 columns:
+    * rupture_id, nshm_id, fault_system, magnitude, area, len, rate. A
+    * bound of exactly 0.0 is a real bound (the reference drops it via
+    * Python truthiness, query.py:298-311).
+    *
+    * Eager: the search runs here, and the rows come back as a local frame,
+    * so collecting it submits no job. One round collects `parent_fault`
+    * and `fault` and joins them on the driver; a fault counts, with its
+    * parent's name, only if its parent row exists. Then:
+    *  - if the expression is false on the empty fault set (every NOT-free
+    *    expression, and e.g. `a & (b | !c)`), only ruptures linked to an
+    *    atom's fault can qualify. One scan collects those links by
+    *    fault_id and the expression is decided per rupture on the driver;
+    *    one more round collects the qualifying `rupture` rows by id with
+    *    the `rate IS NOT NULL` and bound filters in the scan, beside their
+    *    full links when `faultCountLimit` needs the distinct parents
+    *    counted. The top-k runs on the driver.
+    *  - otherwise (e.g. `!(a | b)`), the flags are aggregated over every
+    *    rupture in Spark, as J7 → A5 → A6/A7 → O1, joined to the driver's
+    *    fault model as a broadcast local relation.
     */
   def queryRuptures(
       queryStr: String,
@@ -65,40 +85,96 @@ final class NshmDb(val store: NshmStore) {
       rateBounds: (Option[Double], Option[Double]) = (None, None),
       limit: Int = 100,
       faultCountLimit: Option[Int] = None): DataFrame = {
+    require(limit >= 0, s"limit must be >= 0, got $limit")
     val tree = Parser.parse(queryStr)
-    val compiled = BoolSetCompiler.compile(tree, col("name"))
-    val r = rupture
-    var base = r
-      .join(ruptureFaults.as("rf"), r("rupture_id") === col("rf.rupture_id"))
-      .join(broadcast(fault).as("f"), col("rf.fault_id") === col("f.fault_id"))
-      .join(
-        broadcast(parentFault).as("pf"),
-        col("f.parent_id") === col("pf.parent_id"))
-      .filter(r("rate").isNotNull)
-    magnitudeBounds._1.foreach(lo => base = base.filter(r("magnitude") >= lo))
-    magnitudeBounds._2.foreach(hi => base = base.filter(r("magnitude") <= hi))
-    rateBounds._1.foreach(lo => base = base.filter(r("rate") >= lo))
-    rateBounds._2.foreach(hi => base = base.filter(r("rate") <= hi))
+    val Seq(parents, faults) =
+      collectAll(parentFault.select("parent_id", "name"), fault.select("fault_id", "parent_id"))
+    // (fault_id, parent_id, name) ≙ fault ⋈ parent_fault
+    val names = parents.groupMap(_.getLong(0))(_.getString(1))
+    val model = for {
+      f <- faults.toSeq
+      parentId <- longAt(f, 1).toSeq
+      name <- names.getOrElse(parentId, Array.empty[String])
+    } yield (f.getLong(0), parentId, name)
+    val kept = Seq(
+      Some(col("rate").isNotNull),
+      magnitudeBounds._1.map(col("magnitude") >= _),
+      magnitudeBounds._2.map(col("magnitude") <= _),
+      rateBounds._1.map(col("rate") >= _),
+      rateBounds._2.map(col("rate") <= _)).flatten.reduce(_ && _)
+    val ruptures = rupture.filter(kept)
+    val rows =
+      if (BoolSetCompiler.holds(tree, _ => false))
+        aggregatedSearch(tree, model, ruptures, limit, faultCountLimit)
+      else prunedSearch(tree, model, ruptures, limit, faultCountLimit)
+    spark.createDataFrame(rows.toSeq.asJava, StructType(searchColumns.map(rupture.schema(_))))
+  }
 
+  /** The search over the candidate ruptures only, for an expression that
+    * is false on the empty set: see [[queryRuptures]].
+    */
+  private def prunedSearch(
+      tree: Expr,
+      model: Seq[(Long, Long, String)],
+      ruptures: DataFrame,
+      limit: Int,
+      faultCountLimit: Option[Int]): Array[Row] = {
+    val atoms = BoolSetCompiler.atoms(tree).toSet
+    val atomsOf = model.filter(m => atoms(m._3)).groupMapReduce(_._1)(m => Set(m._3))(_ ++ _)
+    if (atomsOf.isEmpty) return Array.empty
+    val candidates = ruptureFaults
+      .filter(col("fault_id").isin(atomsOf.keys.toSeq: _*))
+      .select("rupture_id", "fault_id")
+      .collect()
+      .filter(!_.isNullAt(0))
+      .groupMapReduce(_.getLong(0))(link => atomsOf(link.getLong(1)))(_ ++ _)
+      .collect { case (id, hit) if BoolSetCompiler.holds(tree, hit) => id }
+      .toSeq
+    if (candidates.isEmpty) return Array.empty
+    val found +: links = collectAll(
+      ruptures.filter(col("rupture_id").isin(candidates: _*)).select(searchColumns.map(col): _*) +:
+        faultCountLimit.map(_ => linksOf(candidates)).toSeq: _*)
+    val counted = faultCountLimit.fold(found) { most =>
+      val parentsOf = model.groupMap(_._1)(_._2)
+      val parents = links.head.groupMapReduce(_.getLong(0))(
+        link => longAt(link, 1).toSet[Long].flatMap(parentsOf.getOrElse(_, Nil)))(_ ++ _)
+      found.filter(r => parents.get(r.getLong(0)).exists(_.size <= most))
+    }
+    counted.sortBy(_.getDouble(6))(Ordering.Double.TotalOrdering.reverse).take(limit)
+  }
+
+  /** The search aggregated over every rupture, for an expression that
+    * holds on the empty set: see [[queryRuptures]].
+    */
+  private def aggregatedSearch(
+      tree: Expr,
+      model: Seq[(Long, Long, String)],
+      ruptures: DataFrame,
+      limit: Int,
+      faultCountLimit: Option[Int]): Array[Row] = {
+    import spark.implicits._
+    val compiled = BoolSetCompiler.compile(tree, col("name"))
     val aggCols = Seq(
-      max(r("nshm_id")).as("nshm_id"),
-      max(r("fault_system")).as("fault_system"),
-      max(r("magnitude")).as("magnitude"),
-      max(r("area")).as("area"),
-      max(r("len")).as("len"),
-      max(r("rate")).as("rate"),
-      countDistinct(col("pf.parent_id")).as("__n_faults")) ++ compiled.flagCols
+      max("nshm_id").as("nshm_id"),
+      max("fault_system").as("fault_system"),
+      max("magnitude").as("magnitude"),
+      max("area").as("area"),
+      max("len").as("len"),
+      max("rate").as("rate"),
+      countDistinct("parent_id").as("__n_faults")) ++ compiled.flagCols
     val having = faultCountLimit
       .map(n => col("__n_faults") <= n && compiled.predicate)
       .getOrElse(compiled.predicate)
-
-    base
-      .groupBy(r("rupture_id"))
+    ruptures
+      .join(ruptureFaults.select("rupture_id", "fault_id"), "rupture_id")
+      .join(broadcast(model.toDF("fault_id", "parent_id", "name")), "fault_id")
+      .groupBy("rupture_id")
       .agg(aggCols.head, aggCols.tail: _*)
       .filter(having)
-      .select(("rupture_id" +: "nshm_id" +: "fault_system" +: ruptureMeasures).map(col): _*)
+      .select(searchColumns.map(col): _*)
       .orderBy(col("rate").desc_nulls_last)
       .limit(limit)
+      .collect()
   }
 
   /** ≙ NSHMDB.query (nshmdb.py:623-683): run the search, then hydrate ALL
@@ -123,6 +199,9 @@ final class NshmDb(val store: NshmStore) {
 
   /** The rupture's nullable measures, in [[Rupture]] field order. */
   private val ruptureMeasures = Seq("magnitude", "area", "len", "rate")
+
+  /** The search's output columns, in order. */
+  private val searchColumns = Seq("rupture_id", "nshm_id", "fault_system") ++ ruptureMeasures
 
   private def ruptureAt(
       row: Row, i: Int, faultSystem: Int, nshmId: Long, faults: Map[String, Fault]): Rupture = {
@@ -400,19 +479,20 @@ final class NshmDb(val store: NshmStore) {
     * parent faults on their natural key (≙ INSERT OR IGNORE) against one
     * collect of `parent_fault`, new names in Spark's string order; number
     * faults and planes in input order from [[nextId]]; flatten corners (F8).
+    * Each table's rows are written as one file, whatever the core count.
     */
   def insertManyFaults(faults: Seq[FaultInfo]): Unit = {
     import spark.implicits._
     val known = parentFault.collect().map(r => r.getString(1) -> r.getLong(0)).toMap
     val added = faults.map(_.name).distinct.filterNot(known.contains).sortBy(UTF8String.fromString)
       .zip(Iterator.iterate(idAfter("parent_fault", known.values.maxOption))(_ + 1))
-    if (added.nonEmpty) store.append("parent_fault", added.toDF("name", "parent_id"))
+    if (added.nonEmpty) store.append("parent_fault", added.toDF("name", "parent_id").coalesce(1))
     val parentIds = known ++ added
 
     val startFault = nextId("fault")
     store.append("fault", faults.zipWithIndex.map { case (f, i) =>
       (startFault + i, f.faultSystem, f.faultNshmId, f.rake, f.tectType, parentIds(f.name))
-    }.toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    }.toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id").coalesce(1))
 
     val planeRows = faults.zipWithIndex.flatMap { case (f, i) =>
       f.fault.toSeq.flatMap(_.planes).map(p => (p, startFault + i))
@@ -426,7 +506,7 @@ final class NshmDb(val store: NshmStore) {
       }.toDF(
         "plane_id", "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
         "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
-        "top_depth", "bottom_depth", "fault_id"))
+        "top_depth", "bottom_depth", "fault_id").coalesce(1))
     }
   }
 
