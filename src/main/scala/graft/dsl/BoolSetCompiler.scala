@@ -13,8 +13,11 @@ import org.apache.spark.sql.functions._
   * `SUM(CASE WHEN parent_fault.name = ? THEN 1 ELSE 0 END) > 0`,
   * query.py:273); the tree folds over the flag columns with `&&`/`||`/`!`.
   *
-  * Usage: `groupBy(key).agg(first..., flags: _*)` then
-  * `.filter(predicate)` then drop the flag columns.
+  * Two evaluations of one tree: [[compile]] serves plans that aggregate
+  * the flags per group (`groupBy(key).agg(first..., flags: _*)` then
+  * `.filter(predicate)`), as q_dsl_topk does; [[holds]] decides one set on
+  * the driver, as `NshmDb.queryRuptures` does for each rupture linked to
+  * an atom's fault.
   */
 object BoolSetCompiler {
 

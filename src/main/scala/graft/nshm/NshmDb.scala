@@ -1,6 +1,6 @@
 package graft.nshm
 
-import graft.dsl.{BoolSetCompiler, Expr, Parser}
+import graft.dsl.{BoolSetCompiler, Parser}
 import graft.operators.Checkpoints
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,18 +19,19 @@ import scala.jdk.CollectionConverters._
   * Scale notes: the fault-model tables (`parent_fault`, `fault`,
   * `fault_plane`: one row per parent, section or plane, thousands whatever
   * the rupture count) are read whole and joined on the driver. A search
-  * resolves its atoms against them first, then, for an expression false
-  * on the empty set, reads only the links of the atoms' faults and the
-  * qualifying ruptures by id, finishing the top-k on the driver; any other
-  * expression aggregates over every rupture in one Spark plan (see
-  * [[queryRuptures]]). A point lookup is one to three rounds of
-  * concurrent scans joined on the driver: `rupture`, `rupture_faults` and
-  * `magnitude_frequency_distribution` are read only through a filter on
-  * their key that reaches the parquet scan, so no lookup plan has an
-  * exchange. Store relations are resolved once per table version (file
-  * listing and schema only; no data or result is cached, every call still
-  * scans). Behavioral divergences from the
-  * reference (each deliberate, see Scaladoc on the method):
+  * resolves its atoms against them first and reads only the links of the
+  * atoms' faults, deciding on the driver which linked ruptures pass and
+  * which fail. Spark then takes the top k by rate of the bounded ruptures
+  * that can still qualify; the driver reads the links of those k rows
+  * only where a NOT or the fault-count limit needs them, and widens the
+  * top k while too few survive (see [[queryRuptures]]). A point lookup is
+  * one to three rounds of concurrent scans joined on the driver:
+  * `rupture`, `rupture_faults` and `magnitude_frequency_distribution` are
+  * read only through a filter on their key that reaches the parquet scan.
+  * No search or lookup plan has an exchange. Store relations are resolved
+  * once per table version (file listing and schema only; no data or
+  * result is cached, every call still scans). Behavioral divergences from
+  * the reference (each deliberate, see Scaladoc on the method):
   * zero-valued bounds are honored (reference drops them via Python
   * truthiness, query.py:298-311); NOT over compound DSL expressions works
   * (reference crashes, query.py:267-270); surrogate-id allocation orders
@@ -64,20 +65,27 @@ final class NshmDb(val store: NshmStore) {
     * Python truthiness, query.py:298-311).
     *
     * Eager: the search runs here, and the rows come back as a local frame,
-    * so collecting it submits no job. One round collects `parent_fault`
-    * and `fault` and joins them on the driver; a fault counts, with its
-    * parent's name, only if its parent row exists. Then:
-    *  - if the expression is false on the empty fault set (every NOT-free
-    *    expression, and e.g. `a & (b | !c)`), only ruptures linked to an
-    *    atom's fault can qualify. One scan collects those links by
-    *    fault_id and the expression is decided per rupture on the driver;
-    *    one more round collects the qualifying `rupture` rows by id with
-    *    the `rate IS NOT NULL` and bound filters in the scan, beside their
-    *    full links when `faultCountLimit` needs the distinct parents
-    *    counted. The top-k runs on the driver.
-    *  - otherwise (e.g. `!(a | b)`), the flags are aggregated over every
-    *    rupture in Spark, as J7 → A5 → A6/A7 → O1, joined to the driver's
-    *    fault model as a broadcast local relation.
+    * so collecting it submits no job. Every expression takes one path:
+    *  - one round collects `parent_fault` and `fault` and joins them on the
+    *    driver; a fault counts, with its parent's name, only if its parent
+    *    row exists;
+    *  - one scan collects the links to the atoms' faults by fault_id (none
+    *    when no atom names a fault). Only a rupture with such a link can
+    *    have a non-empty hit set, so the driver decides each of these
+    *    ruptures: passing (P) or failing (F); every other rupture's hit
+    *    set is empty;
+    *  - the pool is the `rupture` rows outside F if the expression holds
+    *    on the empty set (e.g. `!(a | b)`), else the rows in P (none left
+    *    means no rows and no more scans). The `rate IS NOT NULL` and bound
+    *    filters run in the same scan;
+    *  - Spark takes the pool's top n by rate (one job, no exchange), from
+    *    n = `limit`. A rupture counts only with a link to a fault in the
+    *    model (the inner join of the reference's query) and, under
+    *    `faultCountLimit`, at most that many distinct parents. Every P row
+    *    has such a link, so the links of the top rows are read by
+    *    rupture_id only when the expression holds on the empty set or
+    *    `faultCountLimit` is set. If fewer than `limit` rows survive from
+    *    a full top n, n doubles and the round repeats.
     */
   def queryRuptures(
       queryStr: String,
@@ -96,85 +104,51 @@ final class NshmDb(val store: NshmStore) {
       parentId <- longAt(f, 1).toSeq
       name <- names.getOrElse(parentId, Array.empty[String])
     } yield (f.getLong(0), parentId, name)
-    val kept = Seq(
+
+    val atoms = BoolSetCompiler.atoms(tree).toSet
+    val atomsOf = model.filter(m => atoms(m._3)).groupMapReduce(_._1)(m => Set(m._3))(_ ++ _)
+    val hits =
+      if (atomsOf.isEmpty) Map.empty[Long, Set[String]]
+      else ruptureFaults
+        .filter(col("fault_id").isin(atomsOf.keys.toSeq: _*))
+        .select("rupture_id", "fault_id")
+        .collect()
+        .filter(!_.isNullAt(0))
+        .groupMapReduce(_.getLong(0))(link => atomsOf(link.getLong(1)))(_ ++ _)
+    val (passing, failing) = hits.keys.partition(id => BoolSetCompiler.holds(tree, hits(id)))
+    val onEmpty = BoolSetCompiler.holds(tree, _ => false)
+    val pool = Seq(
       Some(col("rate").isNotNull),
       magnitudeBounds._1.map(col("magnitude") >= _),
       magnitudeBounds._2.map(col("magnitude") <= _),
       rateBounds._1.map(col("rate") >= _),
-      rateBounds._2.map(col("rate") <= _)).flatten.reduce(_ && _)
-    val ruptures = rupture.filter(kept)
-    val rows =
-      if (BoolSetCompiler.holds(tree, _ => false))
-        aggregatedSearch(tree, model, ruptures, limit, faultCountLimit)
-      else prunedSearch(tree, model, ruptures, limit, faultCountLimit)
-    spark.createDataFrame(rows.toSeq.asJava, StructType(searchColumns.map(rupture.schema(_))))
-  }
-
-  /** The search over the candidate ruptures only, for an expression that
-    * is false on the empty set: see [[queryRuptures]].
-    */
-  private def prunedSearch(
-      tree: Expr,
-      model: Seq[(Long, Long, String)],
-      ruptures: DataFrame,
-      limit: Int,
-      faultCountLimit: Option[Int]): Array[Row] = {
-    val atoms = BoolSetCompiler.atoms(tree).toSet
-    val atomsOf = model.filter(m => atoms(m._3)).groupMapReduce(_._1)(m => Set(m._3))(_ ++ _)
-    if (atomsOf.isEmpty) return Array.empty
-    val candidates = ruptureFaults
-      .filter(col("fault_id").isin(atomsOf.keys.toSeq: _*))
-      .select("rupture_id", "fault_id")
-      .collect()
-      .filter(!_.isNullAt(0))
-      .groupMapReduce(_.getLong(0))(link => atomsOf(link.getLong(1)))(_ ++ _)
-      .collect { case (id, hit) if BoolSetCompiler.holds(tree, hit) => id }
-      .toSeq
-    if (candidates.isEmpty) return Array.empty
-    val found +: links = collectAll(
-      ruptures.filter(col("rupture_id").isin(candidates: _*)).select(searchColumns.map(col): _*) +:
-        faultCountLimit.map(_ => linksOf(candidates)).toSeq: _*)
-    val counted = faultCountLimit.fold(found) { most =>
-      val parentsOf = model.groupMap(_._1)(_._2)
-      val parents = links.head.groupMapReduce(_.getLong(0))(
-        link => longAt(link, 1).toSet[Long].flatMap(parentsOf.getOrElse(_, Nil)))(_ ++ _)
-      found.filter(r => parents.get(r.getLong(0)).exists(_.size <= most))
-    }
-    counted.sortBy(_.getDouble(6))(Ordering.Double.TotalOrdering.reverse).take(limit)
-  }
-
-  /** The search aggregated over every rupture, for an expression that
-    * holds on the empty set: see [[queryRuptures]].
-    */
-  private def aggregatedSearch(
-      tree: Expr,
-      model: Seq[(Long, Long, String)],
-      ruptures: DataFrame,
-      limit: Int,
-      faultCountLimit: Option[Int]): Array[Row] = {
-    import spark.implicits._
-    val compiled = BoolSetCompiler.compile(tree, col("name"))
-    val aggCols = Seq(
-      max("nshm_id").as("nshm_id"),
-      max("fault_system").as("fault_system"),
-      max("magnitude").as("magnitude"),
-      max("area").as("area"),
-      max("len").as("len"),
-      max("rate").as("rate"),
-      countDistinct("parent_id").as("__n_faults")) ++ compiled.flagCols
-    val having = faultCountLimit
-      .map(n => col("__n_faults") <= n && compiled.predicate)
-      .getOrElse(compiled.predicate)
-    ruptures
-      .join(ruptureFaults.select("rupture_id", "fault_id"), "rupture_id")
-      .join(broadcast(model.toDF("fault_id", "parent_id", "name")), "fault_id")
-      .groupBy("rupture_id")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .filter(having)
+      rateBounds._2.map(col("rate") <= _),
+      if (!onEmpty) Some(col("rupture_id").isin(passing.toSeq: _*))
+      else Option.when(failing.nonEmpty)(!col("rupture_id").isin(failing.toSeq: _*))).flatten
+    val ranked = rupture.filter(pool.reduce(_ && _))
       .select(searchColumns.map(col): _*)
-      .orderBy(col("rate").desc_nulls_last)
-      .limit(limit)
-      .collect()
+      .orderBy(col("rate").desc)
+
+    // the rows with a link to a fault in the model, and at most faultCountLimit distinct parents
+    val parentsOf = model.groupMap(_._1)(_._2)
+    def counted(found: Array[Row]): Array[Row] =
+      if ((!onEmpty && faultCountLimit.isEmpty) || found.isEmpty) found
+      else {
+        val linked = linksOf(found.map(_.getLong(0)).toSeq).collect().groupMapReduce(_.getLong(0))(
+          link => longAt(link, 1).toSet[Long].flatMap(parentsOf.getOrElse(_, Nil)))(_ ++ _)
+        found.filter { r =>
+          linked.get(r.getLong(0)).exists(ps => ps.nonEmpty && faultCountLimit.forall(ps.size <= _))
+        }
+      }
+    @scala.annotation.tailrec
+    def top(n: Int): Array[Row] = {
+      val found = ranked.limit(n).collect()
+      val kept = counted(found)
+      if (kept.length >= limit || found.length < n) kept.take(limit)
+      else top(math.min(2L * n, Int.MaxValue).toInt)
+    }
+    val rows = if (!onEmpty && passing.isEmpty) Array.empty[Row] else top(limit)
+    spark.createDataFrame(rows.toSeq.asJava, StructType(searchColumns.map(rupture.schema(_))))
   }
 
   /** ≙ NSHMDB.query (nshmdb.py:623-683): run the search, then hydrate ALL
@@ -540,7 +514,7 @@ final class NshmDb(val store: NshmStore) {
   /** ≙ _nshm_id_to_fault_id (nshmdb.py:313-322): left join on the
     * composite natural key, dimension side broadcast.
     */
-  def nshmIdToFaultId(df: DataFrame): DataFrame =
+  private def nshmIdToFaultId(df: DataFrame): DataFrame =
     df.join(
       broadcast(fault.select(
         col("fault_system"), col("nshm_id").as("fault_nshm_id"), col("fault_id"))),
@@ -548,7 +522,7 @@ final class NshmDb(val store: NshmStore) {
       "left")
 
   /** ≙ _nshm_id_to_rupture_id (nshmdb.py:324-334). */
-  def nshmIdToRuptureId(df: DataFrame): DataFrame =
+  private def nshmIdToRuptureId(df: DataFrame): DataFrame =
     df.join(
       broadcast(rupture.select(
         col("fault_system"), col("nshm_id").as("rupture_nshm_id"), col("rupture_id"))),

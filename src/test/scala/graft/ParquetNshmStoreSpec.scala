@@ -151,10 +151,16 @@ class ParquetNshmStoreSpec extends SparkSpec {
     val sc = spark.sparkContext
     Listeners.waitUntilEmpty(sc)
     spark.listenerManager.register(listener)
-    try {
+    val (lookupPlans, notJobs) = try {
       lookups(db).foreach { case (_, call) => call() }
       Listeners.waitUntilEmpty(sc)
+      val lookupPlans = plans.asScala.toSeq
+      plans.clear()
+      // a NOT search: its top-k scans every rupture, but no plan of it may shuffle
+      assert(db.queryRuptures("!Alpine Fault").collect().nonEmpty)
+      (lookupPlans, jobsDuring(db.queryRuptures("!Alpine Fault")))
     } finally spark.listenerManager.unregister(listener)
+    assert(notJobs <= 5, s"the NOT search submitted $notJobs jobs")
 
     // a fact table's scan must push an equality or IN on its key
     val keyOf = Map(
@@ -162,11 +168,11 @@ class ParquetNshmStoreSpec extends SparkSpec {
       "magnitude_frequency_distribution" -> "fault_id")
     object Nodes extends AdaptiveSparkPlanHelper
     val scanned = scala.collection.mutable.Set.empty[String]
-    val problems = plans.asScala.toSeq.flatMap { plan =>
-      val exchanges = Nodes.collect(plan) {
-        case e: Exchange => e.nodeName
-        case e: ReusedExchangeExec => e.nodeName
-      }
+    def exchanges(plan: SparkPlan) = Nodes.collect(plan) {
+      case e: Exchange => s"${e.nodeName} in\n$plan"
+      case e: ReusedExchangeExec => s"${e.nodeName} in\n$plan"
+    }
+    val problems = plans.asScala.toSeq.flatMap(exchanges) ++ lookupPlans.flatMap { plan =>
       val unkeyed = Nodes.collect(plan) { case s: FileSourceScanExec => s }.flatMap { s =>
         val table = s.relation.location.rootPaths.head.getName
         scanned += table
@@ -174,7 +180,7 @@ class ParquetNshmStoreSpec extends SparkSpec {
         keyOf.get(table).filterNot(k => s"\\b(EqualTo|In)\\($k,".r.findFirstIn(pushed).isDefined)
           .map(k => s"$table scanned without a pushed $k filter: $pushed")
       }
-      exchanges.map(e => s"$e in\n$plan") ++ unkeyed
+      exchanges(plan) ++ unkeyed
     }
     assert(keyOf.keySet.subsetOf(scanned), s"scanned only ${scanned.mkString(", ")}")
     assert(problems.isEmpty, problems.mkString("\n"))
